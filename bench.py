@@ -245,6 +245,8 @@ def bench_ingest(spark, timings: dict[str, float]) -> None:
     # does anyway).
     scan = scan.cache()
     routed = route_native(scan)
+    # the counters ride the first action over the channels
+    routed.non_ignored.write.format("noop").mode("overwrite").save()
     assert routed.counts()["totalRecordCount"] == n
     timings["ingest_csv_100k_native"] = round(time.time() - t0, 3)
     scan.unpersist()

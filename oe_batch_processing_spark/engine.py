@@ -4,10 +4,10 @@ lib/batchProcessing.js:130-435, SURVEY.md §3).
 Lifecycle (mirrors the reference's 15-stage spine, §3):
   validate inputs → default hooks → onStart → open BatchRun → scan (O1) →
   parse (O2/O4/O5) → route three-way (O7) → write success channel to sink →
-  write BatchStatus ledger (O11) → aggregate counts → close BatchRun (O12) →
-  onEnd — all in one driver function with try/finally closing the run ledger
-  even on failure (the reference's FATAL path updates BatchRun with the
-  error, lib/batchProcessing.js:535-585).
+  write BatchStatus ledger (O11), which also collects the run counts →
+  close BatchRun (O12) → onEnd — all in one driver function with
+  try/finally closing the run ledger even on failure (the reference's FATAL
+  path updates BatchRun with the error, lib/batchProcessing.js:535-585).
 
 What changed vs the reference, by design (SURVEY.md §7): records do not cross
 HTTP twice per row; parsing/validation runs distributed on executors and the
@@ -135,8 +135,13 @@ def run_ingest(spark: SparkSession, job: IngestJob) -> IngestResult:
         status_df = ledger.status_frame(
             routed.non_ignored, run.batch_run_id, job.config.batch_result_log_items
         )
+        # Every run reads the whole status channel exactly once, ledger or
+        # not: that action collects the counters' observation and, on the
+        # REST path, sends the requests.
         if job.ledger_dir:
             ledger.write_status(status_df, job.ledger_dir)
+        else:
+            status_df.write.format("noop").mode("overwrite").save()
 
         counts = routed.counts()
         ledger.finalize_run(run, counts)

@@ -750,30 +750,6 @@ def star_labels(pairs: DataFrame) -> DataFrame:
     # shuffle width — the plan shape is identical, only the knobs move.
     n_edges = pairs.count()  # fills the pairs cache
     small_graph = n_edges < _STAR_SMALL_EDGES
-    saved = {}
-    if small_graph:
-        for k, v in (("spark.sql.adaptive.enabled", "false"),
-                     ("spark.sql.shuffle.partitions", "1")):
-            saved[k] = spark.conf.get(k)
-            spark.conf.set(k, v)
-    edges_lazy = pairs.select(
-        F.col("doc_a").cast("long").alias("u"),
-        F.col("doc_b").cast("long").alias("v"),
-    )
-    if small_graph:
-        edges_lazy = edges_lazy.coalesce(1)
-    # localCheckpoint: TRUNCATE lineage, not just cache it (see the loop
-    # note below); the fill reads the just-materialized pairs cache.
-    edges = edges_lazy.localCheckpoint(eager=True)
-    # all_nodes stays LAZY (r15): it reads the edges checkpoint leaf and
-    # is consumed exactly once by the final left join — an eager
-    # checkpoint here was one more ~0.4 s driver action per invocation
-    # on an action-latency-bound small graph, for no reuse.
-    all_nodes = (
-        edges.select(F.col("u").alias("doc"))
-        .union(edges.select(F.col("v").alias("doc")))
-        .distinct()
-    )
 
     def _checksum(e: DataFrame):
         row = e.agg(
@@ -816,9 +792,36 @@ def star_labels(pairs: DataFrame) -> DataFrame:
             .localCheckpoint(eager=False)
         )
 
-    cur = edges
-    prev_sum = None
+    saved = {}
+    if small_graph:
+        for k, v in (("spark.sql.adaptive.enabled", "false"),
+                     ("spark.sql.shuffle.partitions", "1")):
+            saved[k] = spark.conf.get(k)
+            spark.conf.set(k, v)
+    # confs and the pairs cache are restored on every exit path, the eager
+    # edges checkpoint included
     try:
+        edges_lazy = pairs.select(
+            F.col("doc_a").cast("long").alias("u"),
+            F.col("doc_b").cast("long").alias("v"),
+        )
+        if small_graph:
+            edges_lazy = edges_lazy.coalesce(1)
+        # localCheckpoint: TRUNCATE lineage, not just cache it (see the
+        # note above); the fill reads the just-materialized pairs cache.
+        edges = edges_lazy.localCheckpoint(eager=True)
+        # all_nodes stays LAZY (r15): it reads the edges checkpoint leaf and
+        # is consumed exactly once by the final left join — an eager
+        # checkpoint here was one more ~0.4 s driver action per invocation
+        # on an action-latency-bound small graph, for no reuse.
+        all_nodes = (
+            edges.select(F.col("u").alias("doc"))
+            .union(edges.select(F.col("v").alias("doc")))
+            .distinct()
+        )
+
+        cur = edges
+        prev_sum = None
         for _round in range(20):  # log^2 bound; settles in ~3
             cur = _one_round(cur)
             new_sum = _checksum(cur)
@@ -831,8 +834,8 @@ def star_labels(pairs: DataFrame) -> DataFrame:
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
-    if owns_cache:
-        pairs.unpersist()
+        if owns_cache:
+            pairs.unpersist()
     return all_nodes.join(labels, "doc", "left").select(
         "doc", F.coalesce(F.col("lbl"), F.col("doc")).alias("lbl")
     )

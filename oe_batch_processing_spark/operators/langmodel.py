@@ -670,8 +670,10 @@ def _bpe_driver_merges(
 def _bpe_train_vocab(
     spark: SparkSession, sf_dir: str, k: int = _BPE_K
 ) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
-    """Run the K-round BPE training loop; return (merge rules, persisted
-    final vocab frame (word, freq, s)). The caller owns the persist.
+    """Run the K-round BPE training loop; return (merge rules, final vocab
+    frame (word, freq, s)). The distributed path returns a persisted frame
+    the caller owns; the driver path returns an unpersisted local relation
+    (the caller's unpersist is a no-op there).
 
     Size-adaptive execution (r17, the ``_cc_labels_adaptive`` recipe): the
     loop's input is the VOCABULARY table — Zipf-bounded, orders of

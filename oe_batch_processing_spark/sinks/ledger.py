@@ -16,9 +16,9 @@ logging unless allow-listed via ``batchResultLogItems``
 (lib/batchProcessing.js:366-371,681-686) — here that's a column selection on
 the status frame (``batch_result_log_items`` keeps extra columns).
 
-At scale both ledgers are plain append-only parquet writes partitioned by
-run id — no shuffle; BatchRun stats are one ``groupBy().agg()`` over the
-status channel (the only aggregation in the reference, SURVEY.md O12).
+At scale both ledgers are plain append-only parquet writes — no shuffle. The
+BatchRun counts (the only aggregation in the reference, SURVEY.md O12) are
+observed while the status channel is written (``outcome.RoutedRecords``).
 """
 
 from __future__ import annotations
@@ -31,6 +31,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from oe_batch_processing_spark.sources.outcome import SUCCESS
 
 
 @dataclass
@@ -63,10 +65,7 @@ def status_frame(
         # REST path: real HTTP status codes already present
         status_code = F.col("statusCode").cast("int")
     else:
-        status_code = (
-            F.when(F.col("statusText") == "SUCCESS", F.lit(200))
-            .otherwise(F.lit(422))
-        )
+        status_code = F.when(F.col("statusText") == SUCCESS, F.lit(200)).otherwise(F.lit(422))
     return routed_non_ignored.select(
         F.struct(
             F.col("fileName").alias("fileName"),

@@ -59,6 +59,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from oe_batch_processing_spark.sources.outcome import FAILED, FATAL, SUCCESS
+
 # transport(url, method, headers, body_json) -> (status_code, error_or_None)
 Transport = Callable[[str, str, dict, str | None], tuple[int, str | None]]
 
@@ -141,7 +143,7 @@ def _send_one(row: dict, opts: RestSinkOptions, transport: Transport, bucket: To
     headers = {**opts.headers, **payload.pop("headers", {})}
     if not model_api:
         # missing modelAPI is the reference's FATAL example (:633-643)
-        return "FATAL", 0, "modelAPI not specified in payload or options"
+        return FATAL, 0, "modelAPI not specified in payload or options"
     url = opts.app_base_url.rstrip("/") + "/" + model_api.lstrip("/")
     if opts.access_token:
         url += ("&" if "?" in url else "?") + "access_token=" + opts.access_token
@@ -150,7 +152,7 @@ def _send_one(row: dict, opts: RestSinkOptions, transport: Transport, bucket: To
     code, err = _call_with_expiration(
         transport, (url, method, headers, body), opts.expiration_s
     )
-    status = "SUCCESS" if code == 200 and err is None else "FAILED"
+    status = SUCCESS if code == 200 and err is None else FAILED
     return status, code, err
 
 

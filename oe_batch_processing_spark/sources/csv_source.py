@@ -23,9 +23,7 @@ the analog of the reference's FATAL kill switch for configuration problems
 
 from __future__ import annotations
 
-import json
 import math
-from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,12 +36,7 @@ from pyspark.sql.types import (
 )
 
 from oe_batch_processing_spark.functions.coercion import coerce_field, js_number
-
-PARSE_RESULT_EXTRA = [
-    StructField("parsed_json", StringType(), True),
-    StructField("error", StringType(), True),
-    StructField("statusText", StringType(), False),
-]
+from oe_batch_processing_spark.sources.outcome import parse_records
 
 
 class CsvConfigError(ValueError):
@@ -196,38 +189,15 @@ def parse_record(rec: str, opts: CsvOptions) -> tuple[dict, str | None]:
     return out, None
 
 
-def result_schema(base: StructType) -> StructType:
-    return StructType(list(base.fields) + list(PARSE_RESULT_EXTRA))
-
-
 def csv_parse(recdata: DataFrame, opts: CsvOptions) -> DataFrame:
     """Fidelity CSV parse of a recData frame (fileName, rec, recId).
 
     Output adds ``parsed_json`` (JSON text of the typed record — partial on
-    failure), ``error``, ``statusText`` (SUCCESS | FAILED). Runs as
-    mapInPandas: Arrow batches in, no shuffle, scales linearly with input
-    partitions.
+    failure), ``error``, ``statusText`` (SUCCESS | FAILED); see
+    :func:`outcome.parse_records`.
     """
     opts.resolve()
-    schema = result_schema(recdata.schema)
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            parsed, errors, status = [], [], []
-            for rec in pdf["rec"].astype(str):
-                j, err = parse_record(rec, opts)
-                parsed.append(json.dumps(j))
-                errors.append(err)
-                status.append("SUCCESS" if err is None else "FAILED")
-            out = pdf.copy()
-            out["parsed_json"] = parsed
-            out["error"] = pd.array(errors, dtype="object")
-            out["statusText"] = status
-            yield out
-
-    return recdata.mapInPandas(run, schema=schema)
+    return parse_records(recdata, lambda rec: parse_record(rec, opts))
 
 
 _SPARK_TYPES = {"string": StringType(), "number": DoubleType(), "boolean": BooleanType()}

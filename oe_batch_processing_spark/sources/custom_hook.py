@@ -1,30 +1,25 @@
 """Custom per-record parser hook (reference O5).
 
-The reference requires a client-supplied ``onEachRecord(recData, cb)`` with a
-three-way result contract (README.md:63-84, lib/batchProcessing.js:601-629):
-  - ``(payload, None)``  => SUCCESS
-  - ``(anything, err)``  => FAILED (logged, processing continues)
-  - ``(None, None)``     => IGNORED (silently skipped, not logged, not counted)
-
-Spark equivalent: a plain Python callable applied via Arrow-batched
-``mapInPandas``. The callable receives a dict ``{fileName, rec, recId}`` and
-returns ``(payload_dict | None, error_str | None)``. Exceptions raised by the
-hook mark the record FAILED with the exception text — the reference's
-throw-inside-onEachRecord path is FATAL (lib/batchProcessing.js:710-716);
-callers wanting that behavior pass ``fatal_on_exception=True`` which re-raises
-and aborts the Spark job (task failure => job abort, the kill-switch analog).
+The reference requires a client-supplied ``onEachRecord(recData, cb)``
+(README.md:63-84). Here it is a plain Python callable: it receives a dict
+``{fileName, rec, recId}`` and returns ``(payload_dict | None, error_str |
+None)``, which :func:`outcome.parse_records` maps to SUCCESS / FAILED /
+IGNORED. Exceptions raised by the hook mark the record FAILED with the
+exception text — the reference's throw-inside-onEachRecord path is FATAL
+(lib/batchProcessing.js:710-716); callers wanting that behavior pass
+``fatal_on_exception=True`` which re-raises and aborts the Spark job (task
+failure => job abort, the kill-switch analog).
 """
 
 from __future__ import annotations
 
-import json
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
-from oe_batch_processing_spark.sources.csv_source import result_schema
+from oe_batch_processing_spark.sources.outcome import ParseResult, parse_records
 
-ParserHook = Callable[[dict], tuple[dict | None, str | None]]
+ParserHook = Callable[[dict], ParseResult]
 
 
 def custom_parse(
@@ -35,44 +30,15 @@ def custom_parse(
     """Apply a user parser hook to a recData frame (fileName, rec, recId).
 
     Output adds ``parsed_json`` / ``error`` / ``statusText`` where statusText
-    is SUCCESS, FAILED, or IGNORED (three-way contract above).
+    is SUCCESS, FAILED, or IGNORED (the contract in :mod:`outcome`).
     """
-    schema = result_schema(recdata.schema)
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def parse_one(file_name, rec, rec_id) -> ParseResult:
+        try:
+            return on_each_record({"fileName": file_name, "rec": rec, "recId": rec_id})
+        except Exception as e:  # noqa: BLE001
+            if fatal_on_exception:
+                raise
+            return None, f"onEachRecord raised: {e}"
 
-        for pdf in batches:
-            parsed, errors, status = [], [], []
-            for row in pdf.to_dict("records"):
-                try:
-                    payload, err = on_each_record(
-                        {
-                            "fileName": row.get("fileName"),
-                            "rec": row.get("rec"),
-                            "recId": row.get("recId"),
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    if fatal_on_exception:
-                        raise
-                    payload, err = None, f"onEachRecord raised: {e}"
-                if err is not None:
-                    parsed.append(json.dumps(payload) if payload else "{}")
-                    errors.append(str(err))
-                    status.append("FAILED")
-                elif payload is None:
-                    parsed.append("{}")
-                    errors.append(None)
-                    status.append("IGNORED")
-                else:
-                    parsed.append(json.dumps(payload))
-                    errors.append(None)
-                    status.append("SUCCESS")
-            out = pdf.copy()
-            out["parsed_json"] = parsed
-            out["error"] = pd.array(errors, dtype="object")
-            out["statusText"] = status
-            yield out
-
-    return recdata.mapInPandas(run, schema=schema)
+    return parse_records(recdata, parse_one, ("fileName", "rec", "recId"))

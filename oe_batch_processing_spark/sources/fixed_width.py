@@ -18,15 +18,13 @@ Two paths, as with CSV:
 
 from __future__ import annotations
 
-import json
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from oe_batch_processing_spark.functions.coercion import coerce_field
-from oe_batch_processing_spark.sources.csv_source import result_schema
+from oe_batch_processing_spark.sources.outcome import parse_records
 
 
 class FwConfigError(ValueError):
@@ -99,25 +97,7 @@ def fw_parse(recdata: DataFrame, layout: list[dict] | list[FwField]) -> DataFram
     Adds ``parsed_json`` / ``error`` / ``statusText`` like csv_parse.
     """
     spec = validate_layout(layout)
-    schema = result_schema(recdata.schema)
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            parsed, errors, status = [], [], []
-            for rec in pdf["rec"].astype(str):
-                j, err = parse_record(rec, spec)
-                parsed.append(json.dumps(j))
-                errors.append(err)
-                status.append("SUCCESS" if err is None else "FAILED")
-            out = pdf.copy()
-            out["parsed_json"] = parsed
-            out["error"] = pd.array(errors, dtype="object")
-            out["statusText"] = status
-            yield out
-
-    return recdata.mapInPandas(run, schema=schema)
+    return parse_records(recdata, lambda rec: parse_record(rec, spec))
 
 
 _NATIVE_CAST = {"string": "string", "number": "double", "boolean": "boolean"}

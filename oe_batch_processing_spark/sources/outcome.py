@@ -1,121 +1,144 @@
-"""Three-way record-outcome router (reference O7, SURVEY.md §2.3.1).
+"""The record-outcome contract of ingest (reference O7/O12, SURVEY.md §2.3.1).
 
-Every parsed frame carries ``statusText`` in {SUCCESS, FAILED, IGNORED}.
-The router splits it into the success channel (flows to the sink), the error
-channel (flows to the BatchStatus ledger), and the ignore channel (a plain
-filter — never logged, never counted, reference lib/batchProcessing.js:626-629).
+Every parser maps one record to ``(payload, error)``; :func:`parse_records`
+turns that into ``parsed_json`` / ``error`` / ``statusText`` following the
+custom-hook contract (README.md:63-84, lib/batchProcessing.js:601-629):
 
-Counter semantics preserved: ``totalRecordCount`` counts only non-ignored
-records (lib/batchProcessing.js:623,696).
+  - ``(payload, None)``  => SUCCESS, the payload as JSON
+  - ``(partial, error)`` => FAILED, the partial payload as JSON (``{}`` if none)
+  - ``(None, None)``     => IGNORED, ``{}``
 
-These are DataFrame filters — Catalyst pushes them into the parse output and
-both channels share the one upstream scan+parse (no double read when the plan
-is materialized once via persist, or written with a single pass per channel).
+:func:`route` splits a frame with ``statusText`` into the success channel
+(flows to the sink) and the failed channel (flows to the BatchStatus ledger);
+IGNORED records are filtered out — never logged, never counted
+(lib/batchProcessing.js:626-629). ``totalRecordCount`` counts only
+non-ignored records (lib/batchProcessing.js:623,696).
+
+The run counters ride the first action over the channels — the sink or
+status write — as an ``Observation`` (accumulator-backed query metrics), so
+counting adds no Spark job. The channels are DataFrame filters sharing the
+one upstream scan+parse.
 """
 
 from __future__ import annotations
 
+import json
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 SUCCESS = "SUCCESS"
 FAILED = "FAILED"
 IGNORED = "IGNORED"
 FATAL = "FATAL"
 
+PARSE_RESULT_EXTRA = [
+    StructField("parsed_json", StringType(), True),
+    StructField("error", StringType(), True),
+    StructField("statusText", StringType(), False),
+]
+
+ParseResult = tuple[dict | None, str | None]
+
+
+def result_schema(base: StructType) -> StructType:
+    return StructType(list(base.fields) + list(PARSE_RESULT_EXTRA))
+
+
+def parse_records(
+    recdata: DataFrame,
+    parse_one: Callable[..., ParseResult],
+    fields: tuple[str, ...] = ("rec",),
+) -> DataFrame:
+    """Apply ``parse_one`` to every record of a recData frame (fileName, rec,
+    recId) and add ``parsed_json`` / ``error`` / ``statusText``.
+
+    ``parse_one`` receives the values of ``fields`` for one record and
+    returns ``(payload, error)``, mapped per the contract above. Runs as an
+    Arrow-batched ``mapInPandas``: no shuffle, linear in input partitions.
+    """
+    schema = result_schema(recdata.schema)
+
+    def run(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        for pdf in batches:
+            parsed, errors, status = [], [], []
+            for values in zip(*(pdf[f] for f in fields)):
+                payload, err = parse_one(*values)
+                if err is not None:
+                    parsed.append(json.dumps(payload) if payload else "{}")
+                    errors.append(str(err))
+                    status.append(FAILED)
+                elif payload is None:
+                    parsed.append("{}")
+                    errors.append(None)
+                    status.append(IGNORED)
+                else:
+                    parsed.append(json.dumps(payload))
+                    errors.append(None)
+                    status.append(SUCCESS)
+            out = pdf.copy()
+            out["parsed_json"] = parsed
+            out["error"] = pd.array(errors, dtype="object")
+            out["statusText"] = status
+            yield out
+
+    return recdata.mapInPandas(run, schema=schema)
+
 
 @dataclass
 class RoutedRecords:
     success: DataFrame
     failed: DataFrame
-    non_ignored: DataFrame  # success + failed (= what the ledgers count)
+    non_ignored: DataFrame  # every record the ledgers log and count
+    observation: Observation  # the run counters, attached to non_ignored
 
     def counts(self) -> dict[str, int]:
-        """total/success/failure counts in one aggregation pass (the
-        reference's only aggregation, O12)."""
-        row = (
-            self.non_ignored.groupBy()
-            .agg(
-                F.count(F.lit(1)).alias("total"),
-                F.sum(F.when(F.col("statusText") == SUCCESS, 1).otherwise(0)).alias(
-                    "success"
-                ),
-                F.sum(F.when(F.col("statusText") == FAILED, 1).otherwise(0)).alias(
-                    "failure"
-                ),
-            )
-            .collect()[0]
-        )
+        """The BatchRun counters (reference O12), read from the observation
+        on ``non_ignored`` — no Spark job of its own.
+
+        Precondition: an action over ``non_ignored`` or one of the channels
+        has run, and that first action read all of it. The observation keeps
+        only the first action's metrics, so a ``limit`` or ``take`` first
+        would record partial counts; with no action yet this call blocks."""
+        got = self.observation.get
         return {
-            "totalRecordCount": row["total"],
-            "successCount": row["success"] or 0,
-            "failureCount": row["failure"] or 0,
+            "totalRecordCount": got["total"],
+            "successCount": got["success"],
+            "failureCount": got["failure"],
         }
 
 
 def route(parsed: DataFrame) -> RoutedRecords:
-    """Split a parsed frame (with statusText) into its outcome channels."""
-    non_ignored = parsed.filter(F.col("statusText") != IGNORED)
+    """Split a frame with ``statusText`` into its outcome channels, with the
+    run counters observed on the non-ignored channel. The observation is
+    unnamed (a fresh metric name per call), so a plan that routes a union
+    of an earlier route's channels again stays valid."""
+    status = F.col("statusText")
+    obs = Observation()
+    non_ignored = parsed.filter(status != IGNORED).observe(
+        obs,
+        F.count(F.lit(1)).alias("total"),
+        F.count_if(status == SUCCESS).alias("success"),
+        F.count_if(status == FAILED).alias("failure"),
+    )
     return RoutedRecords(
-        success=non_ignored.filter(F.col("statusText") == SUCCESS),
-        failed=non_ignored.filter(F.col("statusText") == FAILED),
+        success=non_ignored.filter(status == SUCCESS),
+        failed=non_ignored.filter(status == FAILED),
         non_ignored=non_ignored,
+        observation=obs,
     )
 
 
 def route_native(scanned: DataFrame, corrupt_col: str = "_corrupt_record") -> RoutedRecords:
     """Router for the native CSV scan path: corrupt-record column NULL =>
     SUCCESS, non-NULL => FAILED (with the raw line as the error payload)."""
+    corrupt = F.col(corrupt_col)
     parsed = scanned.withColumn(
-        "statusText",
-        F.when(F.col(corrupt_col).isNull(), F.lit(SUCCESS)).otherwise(F.lit(FAILED)),
-    ).withColumn(
-        "error",
-        F.when(F.col(corrupt_col).isNotNull(), F.lit("Malformed CSV record")),
-    )
+        "statusText", F.when(corrupt.isNull(), F.lit(SUCCESS)).otherwise(F.lit(FAILED))
+    ).withColumn("error", F.when(corrupt.isNotNull(), F.lit("Malformed CSV record")))
     return route(parsed)
-
-
-def route_observed(parsed: DataFrame):
-    """Like :func:`route`, but the run counters ride along as an
-    ``Observation`` (Spark's accumulator-backed query metrics): the
-    total/success/failure counts materialize as a side effect of whatever
-    action consumes the channels — e.g. the sink write — instead of the
-    separate aggregation pass ``RoutedRecords.counts()`` runs. At scale
-    that second pass re-reads the whole parse output; this is free.
-
-    Returns ``(RoutedRecords, Observation)``; read the dict with
-    :func:`observed_counts` AFTER an action has run over a channel.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation("outcome_counts")
-    non_ignored = parsed.filter(F.col("statusText") != IGNORED).observe(
-        obs,
-        F.count(F.lit(1)).alias("total"),
-        F.sum(F.when(F.col("statusText") == SUCCESS, 1).otherwise(0)).alias(
-            "success"
-        ),
-        F.sum(F.when(F.col("statusText") == FAILED, 1).otherwise(0)).alias(
-            "failure"
-        ),
-    )
-    routed = RoutedRecords(
-        success=non_ignored.filter(F.col("statusText") == SUCCESS),
-        failed=non_ignored.filter(F.col("statusText") == FAILED),
-        non_ignored=non_ignored,
-    )
-    return routed, obs
-
-
-def observed_counts(obs) -> dict[str, int]:
-    """BatchRun-shaped counters from a fired Observation (same keys as
-    ``RoutedRecords.counts()``, reference O12 semantics)."""
-    got = obs.get
-    return {
-        "totalRecordCount": got["total"],
-        "successCount": got["success"] or 0,
-        "failureCount": got["failure"] or 0,
-    }

@@ -158,10 +158,12 @@ def test_cdc_latest_state_uses_window_group_limit(spark):
     assert "WindowGroupLimit" in formatted_plan(df)
 
 
-def test_route_observed_counts_match_aggregation_pass(spark, tmp_path):
-    """The Observation-backed counters (zero extra pass — they fire as a
-    side effect of the sink write) must equal the classic counts()
-    aggregation, including the IGNORED exclusion (reference O12/O7)."""
+def test_route_counts_ride_the_first_write(spark, tmp_path):
+    """The run counters are observed on the non-ignored channel: writing
+    only the success channel still counts every FAILED row (Catalyst keeps
+    the SUCCESS filter above CollectMetrics) and never the IGNORED ones
+    (reference O12/O7). A second route over a union of the first route's
+    channels (the REST path's shape) keeps both observations valid."""
     from pyspark.sql import functions as F
 
     from oe_batch_processing_spark.sources import outcome
@@ -173,16 +175,22 @@ def test_route_observed_counts_match_aggregation_pass(spark, tmp_path):
         .otherwise(outcome.SUCCESS)
         .alias("statusText"),
     )
-    routed, obs = outcome.route_observed(parsed)
-    # the sink write is the only action — counters fire as its side effect
-    routed.non_ignored.write.mode("overwrite").parquet(
-        str(tmp_path / "sink.parquet")
+    routed = outcome.route(parsed)
+    routed.success.write.mode("overwrite").parquet(str(tmp_path / "sink"))
+    expected = {"totalRecordCount": 90, "successCount": 60, "failureCount": 30}
+    assert routed.counts() == expected
+
+    first = outcome.route(parsed)
+    stacked = outcome.route(
+        first.success.withColumn("statusText", F.lit(outcome.FAILED)).unionByName(
+            first.failed
+        )
     )
-    got = outcome.observed_counts(obs)
-    assert got == outcome.route(parsed).counts()
-    assert got["totalRecordCount"] == 90  # IGNORED rows never counted
-    assert got["successCount"] == 60
-    assert got["failureCount"] == 30
+    stacked.non_ignored.write.format("noop").mode("overwrite").save()
+    assert first.counts() == expected
+    assert stacked.counts() == {
+        "totalRecordCount": 90, "successCount": 0, "failureCount": 90,
+    }
 
 
 def test_bucketized_range_join_has_no_nested_loop(spark):

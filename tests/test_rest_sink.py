@@ -185,6 +185,46 @@ def test_full_ingest_lifecycle_through_rest_sink(spark, tmp_path):
         server.shutdown()
 
 
+def test_ingest_through_rest_sink_without_ledger(spark, tmp_path):
+    """With no ledger to write, the run still reads its status channel
+    once: every parsed record POSTs exactly once and the counts come from
+    that same pass."""
+    from oe_batch_processing_spark.engine import IngestJob, run_ingest
+    from oe_batch_processing_spark.sources.csv_source import CsvOptions
+
+    src = tmp_path / "batch.csv"
+    lines = [f"K{i:03d},V{i:03d}" for i in range(1, 16)] + ["only_one_field"]
+    src.write_text("\n".join(lines) + "\n")
+
+    _CountingHandler.received = []
+    server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _CountingHandler)
+    port = server.server_address[1]
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    try:
+        res = run_ingest(
+            spark,
+            IngestJob(
+                file_path=str(src),
+                parser="csv",
+                csv_options=CsvOptions(csv_headers="key, value"),
+                rest_options=RestSinkOptions(
+                    app_base_url=f"http://127.0.0.1:{port}/api",
+                    model_api="TestData",
+                    min_time_ms=0,
+                ),
+            ),
+        )
+        assert res.counts == {
+            "totalRecordCount": 16,
+            "successCount": 15,
+            "failureCount": 1,
+        }
+        keys = sorted(json.loads(body)["key"] for _, body in _CountingHandler.received)
+        assert keys == [f"K{i:03d}" for i in range(1, 16)]
+    finally:
+        server.shutdown()
+
+
 def test_auth_token_precedence(monkeypatch):
     from oe_batch_processing_spark.sinks.auth import AuthError, get_access_token
 

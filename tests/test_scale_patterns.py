@@ -406,6 +406,28 @@ def test_ann_fixed_qps_hook_engages_and_restores(spark, sf_dir):
     assert again == base  # restored: identical plan again
 
 
+def test_star_labels_restores_session_when_edges_checkpoint_fails(spark, monkeypatch):
+    """The small-graph path turns AQE off and narrows the shuffle before its
+    eager edges checkpoint; a failure there must leave both confs and the
+    pairs cache as they were."""
+    import pytest
+
+    from oe_batch_processing_spark.operators.graph import star_labels
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k) for k in keys}
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long")
+
+    def failing_checkpoint(self, eager=True, storageLevel=None):
+        raise RuntimeError("injected checkpoint failure")
+
+    monkeypatch.setattr(type(pairs), "localCheckpoint", failing_checkpoint)
+    with pytest.raises(RuntimeError, match="injected checkpoint failure"):
+        star_labels(pairs)
+    assert {k: spark.conf.get(k) for k in keys} == before
+    assert not pairs.storageLevel.useMemory
+
+
 def test_lloyd_train_mod_scales_with_cell_count():
     """Round-13: the FIXED ~2000-point training sample starved the
     sqrt-scaled cell count at scale — 834 init cells at 30x got ~2.4
