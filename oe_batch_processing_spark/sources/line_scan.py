@@ -6,10 +6,15 @@ The reference streams a file line-by-line and emits
 line numbering.
 
 Two modes:
-  - **exact** (default): per-file ``zipWithIndex`` — deterministic 1-based,
-    contiguous line numbers identical to the reference. Costs one extra pass
-    per file (zipWithIndex's partition-count job); fine for ingestion runs
-    which are one-file-at-a-time in the reference model.
+  - **exact** (default): deterministic 1-based, contiguous line numbers
+    identical to the reference, computed in the JVM. ``recId`` is the
+    partition's start line plus the row's offset within its partition
+    (both read off ``monotonically_increasing_id``); the start lines are a
+    prefix sum of per-partition line counts from one JVM count job per
+    multi-partition file. A one-partition file starts at line 1 and needs no
+    count job. No line crosses into Python. The counts are taken when
+    ``line_scan`` is called, so the file and the split settings
+    (``spark.sql.files.*``) must not change before the frame runs.
   - **fast**: ``monotonically_increasing_id`` — unique and increasing within
     each partition but non-contiguous. The right trade at 100 TB when the
     ledger only needs a stable record id, not the literal line number.
@@ -20,6 +25,8 @@ Spark's text reader splits on ``\n`` leaving a trailing ``\r``, which we strip
 """
 
 from __future__ import annotations
+
+from itertools import accumulate
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,9 +63,27 @@ def line_scan(
     )
 
 
+# monotonically_increasing_id() = partition index << 33 | row offset in partition
+_ROW_BITS = 33
+
+
 def _scan_one_exact(spark: SparkSession, path: str) -> DataFrame:
+    # The numbering projects directly over this file's own scan, so the id's
+    # partition index is the scan partition the count job grouped by.
     lines = spark.read.text(path)
-    indexed = lines.rdd.map(lambda r: r.value).zipWithIndex().map(
-        lambda t: (path, t[0].rstrip("\r"), t[1] + 1)
-    )
-    return spark.createDataFrame(indexed, RECDATA_SCHEMA)
+    row_id = F.col("id")
+    if lines.rdd.getNumPartitions() <= 1:
+        rec_id = row_id + 1
+    else:
+        counts = dict(lines.groupBy(F.spark_partition_id()).count().collect())
+        # a partition holding no line start is absent from counts: width 0
+        widths = [counts.get(p, 0) for p in range(max(counts, default=0))]
+        starts = F.lit(list(accumulate(widths, initial=0)))
+        start = starts[F.shiftright(row_id, _ROW_BITS)]
+        offset = row_id.bitwiseAND(F.lit((1 << _ROW_BITS) - 1))
+        rec_id = F.coalesce(start, F.lit(0)) + offset + 1
+    return lines.select(
+        F.lit(path).alias("fileName"),
+        F.expr(r"TRIM(TRAILING '\r' FROM value)").alias("rec"),
+        F.monotonically_increasing_id().alias("id"),
+    ).select("fileName", "rec", rec_id.alias("recId"))

@@ -5,6 +5,7 @@ boolean strictness, ignore path, ledger invariants)."""
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
 
 import pytest
 
@@ -17,6 +18,7 @@ from oe_batch_processing_spark.sources.csv_source import (
 )
 from oe_batch_processing_spark.sources.fixed_width import FwConfigError, validate_layout
 from oe_batch_processing_spark.sinks.ledger import read_runs, read_status
+from oe_batch_processing_spark.sources.line_scan import RECDATA_SCHEMA, line_scan
 
 
 # --- pure-Python fidelity units -------------------------------------------
@@ -261,6 +263,119 @@ def test_fatal_records_run_error(spark, tmp_path):
     runs = read_runs(spark, job.ledger_dir).collect()
     assert len(runs) == 1
     assert "header" in runs[0]["error"]
+
+
+# --- exact line numbering across scan partitions ----------------------------
+
+@contextmanager
+def small_splits(spark, size="4k"):
+    """Split every text file into ``size``-byte scan partitions."""
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, size)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+def _expected_lines(data: bytes) -> list[str]:
+    text = data.decode()
+    lines = text.split("\n")
+    if text.endswith("\n"):
+        lines.pop()
+    return [line.rstrip("\r") for line in lines]
+
+
+def test_line_scan_exact_numbers_lines_across_partitions(spark, tmp_path):
+    files = {}
+    for name, eol in (("lf.txt", "\n"), ("crlf.txt", "\r\n")):
+        lines = ["" if i % 97 == 0 else f"line {i} é✓ " + "x" * (i % 41) for i in range(1, 1201)]
+        data = eol.join(lines).encode()  # no final newline
+        (tmp_path / name).write_bytes(data)
+        files[str(tmp_path / name)] = data
+    empty = tmp_path / "empty.txt"
+    empty.write_bytes(b"")
+
+    with small_splits(spark):
+        for path in files:
+            assert spark.read.text(path).rdd.getNumPartitions() >= 3
+        df = line_scan(spark, list(files))
+        assert df.schema == RECDATA_SCHEMA
+        rows = df.collect()
+        assert line_scan(spark, str(empty)).count() == 0
+    for path, data in files.items():
+        got = sorted((r.recId, r.rec) for r in rows if r.fileName == path)
+        expected = _expected_lines(data)
+        assert [i for i, _ in got] == list(range(1, len(expected) + 1))
+        assert [rec for _, rec in got] == expected
+    assert len(rows) == sum(len(_expected_lines(d)) for d in files.values())
+
+
+def test_line_scan_exact_runs_in_jvm(spark, tmp_path):
+    """Exact numbering plans as a text FileScan with no Python RDD, and a
+    one-partition file is numbered without running a Spark job."""
+    small = tmp_path / "small.txt"
+    small.write_bytes(b"a\r\nb\n\nc")
+    big = tmp_path / "big.txt"
+    big.write_bytes(b"".join(b"row %d\n" % i for i in range(4000)))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("line-scan-one-partition", "line_scan on one partition")
+        df = line_scan(spark, str(small))
+        assert tracker.getJobIdsForGroup("line-scan-one-partition") == []
+        with small_splits(spark):
+            sc.setJobGroup("line-scan-split", "line_scan on a split file")
+            split_df = line_scan(spark, str(big))
+            assert tracker.getJobIdsForGroup("line-scan-split") != []
+            plan = split_df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert [(r.rec, r.recId) for r in df.orderBy("recId").collect()] == [
+        ("a", 1), ("b", 2), ("", 3), ("c", 4)
+    ]
+    assert "FileScan text" in plan
+    assert "Scan ExistingRDD" not in plan
+    assert "PythonRDD" not in plan
+
+
+def test_ledger_failed_rec_ids_across_partitions(spark, tmp_path):
+    """FAILED BatchStatus rows carry the file's own line numbers when the CSV
+    is read as several scan partitions."""
+    bad_at = {1, 613, 1337, 2048, 3000}
+    lines = [
+        f"K{i:05d},V{i},extra" if i in bad_at else f"K{i:05d},V{i}"
+        for i in range(1, 3001)
+    ]
+    p = tmp_path / "split.csv"
+    p.write_bytes(("\r\n".join(lines) + "\r\n").encode())
+    job = IngestJob(
+        file_path=str(p),
+        parser="csv",
+        csv_options=CsvOptions(csv_headers="key, value"),
+        ledger_dir=str(tmp_path / "ledger"),
+    )
+    with small_splits(spark):
+        assert spark.read.text(str(p)).rdd.getNumPartitions() >= 3
+        res = run_ingest(spark, job)
+    assert res.counts == {
+        "totalRecordCount": 3000,
+        "successCount": 3000 - len(bad_at),
+        "failureCount": len(bad_at),
+    }
+    failed = (
+        read_status(spark, job.ledger_dir)
+        .where("statusText = 'FAILED'")
+        .select("fileRecordData.recId", "fileRecordData.rec")
+        .collect()
+    )
+    assert {r.recId for r in failed} == bad_at
+    assert all(r.rec == lines[r.recId - 1] for r in failed)
 
 
 def test_json_lines_source_roundtrip(spark, tmp_path):

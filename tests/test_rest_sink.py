@@ -111,11 +111,18 @@ class _CountingHandler(http.server.BaseHTTPRequestHandler):
         pass
 
 
+class _Server(http.server.ThreadingHTTPServer):
+    # The sink opens up to max_concurrent connections at once; the default
+    # listen backlog of 5 lets a burst of 20 occasionally see a connection
+    # reset, which the sink rightly reports as a FAILED record.
+    request_queue_size = 128
+
+
 def test_rest_write_live_http_server_with_throttle(spark):
     """End-to-end against a real HTTP server via the default urllib
     transport, single rate domain, 10ms spacing => >= ~0.3s for 30 recs."""
     _CountingHandler.received = []
-    server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _CountingHandler)
+    server = _Server(("127.0.0.1", 0), _CountingHandler)
     port = server.server_address[1]
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()
@@ -154,7 +161,7 @@ def test_full_ingest_lifecycle_through_rest_sink(spark, tmp_path):
     src.write_text("\r\n".join(lines) + "\r\n")
 
     _CountingHandler.received = []
-    server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _CountingHandler)
+    server = _Server(("127.0.0.1", 0), _CountingHandler)
     port = server.server_address[1]
     threading.Thread(target=server.serve_forever, daemon=True).start()
     try:
@@ -197,7 +204,7 @@ def test_ingest_through_rest_sink_without_ledger(spark, tmp_path):
     src.write_text("\n".join(lines) + "\n")
 
     _CountingHandler.received = []
-    server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _CountingHandler)
+    server = _Server(("127.0.0.1", 0), _CountingHandler)
     port = server.server_address[1]
     threading.Thread(target=server.serve_forever, daemon=True).start()
     try:
