@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oe_batch_processing_spark.registry import query
+from oe_batch_processing_spark.session import conf_overrides
 from oe_batch_processing_spark.tables import load_table, persist_once
 
 # --- shared shingling ------------------------------------------------------
@@ -914,6 +915,10 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CC_SMALL_EDGES = 100_000  # below this, the loop runs 1-partition/no-AQE
+SMALL_GRAPH_CONFS = {  # the small-graph mode of cc_labels and star_labels
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "1",
+}
 _CC_PLAIN_PERSIST_ROUNDS = 6  # small-graph rounds that may keep plain
 # persists before falling back to lineage-truncating checkpoints
 # (4^6 ≈ 4k logical-plan nodes — far below the canonicalization cliff)
@@ -929,8 +934,8 @@ def cc_labels(pairs: DataFrame) -> DataFrame:
     Size-adaptive execution (the star-CC recipe, graph.py): a SMALL
     materialized edge set pays more in per-round AQE re-planning and
     32-way shuffles than in actual work, so below _CC_SMALL_EDGES the
-    loop drops to one partition with AQE off (session confs restored in
-    the finally). A large edge set — the 10x/30x probes' 0.25M/2.4M-pair
+    loop drops to one partition with AQE off (``SMALL_GRAPH_CONFS``,
+    scoped by ``conf_overrides``). A large edge set — the 10x/30x probes' 0.25M/2.4M-pair
     graphs and any real corpus — keeps AQE and the full shuffle width;
     the plan shape is identical, only the knobs move.
 
@@ -951,12 +956,6 @@ def cc_labels(pairs: DataFrame) -> DataFrame:
     # that pipeline ~3 s at sf0.1 and its clusters consumer paid ~6 s).
     # The edge count is 2x the pair count — no second action needed.
     pairs = persist_once(pairs)
-    n_edges = 2 * pairs.count()
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    )
-    small_graph = n_edges < _CC_SMALL_EDGES
-    saved: dict[str, str] = {}
     pinned: list[DataFrame] = []  # plain persists to release before return
 
     def _pin(df: DataFrame, rnd: int) -> DataFrame:
@@ -973,67 +972,66 @@ def cc_labels(pairs: DataFrame) -> DataFrame:
         return df.localCheckpoint(eager=False)
 
     try:
-        # Conf mutation and the eager edges checkpoint both live INSIDE
-        # the try: the checkpoint runs a real distributed job, and a
-        # failure there must still restore the session confs in finally.
-        # Both checkpoint branches read the materialized pairs cache
-        # (each union branch a cache scan), never rebuild the upstream
-        # pipeline; the pairs cache is released right after.
-        if small_graph:
-            for k, v in (("spark.sql.adaptive.enabled", "false"),
-                         ("spark.sql.shuffle.partitions", "1")):
-                saved[k] = spark.conf.get(k)
-                spark.conf.set(k, v)
-            edges = edges.coalesce(1).localCheckpoint(eager=True)
-        else:
+        n_edges = 2 * pairs.count()
+        edges = pairs.union(
+            pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
+        )
+        small_graph = n_edges < _CC_SMALL_EDGES
+        # The eager edges checkpoint runs a real distributed job inside
+        # the overrides. Both checkpoint branches read the materialized
+        # pairs cache (each union branch a cache scan), never rebuild the
+        # upstream pipeline; the pairs cache is released right after, and
+        # again in the finally when anything here fails.
+        with conf_overrides(spark, SMALL_GRAPH_CONFS if small_graph else {}):
+            if small_graph:
+                edges = edges.coalesce(1)
             # edges becomes a leaf for every round below
             edges = edges.localCheckpoint(eager=True)
-        pairs.unpersist()
-        labels = _pin(
-            edges.select(F.col("doc_a").alias("doc"))
-            .distinct()
-            .withColumn("lbl", F.col("doc")),
-            0,
-        )
-        rnd = 0
-        while True:
-            rnd += 1
-            neigh_min = (
-                edges.join(labels, edges["doc_b"] == labels["doc"])
-                .groupBy(F.col("doc_a").alias("doc"))
-                .agg(F.min("lbl").alias("nl"))
+            pairs.unpersist()
+            labels = _pin(
+                edges.select(F.col("doc_a").alias("doc"))
+                .distinct()
+                .withColumn("lbl", F.col("doc")),
+                0,
             )
-            new_labels = _pin(
-                labels.join(neigh_min, "doc", "left")
-                .select(
-                    "doc",
-                    F.least(
-                        F.col("lbl"), F.coalesce(F.col("nl"), F.col("lbl"))
-                    ).alias("lbl"),
-                ),
-                rnd,
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "doc")
-                .filter(F.col("n.lbl") < F.col("o.lbl"))
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                break
-        # labels is pinned (checkpoint blocks or a materialized persist the
-        # changed-count above forced) — the caller's downstream plan reads
-        # it instead of replaying the loop; blocks are freed on GC. The
-        # FINAL round's persist must survive the return, so only the
-        # superseded rounds release here.
-        for df in pinned:
-            if df is not labels:
-                df.unpersist()
-        return labels
+            rnd = 0
+            while True:
+                rnd += 1
+                neigh_min = (
+                    edges.join(labels, edges["doc_b"] == labels["doc"])
+                    .groupBy(F.col("doc_a").alias("doc"))
+                    .agg(F.min("lbl").alias("nl"))
+                )
+                new_labels = _pin(
+                    labels.join(neigh_min, "doc", "left")
+                    .select(
+                        "doc",
+                        F.least(
+                            F.col("lbl"), F.coalesce(F.col("nl"), F.col("lbl"))
+                        ).alias("lbl"),
+                    ),
+                    rnd,
+                )
+                changed = (
+                    new_labels.alias("n")
+                    .join(labels.alias("o"), "doc")
+                    .filter(F.col("n.lbl") < F.col("o.lbl"))
+                    .count()
+                )
+                labels = new_labels
+                if changed == 0:
+                    break
+            # labels is pinned (checkpoint blocks or a materialized persist the
+            # changed-count above forced) — the caller's downstream plan reads
+            # it instead of replaying the loop; blocks are freed on GC. The
+            # FINAL round's persist must survive the return, so only the
+            # superseded rounds release here.
+            for df in pinned:
+                if df is not labels:
+                    df.unpersist()
+            return labels
     finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+        pairs.unpersist()
 
 
 # --- embedding-cosine near-dedup -------------------------------------------

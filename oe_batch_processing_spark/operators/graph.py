@@ -19,7 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from oe_batch_processing_spark.operators.dedup import CC_TRANSITIVE_ORACLE, SMALL_GRAPH_CONFS
 from oe_batch_processing_spark.registry import query
+from oe_batch_processing_spark.session import conf_overrides
 from oe_batch_processing_spark.tables import load_table, table_row_count
 
 PR_ITERS = 3
@@ -735,21 +737,6 @@ def star_labels(pairs: DataFrame) -> DataFrame:
     # (Production note: localCheckpoint is executor-local; a cluster job
     # that must survive executor loss uses spark.checkpoint() to a
     # reliable dir — same plan shape.)
-    # Size-adaptive execution, decided BEFORE the edges checkpoint (r17):
-    # ``edges`` is a row-preserving projection of ``pairs``, so
-    # |edges| == |pairs| and the cache-fill count doubles as the
-    # small-graph probe. The previous sequence paid an eager |E|-row
-    # checkpoint at the session width, a count, and a SECOND coalesced
-    # checkpoint on the small path — now the small path checkpoints once,
-    # already coalesced (one driver action fewer, one |E| materialization
-    # fewer). For a SMALL edge set (< _STAR_SMALL_EDGES), per-stage AQE
-    # re-planning and 32-way shuffles dominate wall time (measured: each
-    # round 3.4-5.5 s with AQE vs 0.7-1.5 s without, on 244 edges), so
-    # the loop drops to one partition with AQE off and restores the
-    # session confs after. A 100 TB edge set keeps AQE and the full
-    # shuffle width — the plan shape is identical, only the knobs move.
-    n_edges = pairs.count()  # fills the pairs cache
-    small_graph = n_edges < _STAR_SMALL_EDGES
 
     def _checksum(e: DataFrame):
         row = e.agg(
@@ -792,48 +779,56 @@ def star_labels(pairs: DataFrame) -> DataFrame:
             .localCheckpoint(eager=False)
         )
 
-    saved = {}
-    if small_graph:
-        for k, v in (("spark.sql.adaptive.enabled", "false"),
-                     ("spark.sql.shuffle.partitions", "1")):
-            saved[k] = spark.conf.get(k)
-            spark.conf.set(k, v)
-    # confs and the pairs cache are restored on every exit path, the eager
-    # edges checkpoint included
+    # the pairs cache is released on every exit path, the eager edges
+    # checkpoint included
     try:
-        edges_lazy = pairs.select(
-            F.col("doc_a").cast("long").alias("u"),
-            F.col("doc_b").cast("long").alias("v"),
-        )
-        if small_graph:
-            edges_lazy = edges_lazy.coalesce(1)
-        # localCheckpoint: TRUNCATE lineage, not just cache it (see the
-        # note above); the fill reads the just-materialized pairs cache.
-        edges = edges_lazy.localCheckpoint(eager=True)
-        # all_nodes stays LAZY (r15): it reads the edges checkpoint leaf and
-        # is consumed exactly once by the final left join — an eager
-        # checkpoint here was one more ~0.4 s driver action per invocation
-        # on an action-latency-bound small graph, for no reuse.
-        all_nodes = (
-            edges.select(F.col("u").alias("doc"))
-            .union(edges.select(F.col("v").alias("doc")))
-            .distinct()
-        )
+        # Size-adaptive execution, decided BEFORE the edges checkpoint (r17):
+        # ``edges`` is a row-preserving projection of ``pairs``, so
+        # |edges| == |pairs| and the cache-fill count doubles as the
+        # small-graph probe. The previous sequence paid an eager |E|-row
+        # checkpoint at the session width, a count, and a SECOND coalesced
+        # checkpoint on the small path — now the small path checkpoints once,
+        # already coalesced (one driver action fewer, one |E| materialization
+        # fewer). For a SMALL edge set (< _STAR_SMALL_EDGES), per-stage AQE
+        # re-planning and 32-way shuffles dominate wall time (measured: each
+        # round 3.4-5.5 s with AQE vs 0.7-1.5 s without, on 244 edges), so
+        # the loop drops to one partition with AQE off for its duration.
+        # A 100 TB edge set keeps AQE and the full shuffle width — the
+        # plan shape is identical, only the knobs move.
+        n_edges = pairs.count()  # fills the pairs cache
+        small_graph = n_edges < _STAR_SMALL_EDGES
+        with conf_overrides(spark, SMALL_GRAPH_CONFS if small_graph else {}):
+            edges_lazy = pairs.select(
+                F.col("doc_a").cast("long").alias("u"),
+                F.col("doc_b").cast("long").alias("v"),
+            )
+            if small_graph:
+                edges_lazy = edges_lazy.coalesce(1)
+            # localCheckpoint: TRUNCATE lineage, not just cache it (see the
+            # note above); the fill reads the just-materialized pairs cache.
+            edges = edges_lazy.localCheckpoint(eager=True)
+            # all_nodes stays LAZY (r15): it reads the edges checkpoint leaf and
+            # is consumed exactly once by the final left join — an eager
+            # checkpoint here was one more ~0.4 s driver action per invocation
+            # on an action-latency-bound small graph, for no reuse.
+            all_nodes = (
+                edges.select(F.col("u").alias("doc"))
+                .union(edges.select(F.col("v").alias("doc")))
+                .distinct()
+            )
 
-        cur = edges
-        prev_sum = None
-        for _round in range(20):  # log^2 bound; settles in ~3
-            cur = _one_round(cur)
-            new_sum = _checksum(cur)
-            if new_sum == prev_sum:
-                break
-            prev_sum = new_sum
-        # final star: every edge points node -> component root (= component
-        # min); roots label themselves; isolated-in-star nodes keep identity
-        labels = cur.select(F.col("u").alias("doc"), F.col("v").alias("lbl"))
+            cur = edges
+            prev_sum = None
+            for _round in range(20):  # log^2 bound; settles in ~3
+                cur = _one_round(cur)
+                new_sum = _checksum(cur)
+                if new_sum == prev_sum:
+                    break
+                prev_sum = new_sum
+            # final star: every edge points node -> component root (= component
+            # min); roots label themselves; isolated-in-star nodes keep identity
+            labels = cur.select(F.col("u").alias("doc"), F.col("v").alias("lbl"))
     finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
         if owns_cache:
             pairs.unpersist()
     return all_nodes.join(labels, "doc", "left").select(
@@ -842,7 +837,6 @@ def star_labels(pairs: DataFrame) -> DataFrame:
 
 
 # shared oracle: the star algorithm must reproduce the transitive closure
-from oe_batch_processing_spark.operators.dedup import CC_TRANSITIVE_ORACLE  # noqa: E402
 from oe_batch_processing_spark import registry as _registry  # noqa: E402
 
 _registry.ORACLE["graph_connected_components_star"] = CC_TRANSITIVE_ORACLE

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oe_batch_processing_spark.registry import query
+from oe_batch_processing_spark.session import scratch_dir
 from oe_batch_processing_spark.sources.fixed_width import fw_columns
 from oe_batch_processing_spark.tables import load_table
 
@@ -314,9 +315,6 @@ def pyds_stream_synthetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference implements with paused streams (lib/batchProcessing.js
     backpressure), here expressed as offset-range slicing.
     """
-    import os
-    import shutil
-    import tempfile
     import time as _time
     import uuid as _uuid
 
@@ -325,35 +323,30 @@ def pyds_stream_synthetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     py_datasource.register(spark)
     n_rows = 20000
     name = f"pyds_stream_{_uuid.uuid4().hex[:10]}"
-    # tmpfs checkpoint (r16): the 50 ms trigger commits offsets/state
-    # every batch — on the sandbox's slow block device those tiny
-    # checkpoint writes dominated the wall (the run_available_now note)
-    _shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    _ckpt = tempfile.mkdtemp(prefix=f"oebp-ckpt-{name}-", dir=_shm)
-    q = (
-        spark.readStream.format("synthetic_events")
-        .option("rows", n_rows)
-        .option("batch_rows", 2000)
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _ckpt)
-        .outputMode("append")
-        .trigger(processingTime="50 milliseconds")
-        .start()
-    )
-    try:
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            if spark.table(name).count() >= n_rows:
-                break
-            _time.sleep(0.3)
-        q.stop()
-        q.awaitTermination(60)
-    finally:
-        if q.isActive:
+    with scratch_dir(f"oebp-ckpt-{name}-") as ckpt:
+        q = (
+            spark.readStream.format("synthetic_events")
+            .option("rows", n_rows)
+            .option("batch_rows", 2000)
+            .load()
+            .writeStream.format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(processingTime="50 milliseconds")
+            .start()
+        )
+        try:
+            deadline = _time.time() + 120
+            while _time.time() < deadline:
+                if spark.table(name).count() >= n_rows:
+                    break
+                _time.sleep(0.3)
             q.stop()
-        shutil.rmtree(_ckpt, ignore_errors=True)
+            q.awaitTermination(60)
+        finally:
+            if q.isActive:
+                q.stop()
     streamed = spark.table(name)
     got = streamed.count()
     assert got == n_rows, f"streamed {got} rows, expected {n_rows}"

@@ -13,6 +13,10 @@ AQE coalesces the rest).
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -78,3 +82,42 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def conf_overrides(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the body, then put every key back.
+
+    A key that was unset before is unset again; a key that had a value gets
+    it back. This holds on every exit path, so a query that narrows a knob
+    for one phase leaves the session as it found it.
+    """
+    before = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@contextmanager
+def scratch_dir(prefix: str) -> Iterator[str]:
+    """A fresh scratch directory for the body, removed on every exit path.
+
+    Rooted on tmpfs (``/dev/shm``) when present: streaming checkpoints and
+    state stores write small files on every commit, which a slow block
+    device turns into the dominant cost. Production points checkpoints at
+    fast local disk or durable storage.
+    """
+    path = tempfile.mkdtemp(
+        prefix=prefix, dir="/dev/shm" if os.path.isdir("/dev/shm") else None
+    )
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oe_batch_processing_spark.registry import dsum, query
+from oe_batch_processing_spark.session import scratch_dir
 from oe_batch_processing_spark.tables import load_table, table_path
 
 WATERMARK = "1 hour"
@@ -61,33 +62,23 @@ def run_available_now(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Execute a bounded stream to completion into a memory sink; return the
     result as a batch DataFrame.
 
-    The checkpoint is rooted on tmpfs when available (r16): with no
-    explicit location Spark puts the temp checkpoint under /tmp, and the
-    state store writes per-partition delta files on EVERY commit — on
-    this sandbox's slow block device that dominated the stateful rows
-    (the ``spark.local.dir`` finding applied to streaming state; the
-    leakage-gate operator already rooted its checkpoint this way).
-    Production points checkpoints at fast local disk / durable storage
-    per standard practice."""
-    import os
-    import shutil
-    import tempfile
-
+    The stream checkpoints into a :func:`~oe_batch_processing_spark.session.scratch_dir`
+    (tmpfs when present: the state store writes per-partition delta files
+    on every commit), which is removed when the stream ends, failed or
+    not. The memory-sink table holds the rows, so the returned frame
+    does not read the checkpoint."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    ckpt = tempfile.mkdtemp(prefix=f"oebp-ckpt-{name}-", dir=shm)
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    spark = stream_df.sparkSession
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    with scratch_dir(f"oebp-ckpt-{name}-") as ckpt:
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return stream_df.sparkSession.table(name)
 
 
 # --- unified transformations (batch or stream) ------------------------------

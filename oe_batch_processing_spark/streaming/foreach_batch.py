@@ -28,13 +28,12 @@ the versioned-directory swap here is the dependency-free equivalent.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oe_batch_processing_spark.registry import query
+from oe_batch_processing_spark.session import conf_overrides, scratch_dir
 from oe_batch_processing_spark.tables import load_table
 
 
@@ -66,95 +65,89 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         F.unix_micros("ts").alias("ts_us"),
     )
-    # tmpfs root (r16): source files, target versions AND the stream
-    # checkpoint all live here — on the sandbox's slow block device the
-    # per-batch checkpoint+parquet writes dominated (the
-    # run_available_now note); the leakage-gate/qcstream ops already
-    # root on shm
-    _shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="oebp-feb-", dir=_shm)
-    src = os.path.join(root, "src")
-    # four files => four micro-batches at maxFilesPerTrigger=1. Round-robin
-    # split (r17): repartitionByRange paid a SECOND full evaluation of the
-    # source frame for its range-boundary sampling job; the merge is
-    # associative-commutative over ANY disjoint 4-way split, so the batch
-    # composition is free to be round-robin and the sampling pass is gone.
-    ev.repartition(4).write.mode("overwrite").parquet(src)
+    # source files, target versions and the stream checkpoint share one
+    # scratch root
+    with scratch_dir("oebp-feb-") as root:
+        src = os.path.join(root, "src")
+        # four files => four micro-batches at maxFilesPerTrigger=1. Round-robin
+        # split (r17): repartitionByRange paid a SECOND full evaluation of the
+        # source frame for its range-boundary sampling job; the merge is
+        # associative-commutative over ANY disjoint 4-way split, so the batch
+        # composition is free to be round-robin and the sampling pass is gone.
+        ev.repartition(4).write.mode("overwrite").parquet(src)
 
-    state = {"path": None, "version": 0}
+        state = {"path": None, "version": 0}
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # "latest event" merges as a max over a lexicographic struct —
-        # associative, so batch arrival order cannot matter.
-        agg = batch_df.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).alias("sum_dec"),
-            F.max(
-                F.struct(
-                    "ts_us",
-                    "event_id",
-                    F.round(F.col("value") * 100).cast("long").alias("cents"),
-                )
-            ).alias("last"),
-        )
-        if state["path"] is None:
-            merged = agg
-        else:
-            tgt = batch_df.sparkSession.read.parquet(state["path"])
-            a, t = agg.alias("a"), tgt.alias("t")
-            merged = (
-                a.join(t, "user_id", "full_outer")
-                .select(
-                    "user_id",
-                    (
-                        F.coalesce(F.col("a.n_events"), F.lit(0))
-                        + F.coalesce(F.col("t.n_events"), F.lit(0))
-                    ).alias("n_events"),
-                    (
-                        F.coalesce(
-                            F.col("a.sum_dec"), F.lit(0).cast("decimal(18,6)")
-                        )
-                        + F.coalesce(
-                            F.col("t.sum_dec"), F.lit(0).cast("decimal(18,6)")
-                        )
-                    ).cast("decimal(18,6)").alias("sum_dec"),
-                    F.greatest(
-                        F.col("a.last"),
-                        F.col("t.last"),
-                    ).alias("last"),
-                )
+        def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+            # "latest event" merges as a max over a lexicographic struct —
+            # associative, so batch arrival order cannot matter.
+            agg = batch_df.groupBy("user_id").agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.col("value").cast("decimal(18,6)")).alias("sum_dec"),
+                F.max(
+                    F.struct(
+                        "ts_us",
+                        "event_id",
+                        F.round(F.col("value") * 100).cast("long").alias("cents"),
+                    )
+                ).alias("last"),
             )
-        state["version"] += 1
-        new_path = os.path.join(root, f"target_v{state['version']}")
-        merged.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
+            if state["path"] is None:
+                merged = agg
+            else:
+                tgt = batch_df.sparkSession.read.parquet(state["path"])
+                a, t = agg.alias("a"), tgt.alias("t")
+                merged = (
+                    a.join(t, "user_id", "full_outer")
+                    .select(
+                        "user_id",
+                        (
+                            F.coalesce(F.col("a.n_events"), F.lit(0))
+                            + F.coalesce(F.col("t.n_events"), F.lit(0))
+                        ).alias("n_events"),
+                        (
+                            F.coalesce(
+                                F.col("a.sum_dec"), F.lit(0).cast("decimal(18,6)")
+                            )
+                            + F.coalesce(
+                                F.col("t.sum_dec"), F.lit(0).cast("decimal(18,6)")
+                            )
+                        ).cast("decimal(18,6)").alias("sum_dec"),
+                        F.greatest(
+                            F.col("a.last"),
+                            F.col("t.last"),
+                        ).alias("last"),
+                    )
+                )
+            state["version"] += 1
+            new_path = os.path.join(root, f"target_v{state['version']}")
+            merged.write.mode("overwrite").parquet(new_path)
+            state["path"] = new_path
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert state["version"] >= 4, "expected at least four micro-batches"
+        stream = (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = (
+            stream.writeStream.foreachBatch(merge_batch)
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        assert state["version"] >= 4, "expected at least four micro-batches"
 
-    final = spark.read.parquet(state["path"]).select(
-        "user_id",
-        "n_events",
-        F.col("sum_dec").cast("double").alias("total_value"),
-        F.col("last.event_id").alias("last_event_id"),
-        F.col("last.cents").alias("last_cents"),
-    )
-    # materialize before cleanup (the returned frame must not depend on
-    # the temp dir once the caller executes it)
-    rows = final.collect()
-    shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, final.schema)
+        final = spark.read.parquet(state["path"]).select(
+            "user_id",
+            "n_events",
+            F.col("sum_dec").cast("double").alias("total_value"),
+            F.col("last.event_id").alias("last_event_id"),
+            F.col("last.cents").alias("last_cents"),
+        )
+        # materialize before cleanup (the returned frame must not depend on
+        # the scratch root once the caller executes it)
+        return spark.createDataFrame(final.collect(), final.schema)
 
 
 # --- streaming split-leakage gate (the batch audit, incrementally) -----------
@@ -214,175 +207,165 @@ def stream_split_leakage_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = tagged.filter(F.col("split") == "train")
     held = tagged.filter(F.col("split") != "train")
 
-    # Local-runner tunings (both restored/irrelevant at cluster scale):
-    # micro-batches are FILE-sized (1/4 of the held split), so PER-BATCH
-    # shuffles at the session-wide partition count pay ~4x task-dispatch
-    # overhead for no parallelism — the STREAMING phase runs at a
-    # batch-sized partition count (set just before start(), restored in
-    # the finally; the static index build keeps the session width — its
-    # per-doc shingle transform is the one stage here that wants all
-    # cores). Scratch (checkpoint + source files) goes to /dev/shm when
-    # present: the availableNow demo doesn't need durable checkpoints, a
-    # production gate would point this at object storage.
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    root = None
+    # Local-runner tunings (irrelevant at cluster scale): micro-batches
+    # are FILE-sized (1/4 of the held split), so PER-BATCH shuffles at the
+    # session-wide partition count pay ~4x task-dispatch overhead for no
+    # parallelism — the STREAMING phase runs at a batch-sized partition
+    # count, from just before start() through the final collect; the
+    # static index build keeps the session width — its per-doc shingle
+    # transform is the one stage here that wants all cores. Scratch
+    # (checkpoint + source files) is a scratch_dir: the availableNow demo
+    # doesn't need durable checkpoints, a production gate would point this
+    # at object storage.
+    # frozen history structures, built once and persisted across batches
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    tsh = (
+        # r17: the per-doc distinct-shingle count (nt) rides the index
+        # as a carried column, so the separate tcounts aggregate (and
+        # its per-batch re-attach join) is gone — see rep_jaccard_pairs
+        word_shingles(train, 3, count_col="nt")
+        .withColumnRenamed("doc_id", "train_doc")
+        # pre-partitioned on the join key BEFORE caching: the in-memory
+        # scan then reports hashpartitioning(sh) and every micro-batch's
+        # index join shuffles only the batch side — the history never
+        # moves again (the streaming-state property a real gate needs)
+        .repartition(n_part, "sh")
+        .persist()
+    )
+    pos16 = (
+        f"cast(conv(substr(md5(sh), j * 4 + 1, 4), 16, 10) as int) "
+        f"% {_GATE_BLOOM_M}"
+    )
+    bloom_bits = (
+        tsh.select("sh").distinct()
+        .select(F.explode(F.expr(f"sequence(0, {_GATE_BLOOM_K - 1})")).alias("j"), "sh")
+        .select(F.col("j").alias("k_idx"), F.expr(pos16).alias("pos"))
+        .distinct()
+        .persist()
+    )
     try:
-        # frozen history structures, built once and persisted across batches
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        tsh = (
-            # r17: the per-doc distinct-shingle count (nt) rides the index
-            # as a carried column, so the separate tcounts aggregate (and
-            # its per-batch re-attach join) is gone — see rep_jaccard_pairs
-            word_shingles(train, 3, count_col="nt")
-            .withColumnRenamed("doc_id", "train_doc")
-            # pre-partitioned on the join key BEFORE caching: the in-memory
-            # scan then reports hashpartitioning(sh) and every micro-batch's
-            # index join shuffles only the batch side — the history never
-            # moves again (the streaming-state property a real gate needs)
-            .repartition(n_part, "sh")
-            .persist()
-        )
-        pos16 = (
-            f"cast(conv(substr(md5(sh), j * 4 + 1, 4), 16, 10) as int) "
-            f"% {_GATE_BLOOM_M}"
-        )
-        bloom_bits = (
-            tsh.select("sh").distinct()
-            .select(F.explode(F.expr(f"sequence(0, {_GATE_BLOOM_K - 1})")).alias("j"), "sh")
-            .select(F.col("j").alias("k_idx"), F.expr(pos16).alias("pos"))
-            .distinct()
-            .persist()
-        )
-        bloom_bits.count()  # materialize history state before the stream starts
+        with scratch_dir("oebp-leakgate-") as root:
+            bloom_bits.count()  # materialize history state before the stream starts
+            src = os.path.join(root, "held")
+            # round-robin 4-way split (r17, see stream_foreachbatch_upsert):
+            # leak pairs are disjoint per held doc under ANY split, so the
+            # range-boundary sampling pass bought nothing.
+            held.repartition(4).write.mode("overwrite").parquet(src)
+            pairs_path = os.path.join(root, "leak_pairs")
+            empty = spark.createDataFrame(
+                [], "train_doc long, held_doc long, held_split string"
+            )
+            empty.write.mode("overwrite").parquet(pairs_path)  # schema anchor
 
-        shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        root = tempfile.mkdtemp(prefix="oebp-leakgate-", dir=shm)
-        src = os.path.join(root, "held")
-        # round-robin 4-way split (r17, see stream_foreachbatch_upsert):
-        # leak pairs are disjoint per held doc under ANY split, so the
-        # range-boundary sampling pass bought nothing.
-        held.repartition(4).write.mode("overwrite").parquet(src)
-        pairs_path = os.path.join(root, "leak_pairs")
-        empty = spark.createDataFrame(
-            [], "train_doc long, held_doc long, held_split string"
-        )
-        empty.write.mode("overwrite").parquet(pairs_path)  # schema anchor
+            screened = {"shingles": 0, "survivors": 0, "batches": 0}
 
-        screened = {"shingles": 0, "survivors": 0, "batches": 0}
-
-        def gate(batch_df: DataFrame, batch_id: int) -> None:
-            # two consumers below (hits screen, cross join) — persist or
-            # the batch gets re-shingled per consumer. The split tag AND
-            # the per-doc count (nh) ride THROUGH the shingle explode
-            # (r17 carry/count columns) instead of a per-batch re-attach
-            # join and a per-batch count aggregate.
-            bsh = word_shingles(
-                batch_df, 3, carry=("split",), count_col="nh"
-            ).persist()
-            hits = (
-                bsh.select("sh").distinct()
-                .select(
-                    "sh",
-                    F.explode(F.expr(f"sequence(0, {_GATE_BLOOM_K - 1})")).alias("j"),
+            def gate(batch_df: DataFrame, batch_id: int) -> None:
+                # two consumers below (hits screen, cross join) — persist or
+                # the batch gets re-shingled per consumer. The split tag AND
+                # the per-doc count (nh) ride THROUGH the shingle explode
+                # (r17 carry/count columns) instead of a per-batch re-attach
+                # join and a per-batch count aggregate.
+                bsh = word_shingles(
+                    batch_df, 3, carry=("split",), count_col="nh"
+                ).persist()
+                hits = (
+                    bsh.select("sh").distinct()
+                    .select(
+                        "sh",
+                        F.explode(F.expr(f"sequence(0, {_GATE_BLOOM_K - 1})")).alias("j"),
+                    )
+                    .select("sh", F.col("j").alias("k_idx"), F.expr(pos16).alias("pos"))
+                    .join(
+                        F.broadcast(bloom_bits.withColumn("hit", F.lit(1))),
+                        ["k_idx", "pos"],
+                        "left",
+                    )
+                    .groupBy("sh")
+                    .agg(F.sum("hit").alias("nhit"))
                 )
-                .select("sh", F.col("j").alias("k_idx"), F.expr(pos16).alias("pos"))
-                .join(
-                    F.broadcast(bloom_bits.withColumn("hit", F.lit(1))),
-                    ["k_idx", "pos"],
-                    "left",
+                # audit metrics ride the write action itself (zero extra jobs):
+                # an Observation on the hits stage fires when the leaks write runs
+                from pyspark.sql import Observation
+
+                obs = Observation()
+                hits = hits.observe(
+                    obs,
+                    F.count(F.lit(1)).alias("n_sh"),
+                    F.sum((F.col("nhit") == _GATE_BLOOM_K).cast("long")).alias("n_surv"),
                 )
-                .groupBy("sh")
-                .agg(F.sum("hit").alias("nhit"))
-            )
-            # audit metrics ride the write action itself (zero extra jobs):
-            # an Observation on the hits stage fires when the leaks write runs
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            hits = hits.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_sh"),
-                F.sum((F.col("nhit") == _GATE_BLOOM_K).cast("long")).alias("n_surv"),
-            )
-            survivors = hits.filter(F.col("nhit") == _GATE_BLOOM_K).select("sh")
-            cross = (
-                bsh.join(survivors, "sh")
-                .join(tsh, "sh")
-                .groupBy(
-                    "train_doc",
-                    F.col("doc_id").alias("held_doc"),
-                    F.col("split").alias("held_split"),
-                    "nt",  # carried, functionally dependent on train_doc
-                    "nh",  # carried, functionally dependent on held_doc
+                survivors = hits.filter(F.col("nhit") == _GATE_BLOOM_K).select("sh")
+                cross = (
+                    bsh.join(survivors, "sh")
+                    .join(tsh, "sh")
+                    .groupBy(
+                        "train_doc",
+                        F.col("doc_id").alias("held_doc"),
+                        F.col("split").alias("held_split"),
+                        "nt",  # carried, functionally dependent on train_doc
+                        "nh",  # carried, functionally dependent on held_doc
+                    )
+                    .agg(F.count(F.lit(1)).alias("n_common"))
                 )
-                .agg(F.count(F.lit(1)).alias("n_common"))
-            )
-            jac = F.col("n_common").cast("double") / (
-                F.col("nt") + F.col("nh") - F.col("n_common")
-            )
-            leaks = (
-                cross.filter(jac >= 0.8)
-                .select("train_doc", "held_doc", "held_split")
-            )
-            leaks.write.mode("append").parquet(pairs_path)
-            m = obs.get
-            screened["shingles"] += int(m["n_sh"])
-            screened["survivors"] += int(m["n_surv"] or 0)
-            screened["batches"] += 1
-            bsh.unpersist()
+                jac = F.col("n_common").cast("double") / (
+                    F.col("nt") + F.col("nh") - F.col("n_common")
+                )
+                leaks = (
+                    cross.filter(jac >= 0.8)
+                    .select("train_doc", "held_doc", "held_split")
+                )
+                leaks.write.mode("append").parquet(pairs_path)
+                m = obs.get
+                screened["shingles"] += int(m["n_sh"])
+                screened["survivors"] += int(m["n_surv"] or 0)
+                screened["batches"] += 1
+                bsh.unpersist()
 
-        stream = (
-            spark.readStream.schema(held.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        # batch-sized shuffle width for the micro-batch jobs only (the
-        # tsh join still aligns to the index's cached partitioning)
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream.writeStream.foreachBatch(gate)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        assert screened["batches"] >= 4, "expected at least four micro-batches"
+            stream = (
+                spark.readStream.schema(held.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
+            )
+            # batch-sized shuffle width for the micro-batch jobs only (the
+            # tsh join still aligns to the index's cached partitioning)
+            with conf_overrides(spark, {"spark.sql.shuffle.partitions": "8"}):
+                q = (
+                    stream.writeStream.foreachBatch(gate)
+                    .option("checkpointLocation", os.path.join(root, "ckpt"))
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination()
+                assert screened["batches"] >= 4, "expected at least four micro-batches"
 
-        final = (
-            spark.read.parquet(pairs_path)
-            .groupBy("held_split")
-            .agg(
-                F.count_distinct("held_doc").alias("n_leaked_docs"),
-                F.count(F.lit(1)).alias("n_leak_pairs"),
-                F.min("held_doc").alias("first_leaked_doc"),
-            )
-        )
-        rows = final.collect()
-        # the Bloom screen must have done real work (non-vacuous prefilter):
-        # shingles unique to the held splits get dropped before the index
-        # join. EXCEPT on a fully-leaked corpus (the 10x scale probe's
-        # key-shifted replicas put every held doc's exact text in train):
-        # there, passing every shingle is the CORRECT screen output, so the
-        # vacuity tripwire only applies when some held doc is clean.
-        if screened["survivors"] >= screened["shingles"]:
-            # only a fully-leaked corpus may legitimately pass every
-            # shingle (the held count costs a job, so check lazily)
-            n_leaked = sum(r["n_leaked_docs"] for r in rows)
-            n_held = held.select("doc_id").distinct().count()
-            assert n_leaked == n_held, (
-                "bloom screen passed every shingle on a partially-clean "
-                "corpus"
-            )
+                final = (
+                    spark.read.parquet(pairs_path)
+                    .groupBy("held_split")
+                    .agg(
+                        F.count_distinct("held_doc").alias("n_leaked_docs"),
+                        F.count(F.lit(1)).alias("n_leak_pairs"),
+                        F.min("held_doc").alias("first_leaked_doc"),
+                    )
+                )
+                rows = final.collect()
+                # the Bloom screen must have done real work (non-vacuous prefilter):
+                # shingles unique to the held splits get dropped before the index
+                # join. EXCEPT on a fully-leaked corpus (the 10x scale probe's
+                # key-shifted replicas put every held doc's exact text in train):
+                # there, passing every shingle is the CORRECT screen output, so the
+                # vacuity tripwire only applies when some held doc is clean.
+                if screened["survivors"] >= screened["shingles"]:
+                    # only a fully-leaked corpus may legitimately pass every
+                    # shingle (the held count costs a job, so check lazily)
+                    n_leaked = sum(r["n_leaked_docs"] for r in rows)
+                    n_held = held.select("doc_id").distinct().count()
+                    assert n_leaked == n_held, (
+                        "bloom screen passed every shingle on a partially-clean "
+                        "corpus"
+                    )
+                return spark.createDataFrame(rows, final.schema)
+    finally:
         for frame in (tsh, bloom_bits):
             frame.unpersist()
-        return spark.createDataFrame(rows, final.schema)
-    finally:
-        # scratch lives in RAM-backed /dev/shm — reclaim it on EVERY exit
-        # path (a failed gate/vacuity assertion would otherwise leak memory,
-        # not just disk, across repeated runs)
-        if root is not None:
-            shutil.rmtree(root, ignore_errors=True)
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
 
 
 @query(
@@ -430,137 +413,130 @@ def stream_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     bucket = F.expr(_SPLIT_BYTE) % 10
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    root = None
+    # --- frozen model, built once and persisted across batches ---
+    train_words = docs.select(
+        "doc_id", "lang", bucket.alias("bkt"),
+        F.expr(_DSIR_WS_EXPR).alias("ws"),
+    ).filter((F.col("bkt") < 8) & F.col("lang").isNotNull())
+    ctb = (
+        train_words.select(
+            "lang", F.explode(F.expr(_DSIR_FEATS_EXPR)).alias("f")
+        )
+        .select(
+            "lang",
+            F.conv(F.substring(F.md5("f"), 1, 2), 16, 10)
+            .cast("int")
+            .alias("b"),
+        )
+        .groupBy("lang", "b")
+        .agg(F.count(F.lit(1)).alias("ct"))
+    )
+    classes = train_words.select("lang").distinct().persist()
+    wts = _qc_weights(spark, classes, ctb).persist()
     try:
-        # --- frozen model, built once and persisted across batches ---
-        train_words = docs.select(
-            "doc_id", "lang", bucket.alias("bkt"),
-            F.expr(_DSIR_WS_EXPR).alias("ws"),
-        ).filter((F.col("bkt") < 8) & F.col("lang").isNotNull())
-        ctb = (
-            train_words.select(
-                "lang", F.explode(F.expr(_DSIR_FEATS_EXPR)).alias("f")
-            )
-            .select(
-                "lang",
-                F.conv(F.substring(F.md5("f"), 1, 2), 16, 10)
-                .cast("int")
-                .alias("b"),
-            )
-            .groupBy("lang", "b")
-            .agg(F.count(F.lit(1)).alias("ct"))
-        )
-        classes = train_words.select("lang").distinct().persist()
-        wts = _qc_weights(spark, classes, ctb).persist()
-        wts.count()  # materialize the frozen model before the stream starts
+        with scratch_dir("oebp-qcstream-") as root:
+            wts.count()  # materialize the frozen model before the stream starts
+            src = os.path.join(root, "docs")
+            # round-robin 4-way split (r17): per-doc scores are independent of
+            # batch composition; the range sampling pass bought nothing.
+            docs.select("doc_id", "lang", "text").repartition(4).write.mode(
+                "overwrite"
+            ).parquet(src)
+            out_path = os.path.join(root, "preds")
+            spark.createDataFrame(
+                [],
+                "doc_id long, pred_lang string, score long, margin long, "
+                "n_features long, is_correct int",
+            ).write.mode("overwrite").parquet(out_path)  # schema anchor
 
-        shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        root = tempfile.mkdtemp(prefix="oebp-qcstream-", dir=shm)
-        src = os.path.join(root, "docs")
-        # round-robin 4-way split (r17): per-doc scores are independent of
-        # batch composition; the range sampling pass bought nothing.
-        docs.select("doc_id", "lang", "text").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(src)
-        out_path = os.path.join(root, "preds")
-        spark.createDataFrame(
-            [],
-            "doc_id long, pred_lang string, score long, margin long, "
-            "n_features long, is_correct int",
-        ).write.mode("overwrite").parquet(out_path)  # schema anchor
+            seen = {"batches": 0, "rows": 0}
+            # Per-batch content collapse GATED at the batch twin's QC_REP_MIN_N
+            # (r16 — it was always-on): class scores read only the text, so on
+            # replica-heavy corpora (the 30x probe's key-shifted duplicates)
+            # the collapse turns per-doc tokenize/hash cost into per-content
+            # cost — a strict regrouping. But below the gate (every committed
+            # SF, near-dup-free) the collapse is pure overhead: a text-keyed
+            # shuffle + collect_list + membership-expand join PER MICRO-BATCH
+            # for no dedup gain (measured ~-1 s of the 4-batch stream section
+            # at sf0.1). The same metadata-only footer gate as the batch twin
+            # picks the path once, before the stream starts; the shared DuckDB
+            # oracle checks the flat path directly at the committed SFs and
+            # the collapsed path rides the probe corpora — the family
+            # convention (DSIR/leakage/BM25) exactly.
+            from oe_batch_processing_spark.operators.pipeline import QC_REP_MIN_N
+            from oe_batch_processing_spark.tables import table_row_count
 
-        seen = {"batches": 0, "rows": 0}
-        # Per-batch content collapse GATED at the batch twin's QC_REP_MIN_N
-        # (r16 — it was always-on): class scores read only the text, so on
-        # replica-heavy corpora (the 30x probe's key-shifted duplicates)
-        # the collapse turns per-doc tokenize/hash cost into per-content
-        # cost — a strict regrouping. But below the gate (every committed
-        # SF, near-dup-free) the collapse is pure overhead: a text-keyed
-        # shuffle + collect_list + membership-expand join PER MICRO-BATCH
-        # for no dedup gain (measured ~-1 s of the 4-batch stream section
-        # at sf0.1). The same metadata-only footer gate as the batch twin
-        # picks the path once, before the stream starts; the shared DuckDB
-        # oracle checks the flat path directly at the committed SFs and
-        # the collapsed path rides the probe corpora — the family
-        # convention (DSIR/leakage/BM25) exactly.
-        from oe_batch_processing_spark.operators.pipeline import QC_REP_MIN_N
-        from oe_batch_processing_spark.tables import table_row_count
+            collapse = table_row_count(sf_dir, "documents") >= QC_REP_MIN_N
 
-        collapse = table_row_count(sf_dir, "documents") >= QC_REP_MIN_N
-
-        def _bucket_counts(frame: DataFrame, key: str) -> DataFrame:
-            return (
-                frame.select(key, F.expr(_DSIR_WS_EXPR).alias("ws"))
-                .select(key, F.explode(F.expr(_DSIR_FEATS_EXPR)).alias("f"))
-                .select(
-                    key,
-                    F.conv(F.substring(F.md5("f"), 1, 2), 16, 10)
-                    .cast("int")
-                    .alias("b"),
+            def _bucket_counts(frame: DataFrame, key: str) -> DataFrame:
+                return (
+                    frame.select(key, F.expr(_DSIR_WS_EXPR).alias("ws"))
+                    .select(key, F.explode(F.expr(_DSIR_FEATS_EXPR)).alias("f"))
+                    .select(
+                        key,
+                        F.conv(F.substring(F.md5("f"), 1, 2), 16, 10)
+                        .cast("int")
+                        .alias("b"),
+                    )
+                    .groupBy(key, "b")
+                    .agg(F.count(F.lit(1)).alias("c"))
                 )
-                .groupBy(key, "b")
-                .agg(F.count(F.lit(1)).alias("c"))
-            )
 
-        def score(batch_df: DataFrame, batch_id: int) -> None:
-            b = batch_df.persist()  # >= 2 consumers: bucket counts, project
-            if collapse:
-                reps = b.groupBy("text").agg(
-                    F.min("doc_id").alias("rep_id"),
-                    F.collect_list("doc_id").alias("members"),
-                ).persist()
-                db = _bucket_counts(reps, "rep_id")
-                top = (
-                    reps.select("rep_id", F.explode("members").alias("doc_id"))
-                    .join(_qc_top(db, wts, "rep_id"), "rep_id")
-                    .drop("rep_id")
+            def score(batch_df: DataFrame, batch_id: int) -> None:
+                b = batch_df.persist()  # >= 2 consumers: bucket counts, project
+                if collapse:
+                    reps = b.groupBy("text").agg(
+                        F.min("doc_id").alias("rep_id"),
+                        F.collect_list("doc_id").alias("members"),
+                    ).persist()
+                    db = _bucket_counts(reps, "rep_id")
+                    top = (
+                        reps.select("rep_id", F.explode("members").alias("doc_id"))
+                        .join(_qc_top(db, wts, "rep_id"), "rep_id")
+                        .drop("rep_id")
+                    )
+                else:
+                    reps = None
+                    top = _qc_top(_bucket_counts(b, "doc_id"), wts, "doc_id")
+                out = _qc_project(b, top, classes)
+                out.write.mode("append").parquet(out_path)
+                seen["batches"] += 1
+                if reps is not None:
+                    reps.unpersist()
+                b.unpersist()
+
+            stream = (
+                spark.readStream.schema(
+                    "doc_id long, lang string, text string"
                 )
-            else:
-                reps = None
-                top = _qc_top(_bucket_counts(b, "doc_id"), wts, "doc_id")
-            out = _qc_project(b, top, classes)
-            out.write.mode("append").parquet(out_path)
-            seen["batches"] += 1
-            if reps is not None:
-                reps.unpersist()
-            b.unpersist()
-
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, lang string, text string"
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
             )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        # batch-sized shuffle width for the micro-batch jobs only
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream.writeStream.foreachBatch(score)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        assert seen["batches"] >= 4, "expected at least four micro-batches"
+            # batch-sized shuffle width for the micro-batch jobs only
+            with conf_overrides(spark, {"spark.sql.shuffle.partitions": "8"}):
+                q = (
+                    stream.writeStream.foreachBatch(score)
+                    .option("checkpointLocation", os.path.join(root, "ckpt"))
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination()
+                assert seen["batches"] >= 4, "expected at least four micro-batches"
 
-        final = spark.read.parquet(out_path)
-        rows = final.collect()
-        # Loss tripwire from parquet FOOTER metadata instead of a per-batch
-        # b.count() driver job (r16: 4 fewer jobs per run; also strictly
-        # stronger — it catches a skipped source file, which summing the
-        # batches that DID run could not).
-        from oe_batch_processing_spark.tables import _footer_row_count
+                final = spark.read.parquet(out_path)
+                rows = final.collect()
+                # Loss tripwire from parquet FOOTER metadata instead of a per-batch
+                # b.count() driver job (r16: 4 fewer jobs per run; also strictly
+                # stronger — it catches a skipped source file, which summing the
+                # batches that DID run could not).
+                from oe_batch_processing_spark.tables import _footer_row_count
 
-        n_src = _footer_row_count(os.path.realpath(src), os.stat(src).st_mtime_ns)
-        assert len(rows) == n_src, "append accumulation lost rows"
+                n_src = _footer_row_count(os.path.realpath(src), os.stat(src).st_mtime_ns)
+                assert len(rows) == n_src, "append accumulation lost rows"
+                return spark.createDataFrame(rows, final.schema)
+    finally:
         classes.unpersist()
         wts.unpersist()
-        return spark.createDataFrame(rows, final.schema)
-    finally:
-        if root is not None:
-            shutil.rmtree(root, ignore_errors=True)
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
 
 
 stream_quality_classifier.__doc__ = stream_quality_classifier.__doc__.format(

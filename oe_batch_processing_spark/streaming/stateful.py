@@ -28,6 +28,7 @@ from pyspark.sql.types import (
 )
 
 from oe_batch_processing_spark.registry import query
+from oe_batch_processing_spark.session import conf_overrides
 from oe_batch_processing_spark.streaming.event_windows import (
     events_stream,
     run_available_now,
@@ -374,11 +375,6 @@ def stream_tws_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     also the 100 TB choice (state spills off-heap, incremental
     checkpoints).
     """
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
     # State width tracks KEY CARDINALITY, not corpus size (r16): the state
     # is O(|event types|) — a fixed ~6-value domain at every SF, 100 TB
     # included — so running the micro-batch at the corpus-scaled shuffle
@@ -386,18 +382,17 @@ def stream_tws_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session per partition with almost all of them empty. Bounding the
     # stateful exchange at TWS_STATE_PARTITIONS (> |types|, so no key
     # coalescing is forced) measured 3.9 -> 2.6 s at sf0.1 on local[32];
-    # the aggregation result is partitioning-independent. Restored after
-    # the bounded run — batch queries keep the session width.
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(TWS_STATE_PARTITIONS)
-        )
+    # the aggregation result is partitioning-independent. Both confs
+    # cover the bounded run only — batch queries keep the session's.
+    with conf_overrides(spark, {
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider",
+        "spark.sql.shuffle.partitions": str(TWS_STATE_PARTITIONS),
+    }):
         raw = run_available_now(
             tws_type_stats(events_stream(spark, sf_dir)), "update"
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
     latest = F.max(
         F.struct("n_events", "total_cents", "min_cents", "max_cents")
     ).alias("s")

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from oe_batch_processing_spark.operators.skew import salted_join
@@ -406,14 +407,14 @@ def test_ann_fixed_qps_hook_engages_and_restores(spark, sf_dir):
     assert again == base  # restored: identical plan again
 
 
-def test_star_labels_restores_session_when_edges_checkpoint_fails(spark, monkeypatch):
-    """The small-graph path turns AQE off and narrows the shuffle before its
-    eager edges checkpoint; a failure there must leave both confs and the
-    pairs cache as they were."""
-    import pytest
+@pytest.mark.parametrize("kernel", ["star_labels", "cc_labels"])
+def test_star_labels_restores_session_when_edges_checkpoint_fails(spark, monkeypatch, kernel):
+    """Both connected-components kernels turn AQE off and narrow the shuffle
+    before their eager edges checkpoint; a failure there must leave both
+    confs and the pairs cache as they were."""
+    from oe_batch_processing_spark.operators import dedup, graph
 
-    from oe_batch_processing_spark.operators.graph import star_labels
-
+    labels = {"star_labels": graph.star_labels, "cc_labels": dedup.cc_labels}[kernel]
     keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     before = {k: spark.conf.get(k) for k in keys}
     pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long")
@@ -423,7 +424,7 @@ def test_star_labels_restores_session_when_edges_checkpoint_fails(spark, monkeyp
 
     monkeypatch.setattr(type(pairs), "localCheckpoint", failing_checkpoint)
     with pytest.raises(RuntimeError, match="injected checkpoint failure"):
-        star_labels(pairs)
+        labels(pairs)
     assert {k: spark.conf.get(k) for k in keys} == before
     assert not pairs.storageLevel.useMemory
 
