@@ -9,7 +9,8 @@ before coercion (lib/parsers.js:97).
 
 ``js_number`` reproduces JS ``Number()`` — which is *not* Python ``float``:
   - '' and whitespace-only => 0
-  - '0x10'/'0o17'/'0b101' => integer radix parse
+  - '0x10'/'0o17'/'0b101' => integer radix parse (Infinity past the
+    largest double)
   - 'Infinity'/'-Infinity' => inf
   - leading '+' allowed, thousands separators not
   - anything else non-numeric => NaN (=> coercion error)
@@ -26,20 +27,25 @@ _BIN = re.compile(r"^[+-]?0[bB][01]+$")
 _DEC = re.compile(r"^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$")
 
 
+def _radix(s: str, base: int) -> float:
+    sign = -1.0 if s[0] == "-" else 1.0
+    try:
+        return sign * float(int(s.lstrip("+-"), base))
+    except OverflowError:  # beyond the largest double: JS gives Infinity
+        return sign * math.inf
+
+
 def js_number(value: str) -> float:
     """JavaScript ``Number(value)`` for string inputs; NaN on failure."""
     s = value.strip()
     if s == "":
         return 0.0
     if _HEX.match(s):
-        sign = -1.0 if s[0] == "-" else 1.0
-        return sign * float(int(s.lstrip("+-"), 16))
+        return _radix(s, 16)
     if _OCT.match(s):
-        sign = -1.0 if s[0] == "-" else 1.0
-        return sign * float(int(s.lstrip("+-"), 8))
+        return _radix(s, 8)
     if _BIN.match(s):
-        sign = -1.0 if s[0] == "-" else 1.0
-        return sign * float(int(s.lstrip("+-"), 2))
+        return _radix(s, 2)
     if s in ("Infinity", "+Infinity"):
         return math.inf
     if s == "-Infinity":

@@ -85,29 +85,35 @@ def write_status(status_df: DataFrame, ledger_dir: str) -> None:
     status_df.write.mode("append").parquet(os.path.join(ledger_dir, "batch_status"))
 
 
+BATCH_RUN_DDL = (
+    "batchRunId string, filePath string, options string, "
+    "startTimeMillis long, endTimeMillis long, durationMillis long, "
+    "totalRecordCount long, successCount long, failureCount long, "
+    "error string"
+)
+
+
 def write_run(spark: SparkSession, run: BatchRun, ledger_dir: str) -> None:
-    row = [
-        (
-            run.batch_run_id,
-            run.file_path,
-            run.options_json,
-            run.start_time_millis,
-            run.end_time_millis,
-            run.duration_millis,
-            run.total_record_count,
-            run.success_count,
-            run.failure_count,
-            run.error,
-        )
-    ]
-    df = spark.createDataFrame(
-        row,
-        "batchRunId string, filePath string, options string, "
-        "startTimeMillis long, endTimeMillis long, durationMillis long, "
-        "totalRecordCount long, successCount long, failureCount long, "
-        "error string",
+    """Append the run's one BatchRun row. The row is a JVM-local relation —
+    ``from_json`` of a literal over a one-row range, folded to literals by
+    the optimizer — so no Python worker starts; ``from_json`` keeps every
+    column of ``BATCH_RUN_DDL`` nullable."""
+    row = {
+        "batchRunId": run.batch_run_id,
+        "filePath": run.file_path,
+        "options": run.options_json,
+        "startTimeMillis": run.start_time_millis,
+        "endTimeMillis": run.end_time_millis,
+        "durationMillis": run.duration_millis,
+        "totalRecordCount": run.total_record_count,
+        "successCount": run.success_count,
+        "failureCount": run.failure_count,
+        "error": run.error,
+    }
+    df = spark.range(1, numPartitions=1).select(
+        F.from_json(F.lit(json.dumps(row)), BATCH_RUN_DDL).alias("run")
     )
-    df.write.mode("append").parquet(os.path.join(ledger_dir, "batch_run"))
+    df.select("run.*").write.mode("append").parquet(os.path.join(ledger_dir, "batch_run"))
 
 
 def read_status(spark: SparkSession, ledger_dir: str) -> DataFrame:

@@ -8,7 +8,12 @@ Two paths:
    ``,`` (naive split otherwise), JS ``Number()`` / strict-boolean coercion,
    per-record count validation with ``ignore_extra_*`` opt-outs, three-way
    outcome (SUCCESS / FAILED+partial-json / config error raised). Runs as an
-   Arrow-batched ``mapInPandas`` because the semantics (stop-on-first-error
+   Arrow-batched ``mapInArrow`` (:func:`outcome.parse_records`):
+   :func:`batch_kernel` parses the plain lines of each batch with
+   ``pyarrow.compute`` (one RE2 ``extract_regex`` per line, string kernels
+   per field), and :func:`parse_record` — the spec — runs only on the lines
+   the kernel does not handle (quote escapes, non-ASCII, radix/exponent
+   numbers, field-count errors, ...). The semantics (stop-on-first-error
    partial rows, JS numerics) are not expressible with JVM expressions.
 
 2. ``csv_scan_native`` — **scale path**: ``spark.read.csv`` with an explicit
@@ -25,6 +30,7 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass, field
+from json.encoder import encode_basestring_ascii
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -36,7 +42,7 @@ from pyspark.sql.types import (
 )
 
 from oe_batch_processing_spark.functions.coercion import coerce_field, js_number
-from oe_batch_processing_spark.sources.outcome import parse_records
+from oe_batch_processing_spark.sources.outcome import BatchKernel, parse_records
 
 
 class CsvConfigError(ValueError):
@@ -189,15 +195,141 @@ def parse_record(rec: str, opts: CsvOptions) -> tuple[dict, str | None]:
     return out, None
 
 
+# The line subset batch_kernel parses: printable ASCII without ``"`` or
+# ``\``, so ``str.strip()`` trims only spaces and ``json.dumps`` escapes
+# nothing.
+_PLAIN_CHARS = [chr(c) for c in range(0x20, 0x7F) if chr(c) not in '"\\']
+
+
+def _re_chars(chars) -> str:
+    return "".join(f"\\x{{{ord(c):x}}}" for c in chars)
+
+
+def _field_re(delimiter: str) -> str:
+    """One field of a plain line: ``"..."`` or unquoted without ``,``/``'``
+    for the quote-aware ``,`` tokenizer; no delimiter character otherwise."""
+    if delimiter == ",":
+        unquoted = _re_chars(c for c in _PLAIN_CHARS if c not in ",'")
+        return f'"[{_re_chars(_PLAIN_CHARS)}]*"|[{unquoted}]*'
+    return f"[{_re_chars(c for c in _PLAIN_CHARS if c not in delimiter)}]*"
+
+
+# Every form js_number accepts ("" included), and its plain-decimal subset.
+_JS_NUMBER_FORM = (
+    r"^(?:[+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?"
+    r"|[+-]?0[xX][0-9a-fA-F]+|[+-]?0[oO][0-7]+|[+-]?0[bB][01]+|[+-]?Infinity)?$"
+)
+_PLAIN_DECIMAL = r"^(?:[+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+))?$"
+# sign, integer digits without leading zeros, fraction without trailing zeros
+_DECIMAL_PARTS = r"^(?P<sign>[+-]?)0*(?P<int>[0-9]*)(?:\.(?P<frac>[0-9]*?)0*)?$"
+_EXACT_DIGITS = 15  # a decimal this short round-trips through a double
+
+
+def _coerce_batch(v, ty: str):
+    """``coerce_field`` over a column of trimmed plain values: ``(ok, bad,
+    json_text)`` where ``ok`` marks values coerced here, ``bad`` values that
+    fail with the spec's error, and neither the values left to the spec
+    (``None`` stands for an all-false mask)."""
+    import pyarrow.compute as pc
+
+    if ty == "string":
+        return pc.is_valid(v), None, pc.binary_join_element_wise('"', v, '"', "")
+    if ty == "boolean":
+        lower = pc.ascii_lower(v)
+        is_true = pc.equal(lower, "true")
+        ok = pc.or_(is_true, pc.equal(lower, "false"))
+        return ok, pc.invert(ok), pc.if_else(is_true, "true", "false")
+    parts = pc.extract_regex(v, _DECIMAL_PARTS)
+    sign, whole, frac = (parts.field(j) for j in range(3))
+    n_int, n_frac = pc.utf8_length(whole), pc.utf8_length(frac)
+    n_lead = pc.subtract(n_frac, pc.utf8_length(pc.ascii_ltrim(frac, characters="0")))
+    has_int = pc.greater(n_int, 0)
+    digits = pc.if_else(has_int, pc.add(n_int, n_frac), pc.subtract(n_frac, n_lead))
+    ok = pc.and_(
+        pc.and_(pc.match_substring_regex(v, _PLAIN_DECIMAL), pc.less_equal(digits, _EXACT_DIGITS)),
+        pc.or_(has_int, pc.less_equal(n_lead, 3)),  # >= 1e-4: repr stays positional
+    )
+    digits_text = pc.binary_join_element_wise(
+        pc.if_else(has_int, whole, "0"), pc.if_else(pc.greater(n_frac, 0), frac, "0"), "."
+    )
+    text = pc.binary_join_element_wise(pc.if_else(pc.equal(sign, "-"), "-", ""), digits_text, "")
+    return ok, pc.invert(pc.match_substring_regex(v, _JS_NUMBER_FORM)), text
+
+
+_ERRORS = {  # coerce_field's messages around the value
+    "number": ("Invalid number value '", "'"),
+    "boolean": ("Invalid boolean value '", "' (only true/false accepted)"),
+}
+
+
+def batch_kernel(opts: CsvOptions) -> BatchKernel | None:
+    """The vectorized half of :func:`parse_record`, for
+    :func:`outcome.parse_records`: maps a batch's ``rec`` column to
+    ``(handled, parsed_json, error)`` with ``pyarrow.compute``.
+
+    A line is handled when one RE2 match splits it into exactly as many
+    plain fields as there are headers (see ``_field_re``) and the first
+    field that is not plain (``_coerce_batch``) fails with the spec's exact
+    error. Plain values: any string; ``true``/``false`` in any case; ``""``
+    or a decimal without exponent of at most 15 significant digits that is
+    0 or at least 1e-4 (printed the way ``repr(float(v))`` prints it). Every
+    other line — radix, exponent or ``Infinity`` numbers, longer digit
+    strings, quote escapes, non-ASCII, field-count errors — is left to
+    :func:`parse_record`. ``None`` when no line can be handled (duplicate
+    header names, an empty delimiter).
+    """
+    headers, types = opts.resolved_headers, [t.lower() for t in opts.resolved_types]
+    if not opts.delimiter or len(set(headers)) != len(headers):
+        return None
+    field_re = _field_re(opts.delimiter)
+    line_re = (
+        "^"
+        + _re_chars(opts.delimiter).join(f"(?P<f{i}>{field_re})" for i in range(len(headers)))
+        + "$"
+    )
+    quoted = opts.delimiter == ","
+    keys = [(", " if i else "") + encode_basestring_ascii(h) + ": " for i, h in enumerate(headers)]
+
+    def kernel(rec):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        fields = pc.extract_regex(rec, line_re)
+        prefix = fields.is_valid()  # the line matched and every field so far coerced
+        body = pa.array([""] * len(rec), pa.string())
+        errors = []  # per field: its message where it is the first to fail
+        for i, (name, ty, key) in enumerate(zip(headers, types, keys)):
+            raw = fields.field(i)
+            if quoted:
+                raw = pc.if_else(pc.starts_with(raw, '"'), pc.utf8_slice_codeunits(raw, 1, -1), raw)
+            v = pc.ascii_trim(raw, characters=" ")
+            ok, bad, text = _coerce_batch(v, ty)
+            if bad is not None:
+                head, tail = _ERRORS[ty]
+                message = pc.binary_join_element_wise(f"Field '{name}': {head}", v, tail, "")
+                errors.append(pc.if_else(pc.and_kleene(prefix, bad), message, None))
+            prefix = pc.and_kleene(prefix, ok)
+            # grown field by field: pyarrow 16's null_handling="skip" join
+            # drops the rows whose pieces are all null
+            body = pc.if_else(prefix, pc.binary_join_element_wise(body, key, text, ""), body)
+        error = pc.coalesce(*errors) if errors else pa.nulls(len(rec), pa.string())
+        handled = pc.fill_null(pc.or_kleene(prefix, pc.is_valid(error)), False)
+        parsed = pc.binary_join_element_wise("{", body, "}", "")
+        return handled, parsed, error
+
+    return kernel
+
+
 def csv_parse(recdata: DataFrame, opts: CsvOptions) -> DataFrame:
     """Fidelity CSV parse of a recData frame (fileName, rec, recId).
 
     Output adds ``parsed_json`` (JSON text of the typed record — partial on
     failure), ``error``, ``statusText`` (SUCCESS | FAILED); see
-    :func:`outcome.parse_records`.
+    :func:`outcome.parse_records`. :func:`batch_kernel` parses the plain
+    lines, :func:`parse_record` the rest.
     """
     opts.resolve()
-    return parse_records(recdata, lambda rec: parse_record(rec, opts))
+    return parse_records(recdata, lambda rec: parse_record(rec, opts), kernel=batch_kernel(opts))
 
 
 _SPARK_TYPES = {"string": StringType(), "number": DoubleType(), "boolean": BooleanType()}

@@ -2,7 +2,8 @@
 
 The reference requires a client-supplied ``onEachRecord(recData, cb)``
 (README.md:63-84). Here it is a plain Python callable: it receives a dict
-``{fileName, rec, recId}`` and returns ``(payload_dict | None, error_str |
+``{fileName, rec, recId}`` of plain Python values (``recId`` an ``int``) and
+returns ``(payload_dict | None, error_str |
 None)``, which :func:`outcome.parse_records` maps to SUCCESS / FAILED /
 IGNORED. Exceptions raised by the hook mark the record FAILED with the
 exception text — the reference's throw-inside-onEachRecord path is FATAL

@@ -11,7 +11,8 @@ Reference semantics (lib/parsers.js:176-266), reproduced exactly:
     JS-fidelity type coercion with stop-on-first-error partial rows.
 
 Two paths, as with CSV:
-  - ``fw_parse`` — fidelity mapInPandas parse of a recData frame.
+  - ``fw_parse`` — fidelity per-record parse of a recData frame
+    (``outcome.parse_records``, a ``mapInArrow``).
   - ``fw_project_native`` — JVM-side ``substring``+``cast`` projection for
     well-formed data at scale (whole-stage codegen, no Python).
 """

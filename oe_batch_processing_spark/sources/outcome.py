@@ -25,6 +25,7 @@ from __future__ import annotations
 import json
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
+from typing import Any
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -42,52 +43,89 @@ PARSE_RESULT_EXTRA = [
 ]
 
 ParseResult = tuple[dict | None, str | None]
+# A parser's vectorized half: the ``rec`` column of one Arrow batch =>
+# (handled mask, parsed_json, error); values outside the mask are ignored.
+BatchKernel = Callable[[Any], tuple[Any, Any, Any]]
 
 
 def result_schema(base: StructType) -> StructType:
     return StructType(list(base.fields) + list(PARSE_RESULT_EXTRA))
 
 
+def _outcomes(parse_one: Callable[..., ParseResult], rows) -> tuple[list, list, list]:
+    parsed, errors, status = [], [], []
+    for values in rows:
+        payload, err = parse_one(*values)
+        if err is not None:
+            parsed.append(json.dumps(payload) if payload else "{}")
+            errors.append(str(err))
+            status.append(FAILED)
+        elif payload is None:
+            parsed.append("{}")
+            errors.append(None)
+            status.append(IGNORED)
+        else:
+            parsed.append(json.dumps(payload))
+            errors.append(None)
+            status.append(SUCCESS)
+    return parsed, errors, status
+
+
+def parse_batch(
+    batch,
+    parse_one: Callable[..., ParseResult],
+    fields: tuple[str, ...] = ("rec",),
+    kernel: BatchKernel | None = None,
+):
+    """One Arrow record batch of :func:`parse_records`: the batch with
+    ``parsed_json`` / ``error`` / ``statusText`` appended."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if kernel is None:
+        rest = batch
+    else:
+        handled, parsed, error = kernel(batch.column("rec"))
+        todo = pc.invert(handled)
+        rest = batch.filter(todo)
+    cols = _outcomes(parse_one, zip(*(rest.column(f).to_pylist() for f in fields)))
+    slow = [pa.array(c, pa.string()) for c in cols]
+    if kernel is None:
+        parsed, error, status = slow
+    else:
+        status = pc.if_else(pc.is_null(error), SUCCESS, FAILED)
+        if rest.num_rows:
+            parsed, error, status = (
+                pc.replace_with_mask(fast, todo, c)
+                for fast, c in zip((parsed, error, status), slow)
+            )
+    names = batch.schema.names + [f.name for f in PARSE_RESULT_EXTRA]
+    return pa.RecordBatch.from_arrays([*batch.columns, parsed, error, status], names=names)
+
+
 def parse_records(
     recdata: DataFrame,
     parse_one: Callable[..., ParseResult],
     fields: tuple[str, ...] = ("rec",),
+    kernel: BatchKernel | None = None,
 ) -> DataFrame:
     """Apply ``parse_one`` to every record of a recData frame (fileName, rec,
     recId) and add ``parsed_json`` / ``error`` / ``statusText``.
 
-    ``parse_one`` receives the values of ``fields`` for one record and
-    returns ``(payload, error)``, mapped per the contract above. Runs as an
-    Arrow-batched ``mapInPandas``: no shuffle, linear in input partitions.
+    ``parse_one`` receives the values of ``fields`` for one record, as plain
+    Python values, and returns ``(payload, error)``, mapped per the contract
+    above. Runs as a ``mapInArrow`` of :func:`parse_batch`: no shuffle,
+    linear in input partitions. With a ``kernel``, each batch goes through
+    it first and ``parse_one`` runs only on the records outside its mask;
+    the kernel must agree with ``parse_one`` on every record it handles
+    (its records are SUCCESS, or FAILED where it sets ``error``).
     """
-    schema = result_schema(recdata.schema)
 
     def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+        for batch in batches:
+            yield parse_batch(batch, parse_one, fields, kernel)
 
-        for pdf in batches:
-            parsed, errors, status = [], [], []
-            for values in zip(*(pdf[f] for f in fields)):
-                payload, err = parse_one(*values)
-                if err is not None:
-                    parsed.append(json.dumps(payload) if payload else "{}")
-                    errors.append(str(err))
-                    status.append(FAILED)
-                elif payload is None:
-                    parsed.append("{}")
-                    errors.append(None)
-                    status.append(IGNORED)
-                else:
-                    parsed.append(json.dumps(payload))
-                    errors.append(None)
-                    status.append(SUCCESS)
-            out = pdf.copy()
-            out["parsed_json"] = parsed
-            out["error"] = pd.array(errors, dtype="object")
-            out["statusText"] = status
-            yield out
-
-    return recdata.mapInPandas(run, schema=schema)
+    return recdata.mapInArrow(run, schema=result_schema(recdata.schema))
 
 
 @dataclass

@@ -248,6 +248,97 @@ def test_custom_parser_three_way(spark, tmp_path):
     )
 
 
+def test_custom_parser_gets_python_values(spark, tmp_path):
+    # the hook sees plain Python values, so it can put them in its payload
+    p = tmp_path / "ids.txt"
+    p.write_text("a\nb\n")
+
+    def on_each_record(rec_data):
+        assert type(rec_data["recId"]) is int
+        return {"id": rec_data["recId"], "rec": rec_data["rec"]}, None
+
+    res = run_ingest(spark, IngestJob(file_path=str(p), parser=on_each_record))
+    assert res.counts["successCount"] == 2
+    got = sorted(r["parsed_json"] for r in res.success.collect())
+    assert got == ['{"id": 1, "rec": "a"}', '{"id": 2, "rec": "b"}']
+
+
+def test_csv_long_radix_literal_is_infinity(spark, tmp_path):
+    # JS Number() of a hex literal past the largest double is Infinity; the
+    # record succeeds instead of failing the whole run
+    import json
+
+    p = tmp_path / "radix.csv"
+    p.write_text(f"k1,0x{'f' * 300}\nk2,-0b{'1' * 1100}\nk3,0x10\n")
+    job = IngestJob(
+        file_path=str(p),
+        parser="csv",
+        csv_options=CsvOptions(csv_headers="key,n", csv_header_data_types="string,number"),
+        ledger_dir=str(tmp_path / "ledger"),
+    )
+    res = run_ingest(spark, job)
+    assert res.counts == {"totalRecordCount": 3, "successCount": 3, "failureCount": 0}
+    payloads = {
+        r["fileRecordData"]["recId"]: (r["statusText"], r["payload"])
+        for r in read_status(spark, job.ledger_dir).collect()
+    }
+    assert payloads == {
+        1: ("SUCCESS", '{"key": "k1", "n": Infinity}'),
+        2: ("SUCCESS", '{"key": "k2", "n": -Infinity}'),
+        3: ("SUCCESS", '{"key": "k3", "n": 16.0}'),
+    }
+    assert json.loads(payloads[1][1])["n"] == math.inf
+    assert read_runs(spark, job.ledger_dir).collect()[0]["error"] is None
+
+
+def test_write_run_row_schema_and_values(spark, tmp_path):
+    # the BatchRun ledger keeps its columns, types, nullability and values
+    from pyspark.sql.types import _parse_datatype_string
+
+    from oe_batch_processing_spark.sinks.ledger import BatchRun, write_run
+
+    ledger_dir = str(tmp_path / "ledger")
+    runs = [
+        BatchRun(
+            batch_run_id="r1",
+            file_path="/data/in.csv",
+            options_json='{"parser": "csv", "sink": null}',
+            start_time_millis=1_700_000_000_000,
+            end_time_millis=1_700_000_000_250,
+            total_record_count=10,
+            success_count=9,
+            failure_count=1,
+        ),
+        BatchRun(
+            batch_run_id="r2",
+            file_path="/data/é \"quoted\".csv",
+            start_time_millis=5,
+            error="Invalid (numeric) header name '42'\n\tat line 1",
+        ),
+    ]
+    for run in runs:
+        write_run(spark, run, ledger_dir)
+    df = read_runs(spark, ledger_dir)
+    assert df.schema == _parse_datatype_string(
+        "batchRunId string, filePath string, options string, "
+        "startTimeMillis long, endTimeMillis long, durationMillis long, "
+        "totalRecordCount long, successCount long, failureCount long, "
+        "error string"
+    )
+    assert all(f.nullable for f in df.schema.fields)
+    got = sorted((tuple(r) for r in df.collect()), key=lambda r: r[0])
+    assert got == [
+        (
+            "r1", "/data/in.csv", '{"parser": "csv", "sink": null}',
+            1_700_000_000_000, 1_700_000_000_250, 250, 10, 9, 1, None,
+        ),
+        (
+            "r2", '/data/é "quoted".csv', "{}", 5, None, None, 0, 0, 0,
+            "Invalid (numeric) header name '42'\n\tat line 1",
+        ),
+    ]
+
+
 def test_fatal_records_run_error(spark, tmp_path):
     # config error mid-run: ledger captures the error, exception propagates
     p = tmp_path / "x.csv"

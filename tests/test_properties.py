@@ -116,6 +116,114 @@ def test_number_coercion_json_roundtrip(x):
     assert json.loads(json.dumps(v)) == float(x)
 
 
+# --- the CSV batch kernel equals the per-record spec -------------------------
+
+# Field texts around every edge of the kernel's plain subset: quoting, spaces,
+# escapes, non-ASCII, and each js_number form.
+_FIELD_ATOMS = [
+    "", " ", "a", " Z9 ", "a b", "true", "FALSE", " tRuE ", "fals", "0", "-0", "+0",
+    "00", "1.", ".5", ".", "-.5", "+", "-", "1.50", "0.0001", "-0.000100",
+    "0.00001", "1e5", "1E-3", "0x1F", "-0b101", "0o17", "Infinity", "-Infinity",
+    "123456789012345", "1234567890123456", "12345.6789012345", "0.000123456789012345",
+    "99999999999999.9", "1000000000000000000", "n/a1.5", "1_000", "\t1", "é", "'q'",
+    '"x"', '"a,b"', '" 12.5 "', '"true"', '"t\\"x"', "a'b", 'a"b', "\\", "1..2",
+    "Inf", "nan", ";", "|", '""', "$", "~",
+]
+
+
+def _spec_outcome(rec, opts):
+    payload, err = parse_record(rec, opts)
+    if err is not None:
+        return json.dumps(payload) if payload else "{}", err, "FAILED"
+    return json.dumps(payload), None, "SUCCESS"
+
+
+@given(
+    st.data(),
+    st.sampled_from([",", ",", ";", "\t", "||"]),
+    st.booleans(),
+    st.booleans(),
+)
+@settings(max_examples=150, deadline=None)
+def test_csv_batch_kernel_matches_parse_record(data, delimiter, extra_headers, extra_types):
+    """``outcome.parse_batch`` with the CSV kernel (vectorized lines plus
+    the per-record fallback) gives every line exactly what
+    ``parse_record`` + ``json.dumps`` gives it."""
+    import pyarrow as pa
+
+    from oe_batch_processing_spark.sources.csv_source import batch_kernel
+    from oe_batch_processing_spark.sources.outcome import parse_batch
+
+    n = data.draw(st.integers(min_value=1, max_value=5))
+    type_names = st.sampled_from(["string", "number", "boolean", "Number"])
+    n_types = n + data.draw(st.sampled_from([-1, 0, 0, 1])) if extra_types else n
+    opts = CsvOptions(
+        csv_headers=[f"h{i}" for i in range(n - 1)] + [data.draw(st.sampled_from(["last", 'q"é']))],
+        csv_header_data_types=data.draw(st.lists(type_names, min_size=n_types, max_size=n_types)),
+        delimiter=delimiter,
+        ignore_extra_headers=extra_headers,
+        ignore_extra_header_data_types=extra_types,
+    )
+    opts.resolve()
+    width = st.sampled_from([n, n, n, n - 1, n + 1]).filter(lambda w: w >= 1)
+    line = st.builds(
+        lambda k, atoms: delimiter.join(atoms[:k]),
+        width,
+        st.lists(st.sampled_from(_FIELD_ATOMS), min_size=n + 1, max_size=n + 1),
+    )
+    any_line = st.text(st.characters(blacklist_categories=("Cs",)), max_size=30)  # valid UTF-8
+    lines = data.draw(st.lists(line | any_line, min_size=1, max_size=40))
+    batch = pa.RecordBatch.from_pydict({"rec": pa.array(lines, pa.string())})
+    out = parse_batch(batch, lambda rec: parse_record(rec, opts), kernel=batch_kernel(opts))
+    got = list(zip(*(out.column(c).to_pylist() for c in ("parsed_json", "error", "statusText"))))
+    assert got == [_spec_outcome(rec, opts) for rec in lines]
+
+
+def test_csv_batch_kernel_handles_plain_lines_and_leaves_exotic_ones():
+    """Guard: the kernel parses every well-formed line of the benchmark
+    feed's shape (and its coercion failures) itself, and sends each form
+    outside its subset to ``parse_record``."""
+    import random
+
+    import pyarrow as pa
+
+    from oe_batch_processing_spark.sources.csv_source import batch_kernel
+
+    opts = CsvOptions(csv_headers="key,value,amount,flag", csv_header_data_types="string,string,number,boolean")
+    opts.resolve()
+    rng = random.Random(7)
+    plain = [
+        f'K{i:09d},"C{rng.randrange(100):02d},{rng.randrange(10000):04d}",'
+        f'{rng.uniform(0, 100000):.2f},{rng.choice(["true", "false"])}'
+        for i in range(2000)
+    ]
+    plain += ["K1,v,n/a12.50,true", "K2,,,", 'K3," v ", -0.5 ,TRUE', "K4,v,1,maybe"]
+    exotic = [
+        'K1,"C1,2,3.5,true',  # unterminated quote
+        "K1,v,0x1F,true",
+        "K1,v,0o17,true",
+        "K1,v,0b101,true",
+        "K1,v,1e5,true",
+        "K1,v,Infinity,true",
+        "K1,v,1234567890123456,true",
+        "K1,v,0.00001,true",
+        'K1,"a\\"b",1,true',  # backslash escape inside quotes
+        "K1,'v',1,true",  # single-quoted field
+        "K1,é,1,true",
+        "K1,v\t,1,true",
+        "K1,v,1,true,extra",
+        "K1,v,1",
+    ]
+    kernel = batch_kernel(opts)
+    assert [len(a) for a in kernel(pa.array([], pa.string()))] == [0, 0, 0]
+    handled, parsed, error = kernel(pa.array(plain + exotic, pa.string()))
+    mask = handled.to_pylist()
+    assert mask[: len(plain)] == [True] * len(plain)
+    assert mask[len(plain) :] == [False] * len(exotic)
+    for rec, got_json, got_err in zip(plain, parsed.to_pylist(), error.to_pylist()):
+        assert (got_json, got_err, "FAILED" if got_err else "SUCCESS") == _spec_outcome(rec, opts)
+
+
 # --- rolling-hash fingerprint algebra ---------------------------------------
 
 def _rh(s: str, base: int = 257, mod: int = 2_147_483_647) -> int:
