@@ -209,9 +209,8 @@ def bench_ingest(spark, timings: dict[str, float]) -> None:
     (BASELINE.md: 1,000 records in 25,918 ms, REST round-trip bound).
     100k-row CSV through the full engine lifecycle (scan -> fidelity parse
     -> route -> counts), and through the JVM-native scan path."""
-    import tempfile
-
     from oe_batch_processing_spark.engine import IngestJob, run_ingest
+    from oe_batch_processing_spark.session import scratch_dir
     from oe_batch_processing_spark.sources.csv_source import (
         CsvOptions,
         csv_scan_native,
@@ -219,37 +218,41 @@ def bench_ingest(spark, timings: dict[str, float]) -> None:
     from oe_batch_processing_spark.sources.outcome import route_native
 
     n = 100_000
-    d = tempfile.mkdtemp(prefix="oebp-bench-")
-    path = os.path.join(d, "batch.csv")
-    with open(path, "w") as f:
-        for i in range(n):
-            f.write(f'K{i:07d},"V,{i:07d}"\n')
+    with scratch_dir("oebp-bench-") as d:
+        path = os.path.join(d, "batch.csv")
+        with open(path, "w") as f:
+            for i in range(n):
+                f.write(f'K{i:07d},"V,{i:07d}"\n')
 
-    t0 = time.time()
-    res = run_ingest(
-        spark,
-        IngestJob(
-            file_path=path,
-            parser="csv",
-            csv_options=CsvOptions(csv_headers="key, value"),
-            exact_line_numbers=False,
-        ),
-    )
-    assert res.counts["totalRecordCount"] == n
-    timings["ingest_csv_100k_fidelity"] = round(time.time() - t0, 3)
+        t0 = time.time()
+        res = run_ingest(
+            spark,
+            IngestJob(
+                file_path=path,
+                parser="csv",
+                csv_options=CsvOptions(csv_headers="key, value"),
+                exact_line_numbers=False,
+            ),
+        )
+        assert res.counts["totalRecordCount"] == n
+        timings["ingest_csv_100k_fidelity"] = round(time.time() - t0, 3)
 
-    t0 = time.time()
-    scan = csv_scan_native(spark, path, CsvOptions(csv_headers="key, value"))
-    # Spark disallows aggregating ONLY the corrupt-record column of a raw
-    # scan; cache the parsed frame first (what a real dual-channel write
-    # does anyway).
-    scan = scan.cache()
-    routed = route_native(scan)
-    # the counters ride the first action over the channels
-    routed.non_ignored.write.format("noop").mode("overwrite").save()
-    assert routed.counts()["totalRecordCount"] == n
-    timings["ingest_csv_100k_native"] = round(time.time() - t0, 3)
-    scan.unpersist()
+        t0 = time.time()
+        scan = csv_scan_native(
+            spark, path, CsvOptions(csv_headers="key, value")
+        )
+        # Spark disallows aggregating ONLY the corrupt-record column of a raw
+        # scan; cache the parsed frame first (what a real dual-channel write
+        # does anyway).
+        scan = scan.cache()
+        try:
+            routed = route_native(scan)
+            # the counters ride the first action over the channels
+            routed.non_ignored.write.format("noop").mode("overwrite").save()
+            assert routed.counts()["totalRecordCount"] == n
+            timings["ingest_csv_100k_native"] = round(time.time() - t0, 3)
+        finally:
+            scan.unpersist()
 
 
 def main() -> None:

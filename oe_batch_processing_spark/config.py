@@ -1,46 +1,29 @@
 """Layered engine configuration (reference O15).
 
 The reference resolves each knob as env var > ``batch-config.json`` > default
-(lib/batchProcessing.js:74-102; README.md:198-213). Same layering here, with
-the reference's knob names kept for parity where they still mean something in
-the Spark model:
+(lib/batchProcessing.js:74-102; README.md:198-213). Same layering here for
+the one knob the engine reads:
 
-  - ``maxConcurrent`` / ``minTime``: rate limits for the external REST sink
-    (sinks/rest_sink.py). Irrelevant to native writers.
-  - ``maxQueueSize``: superseded by Spark's lazy partition pull; retained for
-    the REST sink's per-executor bounded buffer.
-  - ``batchResultLogItems``: extra columns preserved in BatchStatus rows.
-  - ``progressInterval``: progress reporting cadence (plans/progress.py).
-  - ``appBaseURL`` / ``modelAPI``: REST sink routing defaults (payload-level
-    values override them per record, reference lib/batchProcessing.js:610,632).
+  - ``batchResultLogItems`` (env ``BATCH_RESULT_LOG_ITEMS``, a comma list):
+    extra columns preserved in BatchStatus rows.
+
+The REST throttle and routing values (``maxConcurrent``, ``minTime``,
+``appBaseURL``, ``modelAPI``) live in ``sinks.rest_sink.RestSinkOptions``,
+which is what the REST sink reads. The reference's queue bound and progress
+cadence have no knob: Spark pulls partitions lazily, and
+``plans.progress.ProgressReporter`` takes its interval as an argument.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass, field, fields
+from dataclasses import dataclass, field
 
 
 @dataclass
 class EngineConfig:
-    max_concurrent: int = 80
-    min_time_ms: int = 20
-    max_queue_size: int = 50000
     batch_result_log_items: list[str] = field(default_factory=list)
-    progress_interval_ms: int = 10000
-    app_base_url: str | None = None
-    model_api: str | None = None
-
-    _ENV = {
-        "max_concurrent": "MAX_CONCURRENT",
-        "min_time_ms": "MIN_TIME",
-        "max_queue_size": "MAX_QUEUE_SIZE",
-        "batch_result_log_items": "BATCH_RESULT_LOG_ITEMS",
-        "progress_interval_ms": "PROGRESS_INTERVAL",
-        "app_base_url": "APP_BASE_URL",
-        "model_api": "MODEL_API",
-    }
 
     @classmethod
     def load(
@@ -48,35 +31,19 @@ class EngineConfig:
     ) -> "EngineConfig":
         """Resolve env > config file > defaults (> explicit overrides last,
         for programmatic callers)."""
-        # the reference's batch-config.json key names (README.md:198-213)
-        aliases = {
-            "max_concurrent": "maxConcurrent",
-            "min_time_ms": "minTime",
-            "max_queue_size": "maxQueueSize",
-            "batch_result_log_items": "batchResultLogItems",
-            "progress_interval_ms": "progressInterval",
-            "app_base_url": "appBaseURL",
-            "model_api": "modelAPI",
-        }
         values: dict = {}
         if config_file and os.path.exists(config_file):
             with open(config_file) as f:
                 file_cfg = json.load(f)
-            for fld in fields(cls):
-                if fld.name.startswith("_"):
-                    continue
-                if fld.name in file_cfg:  # snake_case form
-                    values[fld.name] = file_cfg[fld.name]
-                elif aliases.get(fld.name) in file_cfg:  # reference form
-                    values[fld.name] = file_cfg[aliases[fld.name]]
-        for name, env_key in cls._ENV.items():
-            if env_key in os.environ:
-                raw = os.environ[env_key]
-                if name == "batch_result_log_items":
-                    values[name] = [x.strip() for x in raw.split(",") if x.strip()]
-                elif name in ("app_base_url", "model_api"):
-                    values[name] = raw
-                else:
-                    values[name] = int(raw)
+            # snake_case form, or the reference's batch-config.json key
+            for key in ("batch_result_log_items", "batchResultLogItems"):
+                if key in file_cfg:
+                    values["batch_result_log_items"] = file_cfg[key]
+                    break
+        raw = os.environ.get("BATCH_RESULT_LOG_ITEMS")
+        if raw is not None:
+            values["batch_result_log_items"] = [
+                x.strip() for x in raw.split(",") if x.strip()
+            ]
         values.update(overrides or {})
         return cls(**values)

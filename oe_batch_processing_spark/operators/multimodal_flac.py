@@ -29,7 +29,8 @@ coding) — the three classes of audio codec.
 
 Scale: one mapInPandas over the bounded round-robin fan-out (same plan
 contract as every codec pipeline): per-file O(samples) vectorized
-residual/cost math + an O(compressed bits) Python bit writer/reader,
+residual/cost math + O(compressed bits) coding through the shared
+MSB-first bit writer/reader (``bitio``),
 embarrassingly parallel across files, no shuffle beyond the single
 bounded Exchange. On a real corpus the source is a binaryFile scan of
 audio blobs whose file splits already parallelize.
@@ -42,21 +43,12 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oe_batch_processing_spark.operators.bitio import MsbReader, MsbWriter
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.tables import load_table
 
 FRAME = 16  # samples per frame (small so every test file has many frames)
 MAX_ORDER = 3
-
-# Fixed-predictor residual coefficient rows (RFC 9639 §9.2.2): residual of
-# order o at position i is sum_j COEF[o][j] * x[i-j].
-_COEFS = [
-    [1],
-    [1, -1],
-    [1, -2, 1],
-    [1, -3, 3, -1],
-]
-
 
 def _zigzag(r):
     """Fold signed residuals to non-negative (FLAC's Rice mapping)."""
@@ -70,66 +62,6 @@ def _rice_k(a_sum: int, n: int) -> int:
     (0 when the mean is below 1). Matches the oracle's LENGTH(bin(q))-1."""
     q = a_sum // n
     return q.bit_length() - 1 if q >= 1 else 0
-
-
-class _BitWriter:
-    __slots__ = ("buf", "acc", "n")
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, value: int, bits: int) -> None:
-        self.acc = (self.acc << bits) | (value & ((1 << bits) - 1))
-        self.n += bits
-        while self.n >= 8:
-            self.n -= 8
-            self.buf.append((self.acc >> self.n) & 0xFF)
-        self.acc &= (1 << self.n) - 1
-
-    def write_unary(self, q: int) -> None:
-        # q zeros then a terminating 1 (MSB-first)
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)
-
-    def bits_written(self) -> int:
-        return 8 * len(self.buf) + self.n
-
-    def finish(self) -> bytes:
-        if self.n:
-            self.buf.append((self.acc << (8 - self.n)) & 0xFF)
-            self.acc = 0
-            self.n = 0
-        return bytes(self.buf)
-
-
-class _BitReader:
-    __slots__ = ("b", "pos")
-
-    def __init__(self, b: bytes) -> None:
-        self.b = b
-        self.pos = 0
-
-    def read(self, bits: int) -> int:
-        out = 0
-        for _ in range(bits):
-            byte = self.b[self.pos >> 3]
-            out = (out << 1) | ((byte >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return out
-
-    def read_unary(self) -> int:
-        q = 0
-        while True:
-            byte = self.b[self.pos >> 3]
-            bit = (byte >> (7 - (self.pos & 7))) & 1
-            self.pos += 1
-            if bit:
-                return q
-            q += 1
 
 
 def _frame_plan(frame):
@@ -160,7 +92,7 @@ def flac_lite_encode(samples) -> tuple[bytes, int, list[tuple[int, int, int]]]:
     import numpy as np
 
     n_frames = len(samples) // FRAME
-    w = _BitWriter()
+    w = MsbWriter()
     plans = []
     for f in range(n_frames):
         frame = np.asarray(samples[f * FRAME:(f + 1) * FRAME], dtype=np.int64)
@@ -176,21 +108,21 @@ def flac_lite_encode(samples) -> tuple[bytes, int, list[tuple[int, int, int]]]:
             res = np.diff(res)
         for z in _zigzag(res):
             z = int(z)
-            w.write_unary(z >> k)
-            if k:
-                w.write(z & ((1 << k) - 1), k)
+            w.unary(z >> k)
+            w.write(z, k)  # the low k bits
         if w.bits_written() - start != bits:
             raise ValueError(
                 f"bit accounting drift: wrote {w.bits_written() - start}, "
                 f"planned {bits}"
             )
     total_bits = w.bits_written()
-    return w.finish(), total_bits, plans
+    return w.flush(), total_bits, plans
 
 
 def flac_lite_decode(stream: bytes, n_frames: int):
-    """Parse the bitstream back to samples (list of ints, n_frames*FRAME)."""
-    r = _BitReader(stream)
+    """Parse the bitstream back to samples (list of ints, n_frames*FRAME).
+    A stream that ends early raises ValueError("bitstream exhausted")."""
+    r = MsbReader(stream)
     out = []
     for _ in range(n_frames):
         o = r.read(2)
@@ -203,8 +135,8 @@ def flac_lite_decode(stream: bytes, n_frames: int):
             frame.append(v - 65536 if v >= 32768 else v)
         seq = []
         for _ in range(FRAME - o):
-            q = r.read_unary()
-            z = (q << k) | (r.read(k) if k else 0)
+            q = r.unary()
+            z = (q << k) | r.read(k)
             seq.append((z >> 1) if z % 2 == 0 else -((z + 1) >> 1))
         # seq is the o-th difference sequence D^o; integrate back down.
         # D^m[0] comes from the warmup prefix (m < o), and

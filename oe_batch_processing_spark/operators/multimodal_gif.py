@@ -20,13 +20,12 @@ Grammar implemented for real:
 * LZW image data: variable code width starting at min_code_size+1,
   Clear/EOI codes, dict growth to 4095 with mid-stream Clear re-emission
   (the encoder clears whenever the table fills, so multi-KB rasters
-  exercise the reset path), LSB-first bit packing (the OPPOSITE bit
-  order of JPEG's entropy stream), 255-byte sub-block framing.
+  exercise the reset path), LSB-first bit packing through the shared
+  ``bitio`` reader/writer (the OPPOSITE bit order of JPEG's entropy
+  stream), 255-byte sub-block framing.
 
 Reference scope note: the reference engine (SURVEY.md §2.1) has no media
-path; this extends the §2.2 multimodal family. Since round 9 no codec
-stub remains: H.264 I-PCM, TIFF and literal-only-VP8L WebP all decode
-for real (multimodal_h264.py, multimodal_tiff.py, multimodal_webp.py).
+path; this extends the §2.2 multimodal family.
 
 Scale: identical shape to the PNG/BMP/JPEG transcodes — two chained
 mapInPandas stages over a bounded fan-out of raw rows; per-file work is
@@ -41,6 +40,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oe_batch_processing_spark.operators.bitio import LsbReader, LsbWriter
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.tables import load_table
 
@@ -57,61 +57,37 @@ def _interlace_order(h: int) -> list[int]:
     )
 
 
-class _LsbBitWriter:
-    """LSB-first bit packer (GIF's LZW bit order)."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, code: int, width: int) -> None:
-        self.acc |= code << self.n
-        self.n += width
-        while self.n >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.n -= 8
-
-    def flush(self) -> bytes:
-        if self.n:
-            self.out.append(self.acc & 0xFF)
-            self.acc = 0
-            self.n = 0
-        return bytes(self.out)
-
-
 def _lzw_compress(data: bytes, mcs: int = _MCS) -> bytes:
     """GIF-variant LZW: emits Clear first, re-emits Clear when the table
     reaches 4096 entries, ends with EOI; variable code width grows when
     the next code would not fit."""
     clear = 1 << mcs
     eoi = clear + 1
-    w = _LsbBitWriter()
+    w = LsbWriter()
 
     def reset():
         return {bytes([i]): i for i in range(clear)}, eoi + 1, mcs + 1
 
     table, next_code, width = reset()
-    w.put(clear, width)
+    w.write(clear, width)
     prefix = b""
     for byte in data:
         cand = prefix + bytes([byte])
         if cand in table:
             prefix = cand
             continue
-        w.put(table[prefix], width)
+        w.write(table[prefix], width)
         table[cand] = next_code
         next_code += 1
         if next_code == (1 << width) + 1 and width < 12:
             width += 1
         if next_code > 4095:
-            w.put(clear, width)
+            w.write(clear, width)
             table, next_code, width = reset()
         prefix = bytes([byte])
     if prefix:
-        w.put(table[prefix], width)
-    w.put(eoi, width)
+        w.write(table[prefix], width)
+    w.write(eoi, width)
     return w.flush()
 
 
@@ -122,22 +98,12 @@ def _lzw_decompress(data: bytes, mcs: int = _MCS) -> bytes:
     clear = 1 << mcs
     eoi = clear + 1
     out = bytearray()
-    acc = 0
-    nbits = 0
-    pos = 0
+    read = LsbReader(data).read
     width = mcs + 1
     table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
     prev: bytes | None = None
     while True:
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("truncated LZW stream (no EOI)")
-            acc |= data[pos] << nbits
-            pos += 1
-            nbits += 8
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
+        code = read(width)  # a stream without EOI runs out here
         if code == clear:
             table = [bytes([i]) for i in range(clear)] + [b"", b""]
             width = mcs + 1

@@ -10,7 +10,11 @@ emulation-prevention-byte insertion — and a decoder that walks the start
 codes, validates every NAL header bit, parses SPS/PPS/slice headers field
 by field (ue(v)/se(v) Exp-Golomb, fixed-width frame_num), strips and
 validates emulation prevention, enforces the pcm alignment zero bits and
-rbsp_trailing_bits, and reconstructs the exact samples.
+rbsp_trailing_bits, and reconstructs the exact samples. Bits go through
+the shared MSB-first reader/writer of ``bitio``; emulation prevention is
+a byte pass over each NAL payload (:func:`add_emulation` /
+:func:`strip_emulation`), and the RBSP syntax (trailing bits, PCM
+alignment, raw sample bytes) is functions over the reader.
 
 Why I-PCM makes the full hash oracle possible: PCM macroblocks carry the
 samples verbatim (spec clause 8.3.5: no prediction, no transform, no
@@ -33,11 +37,7 @@ hash even when totals survive; w/h come from the parsed SPS, n_nals from
 the start-code walk (must equal n_frames + SPS + PPS).
 
 Reference scope: the reference engine (SURVEY.md §2.1) has no media path;
-this completes the §2.2 multimodal family (PNG, BMP, JPEG, JPEG-4:2:0,
-GIF, netpbm, WAV, AIFF, FLAC-lite, μ-law, ADPCM, MJPEG/AVI — and now
-H.264 I-PCM — and, later the same round, TIFF (multimodal_tiff.py),
-exact box resize (multimodal.resize_box) and literal-only-VP8L WebP
-(multimodal_webp.py): no capability stubs remain).
+this extends the §2.2 multimodal family.
 
 Scale: identical shape to the MJPEG/AVI pipeline — one groupBy shuffle on
 the stream id (the natural unit a video training corpus shards by), a
@@ -55,115 +55,39 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oe_batch_processing_spark.operators.bitio import MsbReader, MsbWriter
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.tables import load_table
 
-FRAMES_PER_STREAM = 8   # grouping rule for the oracled corpus
 MB_BYTES = 384          # 256 luma + 64 Cb + 64 Cr (4:2:0, 8-bit)
 ZERO_RUN = 8            # leading luma zeros in each stream's first MB
 
 
-# --- bit I/O ------------------------------------------------------------------
+# --- RBSP syntax over the shared bit reader/writer ---------------------------
 
 
-class BitWriter:
-    """MSB-first bit writer (H.264 bit order)."""
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        for i in range(nbits - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.nbits += 1
-            if self.nbits == 8:
-                self.buf.append(self.acc)
-                self.acc = 0
-                self.nbits = 0
-
-    def ue(self, value: int) -> None:
-        """Unsigned Exp-Golomb: (leading zeros) + binary(value+1)."""
-        v = value + 1
-        n = v.bit_length()
-        self.write(0, n - 1)
-        self.write(v, n)
-
-    def se(self, value: int) -> None:
-        """Signed Exp-Golomb: k = 2v-1 for v>0, -2v for v<=0."""
-        self.ue(2 * value - 1 if value > 0 else -2 * value)
-
-    def align_zero(self) -> None:
-        """pcm_alignment_zero_bit: zeros to the next byte boundary."""
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-    def write_bytes(self, b: bytes) -> None:
-        if self.nbits:
-            raise ValueError("write_bytes on unaligned writer")
-        self.buf.extend(b)
-
-    def trailing(self) -> bytes:
-        """rbsp_trailing_bits: stop bit then zero-pad; returns the RBSP."""
-        self.write(1, 1)
-        self.align_zero()
-        return bytes(self.buf)
+def write_trailing_bits(w: MsbWriter) -> bytes:
+    """rbsp_trailing_bits: stop bit then zero-pad; returns the RBSP."""
+    w.write(1, 1)
+    return w.flush()
 
 
-class BitReader:
-    """MSB-first bit reader with exhaustion checks."""
+def read_trailing_bits(r: MsbReader) -> None:
+    """rbsp_trailing_bits: stop bit, zero pad, then nothing."""
+    if r.read(1) != 1:
+        raise ValueError("missing rbsp stop bit")
+    if r.read(r.remaining() % 8) != 0:
+        raise ValueError("nonzero rbsp trailing bit")
+    if r.remaining():
+        raise ValueError("trailing bytes after rbsp_trailing_bits")
 
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0  # bit position
 
-    def read(self, nbits: int) -> int:
-        if self.pos + nbits > 8 * len(self.data):
-            raise ValueError("bitstream exhausted")
-        v = 0
-        for _ in range(nbits):
-            byte = self.data[self.pos >> 3]
-            v = (v << 1) | ((byte >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return v
-
-    def ue(self) -> int:
-        zeros = 0
-        while self.read(1) == 0:
-            zeros += 1
-            if zeros > 31:
-                raise ValueError("Exp-Golomb prefix too long")
-        return (1 << zeros) - 1 + self.read(zeros) if zeros else 0
-
-    def se(self) -> int:
-        k = self.ue()
-        return (k + 1) // 2 if k % 2 else -(k // 2)
-
-    def align_check_zero(self) -> None:
-        """Consume pcm_alignment_zero_bit run; each must be zero."""
-        while self.pos & 7:
-            if self.read(1) != 0:
-                raise ValueError("nonzero pcm_alignment_zero_bit")
-
-    def read_bytes(self, n: int) -> bytes:
-        if self.pos & 7:
-            raise ValueError("read_bytes on unaligned reader")
-        start = self.pos >> 3
-        if start + n > len(self.data):
-            raise ValueError("PCM samples truncated")
-        self.pos += 8 * n
-        return self.data[start:start + n]
-
-    def trailing(self) -> None:
-        """rbsp_trailing_bits: stop bit, zero pad, then nothing."""
-        if self.read(1) != 1:
-            raise ValueError("missing rbsp stop bit")
-        while self.pos & 7:
-            if self.read(1) != 0:
-                raise ValueError("nonzero rbsp trailing bit")
-        if self.pos != 8 * len(self.data):
-            raise ValueError("trailing bytes after rbsp_trailing_bits")
+def read_pcm_samples(r: MsbReader, n: int) -> bytes:
+    """The pcm_alignment_zero_bit run (each must be zero), then n raw
+    sample bytes."""
+    if r.read(r.remaining() % 8) != 0:
+        raise ValueError("nonzero pcm_alignment_zero_bit")
+    return r.read(8 * n).to_bytes(n, "big")
 
 
 # --- emulation prevention (RBSP <-> EBSP) -------------------------------------
@@ -222,7 +146,7 @@ def _nal(nal_type: int, rbsp: bytes, long_start: bool) -> bytes:
 def encode_sps(mb_w: int, mb_h: int) -> bytes:
     """Baseline SPS (profile_idc 66, level 1.0, pic_order_cnt_type 2,
     frame_mbs_only)."""
-    w = BitWriter()
+    w = MsbWriter()
     w.write(66, 8)   # profile_idc: Baseline
     w.write(0, 8)    # constraint flags + reserved_zero_2bits
     w.write(10, 8)   # level_idc 1.0
@@ -237,11 +161,11 @@ def encode_sps(mb_w: int, mb_h: int) -> bytes:
     w.write(1, 1)    # direct_8x8_inference_flag
     w.write(0, 1)    # frame_cropping_flag
     w.write(0, 1)    # vui_parameters_present_flag
-    return w.trailing()
+    return write_trailing_bits(w)
 
 
 def encode_pps() -> bytes:
-    w = BitWriter()
+    w = MsbWriter()
     w.ue(0)          # pic_parameter_set_id
     w.ue(0)          # seq_parameter_set_id
     w.write(0, 1)    # entropy_coding_mode_flag (CAVLC)
@@ -257,14 +181,14 @@ def encode_pps() -> bytes:
     w.write(0, 1)    # deblocking_filter_control_present_flag
     w.write(0, 1)    # constrained_intra_pred_flag
     w.write(0, 1)    # redundant_pic_cnt_present_flag
-    return w.trailing()
+    return write_trailing_bits(w)
 
 
 def encode_idr_ipcm(mbs: list[bytes]) -> bytes:
     """One IDR slice covering the whole picture, every macroblock I_PCM
     (mb_type 25): slice header, then per MB the mb_type, the alignment
     zero bits, and the raw 384 sample bytes."""
-    w = BitWriter()
+    w = MsbWriter()
     w.ue(0)          # first_mb_in_slice
     w.ue(7)          # slice_type 7: I (all slices in picture are I)
     w.ue(0)          # pic_parameter_set_id
@@ -277,9 +201,9 @@ def encode_idr_ipcm(mbs: list[bytes]) -> bytes:
         if len(mb) != MB_BYTES:
             raise ValueError(f"I_PCM macroblock must be {MB_BYTES} bytes")
         w.ue(25)     # mb_type: I_PCM
-        w.align_zero()           # pcm_alignment_zero_bit
-        w.write_bytes(mb)        # pcm_sample_luma + chroma, 8-bit
-    return w.trailing()
+        w.align()                # pcm_alignment_zero_bit
+        w.out += mb              # pcm_sample_luma + chroma, 8-bit
+    return write_trailing_bits(w)
 
 
 def mux_annexb(mb_w: int, mb_h: int, frames: list[list[bytes]]) -> bytes:
@@ -327,7 +251,7 @@ def split_annexb(b: bytes) -> list[bytes]:
 
 
 def parse_sps(rbsp: bytes) -> tuple[int, int]:
-    r = BitReader(rbsp)
+    r = MsbReader(rbsp)
     profile = r.read(8)
     if profile != 66:
         raise ValueError(f"expected Baseline profile 66, got {profile}")
@@ -350,12 +274,12 @@ def parse_sps(rbsp: bytes) -> tuple[int, int]:
         raise ValueError("frame cropping unsupported")
     if r.read(1) != 0:
         raise ValueError("VUI unsupported")
-    r.trailing()
+    read_trailing_bits(r)
     return mb_w, mb_h
 
 
 def parse_pps(rbsp: bytes) -> None:
-    r = BitReader(rbsp)
+    r = MsbReader(rbsp)
     if r.ue() != 0 or r.ue() != 0:
         raise ValueError("unexpected PPS/SPS id")
     if r.read(1) != 0:
@@ -367,11 +291,11 @@ def parse_pps(rbsp: bytes) -> None:
     r.read(1), r.read(2)
     r.se(), r.se(), r.se()
     r.read(1), r.read(1), r.read(1)
-    r.trailing()
+    read_trailing_bits(r)
 
 
 def parse_idr_ipcm(rbsp: bytes, n_mbs: int) -> list[bytes]:
-    r = BitReader(rbsp)
+    r = MsbReader(rbsp)
     if r.ue() != 0:
         raise ValueError("first_mb_in_slice != 0")
     st = r.ue()
@@ -389,9 +313,8 @@ def parse_idr_ipcm(rbsp: bytes, n_mbs: int) -> list[bytes]:
         mb_type = r.ue()
         if mb_type != 25:
             raise ValueError(f"expected I_PCM mb_type 25, got {mb_type}")
-        r.align_check_zero()
-        mbs.append(r.read_bytes(MB_BYTES))
-    r.trailing()
+        mbs.append(read_pcm_samples(r, MB_BYTES))
+    read_trailing_bits(r)
     return mbs
 
 

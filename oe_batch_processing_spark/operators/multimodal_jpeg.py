@@ -6,8 +6,11 @@ hand-written from the public spec: a baseline sequential DCT encoder
 run-length-AC Huffman entropy coding with byte stuffing and restart
 markers, full JFIF marker grammar) and a decoder that re-parses the
 marker stream (DQT/DHT/SOF0/DRI/SOS), rebuilds canonical Huffman tables
-FROM THE FILE, entropy-decodes with 0xFF00 unstuffing and RSTn predictor
-resets, dequantizes, inverse-DCTs, and reconstructs pixels.
+FROM THE FILE, entropy-decodes with RSTn predictor resets, dequantizes,
+inverse-DCTs, and reconstructs pixels. Byte stuffing and restart markers
+are a byte pass over the entropy-coded segment (:func:`stuff_scan` /
+:func:`unstuff_scan`); the bits inside each restart interval go through
+the shared MSB-first reader/writer and canonical code of ``bitio``.
 
 Hash-oracle strategy (same discipline as multimodal_png_decode): the
 oracled corpus is built from 8x8-FLAT blocks, where baseline JPEG is
@@ -40,11 +43,8 @@ decoder builds its tables from the DHT segments in the file, so the
 encoder/decoder pair proves the grammar, and the spec tables are carried
 for fidelity.
 
-Reference scope note: the reference engine (SURVEY.md §2.1,
-/root/reference/lib/batchProcessing.js) has no media path at all; this
-operator extends the §2.2 multimodal family the harness demands. After
-this, and round 9 retired the H.264 stub too (I-PCM baseline Annex-B,
-multimodal_h264.py) — no codec stubs remain.
+Reference scope note: the reference engine (SURVEY.md §2.1) has no media
+path; this extends the §2.2 multimodal family.
 
 Scale: two chained mapInPandas stages, embarrassingly parallel across
 files; per-file work is O(pixels) + O(blocks) Huffman bits. The only
@@ -58,10 +58,16 @@ is unchanged.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from itertools import chain, repeat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oe_batch_processing_spark.operators.bitio import (
+    MsbReader,
+    MsbWriter,
+    PrefixCode,
+)
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.tables import load_table
 
@@ -127,78 +133,31 @@ def _dct_matrix():
     return c
 
 
-def _build_encode_table(bits: list[int], vals: list[int]) -> dict:
-    """Canonical Huffman: symbol -> (code, length). Validates the Kraft
-    inequality implied by the bits array (a malformed table overflows)."""
-    out: dict[int, tuple[int, int]] = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            if code >= (1 << length):
-                raise ValueError("huffman bits overflow code space")
-            out[vals[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
-    return out
+def _huffman_code(bits: list[int], vals: list[int]) -> PrefixCode:
+    """The canonical code of a DHT table: BITS counts the codes of each
+    length 1..16, HUFFVAL lists the symbols in code order."""
+    lengths = list(chain.from_iterable(map(repeat, range(1, 17), bits)))
+    return PrefixCode(vals, lengths)
 
 
-def _build_decode_table(bits: list[int], vals: list[int]) -> dict:
-    """(length, code) -> symbol, from the same canonical construction."""
-    out: dict[tuple[int, int], int] = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            if code >= (1 << length):
-                raise ValueError("huffman bits overflow code space")
-            out[(length, code)] = vals[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return out
+# the encoder's symbol -> (code, length) maps for the Annex K tables
+_DC_LUM_CODES = _huffman_code(DC_LUM_BITS, DC_LUM_VALS).codes()
+_AC_LUM_CODES = _huffman_code(AC_LUM_BITS, AC_LUM_VALS).codes()
+_DC_CHR_CODES = _huffman_code(DC_CHR_BITS, DC_CHR_VALS).codes()
 
 
 def _category(v: int) -> int:
     return int(abs(v)).bit_length()
 
 
-class _BitWriter:
-    """MSB-first bit accumulator with JPEG byte stuffing (0xFF -> 0xFF00).
-    Whole codes are appended at once and bytes drained in a batch —
-    per-bit Python loops were the encoder hot spot."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.n += length
-        while self.n >= 8:
-            self.n -= 8
-            b = (self.acc >> self.n) & 0xFF
-            self.out.append(b)
-            if b == 0xFF:
-                self.out.append(0x00)
-        self.acc &= (1 << self.n) - 1
-
-    def align(self) -> None:
-        """Pad to a byte boundary with 1-bits (spec rule before markers)."""
-        if self.n:
-            self.put((1 << (8 - self.n)) - 1, 8 - self.n)
-
-
 def _encode_block(zz: list[int], pred: int, dc_tab: dict, ac_tab: dict,
-                  w: _BitWriter) -> int:
+                  w: MsbWriter) -> int:
     diff = zz[0] - pred
     s = _category(diff)
     code, length = dc_tab[s]
-    w.put(code, length)
+    w.write(code, length)
     if s:
-        w.put(diff if diff > 0 else diff + (1 << s) - 1, s)
+        w.write(diff if diff > 0 else diff + (1 << s) - 1, s)
     run = 0
     last_nz = 0
     for k in range(63, 0, -1):
@@ -211,17 +170,64 @@ def _encode_block(zz: list[int], pred: int, dc_tab: dict, ac_tab: dict,
             continue
         while run > 15:
             code, length = ac_tab[0xF0]  # ZRL
-            w.put(code, length)
+            w.write(code, length)
             run -= 16
         s = _category(zz[k])
         code, length = ac_tab[(run << 4) | s]
-        w.put(code, length)
-        w.put(zz[k] if zz[k] > 0 else zz[k] + (1 << s) - 1, s)
+        w.write(code, length)
+        w.write(zz[k] if zz[k] > 0 else zz[k] + (1 << s) - 1, s)
         run = 0
     if last_nz != 63:
         code, length = ac_tab[0x00]  # EOB
-        w.put(code, length)
+        w.write(code, length)
     return zz[0]
+
+
+def stuff_scan(intervals: list[bytes]) -> bytes:
+    """The entropy-coded segment from each restart interval's bytes: every
+    0xFF gets a stuffed 0x00, and RST0..RST7 in turn go between the
+    intervals."""
+    out = bytearray()
+    for k, data in enumerate(intervals):
+        if k:
+            out += bytes([0xFF, 0xD0 + (k - 1) % 8])
+        out += data.replace(b"\xff", b"\xff\x00")
+    return bytes(out)
+
+
+def unstuff_scan(b: bytes, i: int, n_intervals: int) -> list[bytes]:
+    """Inverse of :func:`stuff_scan` for the segment starting at ``b[i]``:
+    the unstuffed bytes of each of the ``n_intervals`` restart intervals.
+    Checks the RSTn index sequence and that the scan ends at EOI (fill
+    0xFF bytes before a marker are allowed); any other marker raises."""
+    out = []
+    for k in range(n_intervals):
+        want = 0xD9 if k == n_intervals - 1 else 0xD0 + k % 8
+        j = i
+        while True:  # the next 0xFF that is not a stuffed 0xFF00
+            j = b.find(b"\xff", j)
+            if j < 0 or j + 1 >= len(b):
+                raise ValueError(
+                    "truncated entropy stream: no EOI after scan"
+                    if want == 0xD9 else "truncated at restart boundary"
+                )
+            if b[j + 1]:
+                break
+            j += 2
+        out.append(b[i:j].replace(b"\xff\x00", b"\xff"))
+        while j + 2 < len(b) and b[j + 1] == 0xFF:
+            j += 1
+        m = b[j + 1]
+        if m != want:
+            if want != 0xD9 and 0xD0 <= m <= 0xD7:
+                raise ValueError(
+                    f"expected RST{k % 8} at offset {j}, found FF{m:02X}"
+                )
+            raise ValueError(
+                f"unexpected marker 0xFF{m:02X} inside entropy data"
+            )
+        i = j + 2
+    return out
 
 
 def _seg(marker: int, payload: bytes) -> bytes:
@@ -320,10 +326,6 @@ def encode_jpeg(raster: bytes, w: int, h: int, ch: int,
     qzz = np.array(q, dtype=np.float64)
     zz_idx = np.array([r * 8 + c for (r, c) in ZIGZAG])
 
-    dc_lum = _build_encode_table(DC_LUM_BITS, DC_LUM_VALS)
-    ac_lum = _build_encode_table(AC_LUM_BITS, AC_LUM_VALS)
-    dc_chr = _build_encode_table(DC_CHR_BITS, DC_CHR_VALS)
-
     out = bytearray(b"\xff\xd8")  # SOI
     out += _seg(0xE0, b"JFIF\x00" + bytes([1, 1, 0]) +
                 struct.pack(">HH", 1, 1) + b"\x00\x00")
@@ -367,99 +369,62 @@ def encode_jpeg(raster: bytes, w: int, h: int, ch: int,
     zzs = np.rint(f.reshape(len(block_views), 64)[:, zz_idx] / qzz)
     zzs = zzs.astype(np.int64)
 
-    writer = _BitWriter()
+    intervals = []
+    writer = MsbWriter()
     preds = [0] * ncomp
-    rst = 0
     total_mcus = mby * mbx
     per_mcu = sum(hi * vi for hi, vi in sampling)
     bi = 0
     for mcu in range(total_mcus):
         if restart_interval and mcu and mcu % restart_interval == 0:
-            writer.align()
-            writer.out += bytes([0xFF, 0xD0 + rst])
-            rst = (rst + 1) % 8
+            writer.align(1)  # pad with 1-bits before a marker
+            intervals.append(writer.out)
+            writer = MsbWriter()
             preds = [0] * ncomp
         for _ in range(per_mcu):
             ci = block_comp[bi]
             preds[ci] = _encode_block(
                 [int(x) for x in zzs[bi]], preds[ci],
-                dc_lum if ci == 0 else dc_chr,
-                ac_lum, writer)
+                _DC_LUM_CODES if ci == 0 else _DC_CHR_CODES,
+                _AC_LUM_CODES, writer)
             bi += 1
     assert bi == len(block_views)
-    writer.align()
-    out += writer.out
+    writer.align(1)
+    intervals.append(writer.out)
+    out += stuff_scan(intervals)
     out += b"\xff\xd9"  # EOI
     return bytes(out)
 
 
-class _BitReader:
-    """MSB-first reader over the entropy segment with 0xFF00 unstuffing.
-    Markers are only legal at byte-aligned restart points; hitting one
-    mid-entropy raises. Bytes accumulate into one int so multi-bit
-    extraction is a shift+mask, not a per-bit loop."""
-
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.d = data
-        self.i = pos
-        self.acc = 0
-        self.n = 0
-
-    def _fill(self) -> None:
-        if self.i >= len(self.d):
-            raise ValueError("truncated entropy stream")
-        b = self.d[self.i]
-        if b == 0xFF:
-            if self.i + 1 >= len(self.d):
-                raise ValueError("truncated entropy stream")
-            nxt = self.d[self.i + 1]
-            if nxt != 0x00:
-                raise ValueError(
-                    f"unexpected marker 0xFF{nxt:02X} inside entropy data"
-                )
-            self.i += 2
-        else:
-            self.i += 1
-        self.acc = ((self.acc << 8) | b) & 0xFFFFFFFF
-        self.n += 8
-
-    def read_bit(self) -> int:
-        if self.n == 0:
-            self._fill()
-        self.n -= 1
-        return (self.acc >> self.n) & 1
-
-    def read_bits(self, k: int) -> int:
-        while self.n < k:
-            self._fill()
-        self.n -= k
-        return (self.acc >> self.n) & ((1 << k) - 1)
-
-    def align_and_expect_rst(self, idx: int) -> None:
-        self.acc = 0
-        self.n = 0  # drop padding bits
-        if self.i + 1 >= len(self.d):
-            raise ValueError("truncated at restart boundary")
-        if self.d[self.i] != 0xFF or self.d[self.i + 1] != 0xD0 + idx:
-            raise ValueError(
-                f"expected RST{idx} at offset {self.i}, found "
-                f"{self.d[self.i]:02X}{self.d[self.i + 1]:02X}"
-            )
-        self.i += 2
-
-
-def _decode_huffman(reader: _BitReader, table: dict) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | reader.read_bit()
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid huffman code (no symbol within 16 bits)")
-
-
 def _extend(v: int, s: int) -> int:
     return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
+
+
+def _decode_block(r: MsbReader, dc: PrefixCode, ac: PrefixCode,
+                  q: list[int], zz_idx: list[int], pred: int, blk) -> int:
+    """Entropy-decode and dequantize one block into ``blk`` (natural
+    order); returns the component's new DC predictor."""
+    s = dc.read(r)
+    if s:
+        pred += _extend(r.read(s), s)
+    blk[zz_idx[0]] = pred * q[0]
+    k = 1
+    while k < 64:
+        rs = ac.read(r)
+        if rs == 0x00:  # EOB
+            break
+        run, size = rs >> 4, rs & 0x0F
+        if size == 0:
+            if run != 15:
+                raise ValueError("bad AC run/size")
+            k += 16  # ZRL
+            continue
+        k += run
+        if k > 63:
+            raise ValueError("AC index overflow")
+        blk[zz_idx[k]] = _extend(r.read(size), size) * q[k]
+        k += 1
+    return pred
 
 
 def parse_jpeg(b: bytes) -> tuple:
@@ -469,8 +434,9 @@ def parse_jpeg(b: bytes) -> tuple:
     length), DQT (8-bit precision, multiple tables per segment), DHT
     (canonical code reconstruction from bits+values, multiple tables per
     segment), SOF0 (baseline only — SOF1/SOF2/... rejected), DRI, SOS,
-    then Huffman entropy decode with byte unstuffing, RSTn verification
-    (index sequence checked, DC predictors reset), dezigzag, dequantize,
+    then the byte pass (:func:`unstuff_scan`: unstuffing, RSTn index
+    sequence, EOI), Huffman entropy decode per restart interval (DC
+    predictors reset), dezigzag, dequantize,
     float IDCT, level shift + clamp. ``planes`` is a list of ``ncomp``
     numpy uint8 arrays of shape (h, w) (YCbCr for color files — callers
     convert); ``restart_count`` counts RSTn markers consumed. Raises
@@ -483,7 +449,7 @@ def parse_jpeg(b: bytes) -> tuple:
         raise ValueError("bad SOI")
     i = 2
     qtables: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict] = {}
+    huff: dict[tuple[int, int], PrefixCode] = {}
     sof = None
     dri = 0
     while True:
@@ -518,7 +484,7 @@ def parse_jpeg(b: bytes) -> tuple:
                 vals = list(payload[j + 17:j + 17 + n])
                 if len(bits) != 16 or len(vals) != n:
                     raise ValueError("truncated DHT")
-                huff[(tc, th)] = _build_decode_table(bits, vals)
+                huff[(tc, th)] = _huffman_code(bits, vals)
                 j += 17 + n
         elif marker == 0xC0:  # SOF0 baseline
             if sof is not None:
@@ -566,71 +532,47 @@ def parse_jpeg(b: bytes) -> tuple:
     ss, se, ahal = payload[1 + 2 * ns:4 + 2 * ns]
     if ss != 0 or se != 63 or ahal != 0:
         raise ValueError("non-sequential scan parameters")
+    tables = []
+    for ci in range(ns):
+        dc_t = huff.get((0, scan_tabs[ci][0]))
+        ac_t = huff.get((1, scan_tabs[ci][1]))
+        q = qtables.get(comps[ci][1])
+        if dc_t is None or ac_t is None or q is None:
+            raise ValueError("scan references undefined table")
+        tables.append((dc_t, ac_t, q))
 
     hmax = max(c[2] for c in comps)
     vmax = max(c[3] for c in comps)
     mbx = (w + 8 * hmax - 1) // (8 * hmax)
     mby = (h + 8 * vmax - 1) // (8 * vmax)
     total_mcus = mbx * mby
-    reader = _BitReader(b, i)
+    per = dri or total_mcus  # MCUs per restart interval
+    intervals = unstuff_scan(b, i, -(-total_mcus // per))
     zz_idx = [r * 8 + c for (r, c) in ZIGZAG]
     cmat = _dct_matrix()
-    preds = [0] * ns
     # per-component block grids: (mby*Vi) x (mbx*Hi) blocks of 64 coeffs
     coeffs = [
         np.zeros((mby * comps[ci][3] * mbx * comps[ci][2], 64),
                  dtype=np.float64)
         for ci in range(ns)
     ]
-    rst_idx = 0
-    restart_count = 0
-    for mcu in range(total_mcus):
-        if dri and mcu and mcu % dri == 0:
-            reader.align_and_expect_rst(rst_idx)
-            rst_idx = (rst_idx + 1) % 8
-            restart_count += 1
-            preds = [0] * ns
-        my, mx = divmod(mcu, mbx)
-        for ci in range(ns):
-            dc_t = huff.get((0, scan_tabs[ci][0]))
-            ac_t = huff.get((1, scan_tabs[ci][1]))
-            q = qtables.get(comps[ci][1])
-            if dc_t is None or ac_t is None or q is None:
-                raise ValueError("scan references undefined table")
-            hi, vi = comps[ci][2], comps[ci][3]
-            for v in range(vi):
-                for h_ in range(hi):
-                    s = _decode_huffman(reader, dc_t)
-                    diff = _extend(reader.read_bits(s), s) if s else 0
-                    preds[ci] += diff
-                    bi = (my * vi + v) * (mbx * hi) + (mx * hi + h_)
-                    blk = coeffs[ci][bi]
-                    blk[zz_idx[0]] = preds[ci] * q[0]
-                    k = 1
-                    while k < 64:
-                        rs = _decode_huffman(reader, ac_t)
-                        if rs == 0x00:  # EOB
-                            break
-                        run, size = rs >> 4, rs & 0x0F
-                        if size == 0:
-                            if run != 15:
-                                raise ValueError("bad AC run/size")
-                            k += 16  # ZRL
-                            continue
-                        k += run
-                        if k > 63:
-                            raise ValueError("AC index overflow")
-                        blk[zz_idx[k]] = (
-                            _extend(reader.read_bits(size), size) * q[k]
+    for k, data in enumerate(intervals):
+        reader = MsbReader(data)
+        preds = [0] * ns
+        for mcu in range(k * per, min(total_mcus, (k + 1) * per)):
+            my, mx = divmod(mcu, mbx)
+            for ci in range(ns):
+                dc_t, ac_t, q = tables[ci]
+                hi, vi = comps[ci][2], comps[ci][3]
+                for v in range(vi):
+                    for h_ in range(hi):
+                        bi = (my * vi + v) * (mbx * hi) + (mx * hi + h_)
+                        preds[ci] = _decode_block(
+                            reader, dc_t, ac_t, q, zz_idx, preds[ci],
+                            coeffs[ci][bi],
                         )
-                        k += 1
-    # after the scan: align and expect EOI (optional fill 0xFFs allowed)
-    reader.n = 0
-    j = reader.i
-    while j + 1 < len(b) and b[j] == 0xFF and b[j + 1] == 0xFF:
-        j += 1
-    if j + 1 >= len(b) or b[j] != 0xFF or b[j + 1] != 0xD9:
-        raise ValueError("missing EOI after scan")
+        if reader.remaining() >= 8:  # only padding may follow the last MCU
+            raise ValueError(f"unused entropy bytes in restart interval {k}")
 
     planes = []
     for ci in range(ns):
@@ -647,7 +589,7 @@ def parse_jpeg(b: bytes) -> tuple:
         if fy > 1 or fx > 1:  # nearest-neighbor chroma upsample
             full = np.repeat(np.repeat(full, fy, axis=0), fx, axis=1)
         planes.append(full[:h, :w])
-    return w, h, ns, planes, restart_count
+    return w, h, ns, planes, len(intervals) - 1
 
 
 def decode_jpeg_rgb(b: bytes):

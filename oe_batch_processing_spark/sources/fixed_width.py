@@ -10,11 +10,10 @@ Reference semantics (lib/parsers.js:176-266), reproduced exactly:
   - per-field ``substring(startPosition-1, endPosition)``, whitespace trim,
     JS-fidelity type coercion with stop-on-first-error partial rows.
 
-Two paths, as with CSV:
-  - ``fw_parse`` — fidelity per-record parse of a recData frame
-    (``outcome.parse_records``, a ``mapInArrow``).
-  - ``fw_project_native`` — JVM-side ``substring``+``cast`` projection for
-    well-formed data at scale (whole-stage codegen, no Python).
+``fw_parse`` is the fidelity per-record parse of a recData frame
+(``outcome.parse_records``, a ``mapInArrow``); ``fw_columns`` is the
+JVM-side ``substring``+``trim``+``cast`` projection of a layout, which the
+``fw_parse_roundtrip`` query applies to well-formed rows.
 """
 
 from __future__ import annotations
@@ -114,19 +113,3 @@ def fw_columns(layout: list[dict] | list[FwField], src: str = "rec") -> list[Col
         cols.append(c.cast(_NATIVE_CAST[f.type.lower()]).alias(f.field_name))
     return cols
 
-
-def fw_project_native(
-    recdata: DataFrame, layout: list[dict] | list[FwField], strict_length: bool = True
-) -> DataFrame:
-    """Scale-path fixed-width projection (whole-stage codegen, no Python).
-
-    With ``strict_length`` the reference's exact-length rule becomes a filter;
-    length-violating rows are dropped here (route them separately via
-    ``F.length != N`` if an error channel is needed).
-    """
-    spec = validate_layout(layout)
-    df = recdata
-    if strict_length:
-        df = df.filter(F.length("rec") == spec[-1].end_position)
-    keep = [c for c in ("fileName", "recId") if c in df.columns]
-    return df.select(*keep, *fw_columns(spec))

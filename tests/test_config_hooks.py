@@ -11,18 +11,18 @@ from oe_batch_processing_spark.sources.csv_source import CsvOptions
 
 
 def test_config_layering_env_over_file_over_default(tmp_path, monkeypatch):
+    monkeypatch.delenv("BATCH_RESULT_LOG_ITEMS", raising=False)
     cfg_file = tmp_path / "batch-config.json"
-    cfg_file.write_text(json.dumps({"maxConcurrent": 10, "minTime": 5}))
+    cfg_file.write_text(json.dumps({"batchResultLogItems": ["error.details"]}))
     # default
-    assert EngineConfig.load().max_concurrent == 80
-    # file (camelCase keys accepted, reference batch-config.json shape)
-    assert EngineConfig.load(str(cfg_file)).max_concurrent == 10
+    assert EngineConfig.load().batch_result_log_items == []
+    # file (camelCase key accepted, reference batch-config.json shape)
+    assert EngineConfig.load(str(cfg_file)).batch_result_log_items == [
+        "error.details"
+    ]
     # env wins over file
-    monkeypatch.setenv("MAX_CONCURRENT", "3")
     monkeypatch.setenv("BATCH_RESULT_LOG_ITEMS", "error.details, response.headers")
     cfg = EngineConfig.load(str(cfg_file))
-    assert cfg.max_concurrent == 3
-    assert cfg.min_time_ms == 5
     assert cfg.batch_result_log_items == ["error.details", "response.headers"]
 
 

@@ -10,17 +10,18 @@ from __future__ import annotations
 
 import pytest
 
+from oe_batch_processing_spark.operators.bitio import MsbReader, MsbWriter
 from oe_batch_processing_spark.operators.multimodal_h264 import (
     MB_BYTES,
-    BitReader,
-    BitWriter,
     _mb_samples,
     add_emulation,
     decode_h264_ipcm,
     encode_sps,
     mux_annexb,
+    read_trailing_bits,
     split_annexb,
     strip_emulation,
+    write_trailing_bits,
 )
 
 
@@ -36,27 +37,36 @@ def _stream(mb_w: int = 2, n_frames: int = 3, zero_head: bool = True) -> bytes:
 
 
 def test_exp_golomb_roundtrip():
-    w = BitWriter()
+    w = MsbWriter()
     vals = [0, 1, 2, 3, 7, 25, 255, 2**16]
     for v in vals:
         w.ue(v)
     svals = [0, 1, -1, 2, -2, 26, -26]
     for v in svals:
         w.se(v)
-    r = BitReader(w.trailing())
+    r = MsbReader(write_trailing_bits(w))
     assert [r.ue() for _ in vals] == vals
     assert [r.se() for _ in svals] == svals
-    r.trailing()
+    read_trailing_bits(r)
+
+
+def test_rbsp_trailing_bits_validation():
+    read_trailing_bits(MsbReader(b"\x80"))  # stop bit, 7 zero bits
+    with pytest.raises(ValueError, match="missing rbsp stop bit"):
+        read_trailing_bits(MsbReader(b"\x00"))
+    with pytest.raises(ValueError, match="nonzero rbsp trailing bit"):
+        read_trailing_bits(MsbReader(b"\x81"))
+    with pytest.raises(ValueError, match="trailing bytes"):
+        read_trailing_bits(MsbReader(b"\x80\x00"))
 
 
 def test_ue_known_vectors():
     # spec table 9-1: 0 -> '1', 1 -> '010', 2 -> '011', 3 -> '00100'
     for v, bits in [(0, "1"), (1, "010"), (2, "011"), (3, "00100"),
                     (25, "000011010")]:
-        w = BitWriter()
+        w = MsbWriter()
         w.ue(v)
-        w.align_zero()
-        got = "".join(f"{b:08b}" for b in w.buf)[: len(bits)]
+        got = "".join(f"{b:08b}" for b in w.flush())[: len(bits)]
         assert got == bits, (v, got, bits)
 
 

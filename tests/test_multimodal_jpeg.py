@@ -17,6 +17,8 @@ from oe_batch_processing_spark.operators.multimodal_jpeg import (
     decode_jpeg_rgb,
     encode_jpeg,
     parse_jpeg,
+    stuff_scan,
+    unstuff_scan,
 )
 
 
@@ -165,6 +167,45 @@ def test_corruption_battery():
     (seglen,) = struct.unpack(">H", base[dht + 2:dht + 4])
     with pytest.raises(ValueError, match="undefined table"):
         parse_jpeg(base[:dht] + base[dht + 2 + seglen:])
+
+
+def test_unstuff_scan_rejects_markers_inside_entropy_data():
+    intervals = [b"\x12\xff\x34", b"\xff", b"\x56"]
+    scan = stuff_scan(intervals) + b"\xff\xd9"
+    assert scan.count(b"\xff\x00") == 2
+    assert unstuff_scan(scan, 0, 3) == intervals
+
+    # a stuffed byte turned into a marker in the first interval
+    bad = scan.replace(b"\xff\x00", b"\xff\xc4", 1)
+    with pytest.raises(ValueError, match="unexpected marker 0xFFC4 inside"):
+        unstuff_scan(bad, 0, 3)
+    # ... and in the last one, where only EOI may end the scan
+    bad = stuff_scan([b"\x12", b"\x34\xc4\x56"]).replace(b"\x34", b"\xff")
+    with pytest.raises(ValueError, match="unexpected marker 0xFFC4 inside"):
+        unstuff_scan(bad + b"\xff\xd9", 0, 2)
+    # RSTn out of sequence, a missing restart, a scan without EOI
+    with pytest.raises(ValueError, match="expected RST1 at offset 8"):
+        unstuff_scan(scan.replace(b"\xff\xd1", b"\xff\xd3"), 0, 3)
+    with pytest.raises(ValueError, match="unexpected marker 0xFFD9"):
+        unstuff_scan(scan, 0, 4)
+    with pytest.raises(ValueError, match="no EOI"):
+        unstuff_scan(scan[:-2], 0, 3)
+
+
+def test_oversubscribed_huffman_table_rejected():
+    from oe_batch_processing_spark.operators.multimodal_jpeg import (
+        _huffman_code,
+    )
+
+    # three 1-bit codes do not fit in the two 1-bit code words
+    with pytest.raises(ValueError, match="overflow code space"):
+        _huffman_code([3] + [0] * 15, [0, 1, 2])
+
+
+def test_entropy_bytes_after_the_last_mcu_rejected():
+    base = _flat_jpg(np.array([[50, 180], [90, 250]]))
+    with pytest.raises(ValueError, match="unused entropy bytes"):
+        parse_jpeg(base[:-2] + b"\x00" + base[-2:])
 
 
 def test_420_flat_rgb_roundtrip_bit_exact():

@@ -10,14 +10,18 @@ import struct
 
 import pytest
 
-from oe_batch_processing_spark.operators.multimodal_webp import (
-    CanonicalDecoder,
+from oe_batch_processing_spark.operators.bitio import (
     LsbReader,
     LsbWriter,
+    PrefixCode,
+)
+from oe_batch_processing_spark.operators.multimodal_webp import (
+    CanonicalDecoder,
     _webp_pixels,
-    canonical_codes,
+    code_order,
     encode_webp_vp8l,
     huffman_lengths,
+    lsb_codes,
     parse_webp_vp8l,
     read_prefix_code,
     write_prefix_code,
@@ -26,12 +30,12 @@ from oe_batch_processing_spark.operators.multimodal_webp import (
 
 def test_lsb_bit_order_known_vector():
     w = LsbWriter()
-    w.put(0b101, 3)
-    w.put(0b01, 2)
-    w.put(0xFF, 8)
+    w.write(0b101, 3)
+    w.write(0b01, 2)
+    w.write(0xFF, 8)
     data = w.flush()
     r = LsbReader(data)
-    assert r.get(3) == 0b101 and r.get(2) == 0b01 and r.get(8) == 0xFF
+    assert r.read(3) == 0b101 and r.read(2) == 0b01 and r.read(8) == 0xFF
     # first byte: bits fill from the LSB up
     assert data[0] & 0b111 == 0b101
 
@@ -39,7 +43,7 @@ def test_lsb_bit_order_known_vector():
 def test_canonical_codes_deflate_convention():
     # RFC 1951's worked example: lengths (3,3,3,3,3,2,4,4) for A..H
     lengths = {i: ln for i, ln in enumerate([3, 3, 3, 3, 3, 2, 4, 4])}
-    codes = canonical_codes(lengths)
+    codes = PrefixCode(*code_order(lengths)).codes()
     assert codes[5] == (0b00, 2)
     assert codes[0] == (0b010, 3)
     assert codes[6] == (0b1110, 4)
@@ -60,18 +64,17 @@ def test_prefix_code_roundtrip_simple_and_complex():
         ({0: 1}, 40),                       # simple on the distance alphabet
         (huffman_lengths({i: i + 1 for i in range(20)}), 280),  # complex
         (huffman_lengths({i * 13 % 256: 1 + i % 7 for i in range(60)}), 256),
+        # 13 bits deep: past the flat table, decoded by the canonical walk
+        (huffman_lengths({i: 2**i for i in range(14)}, cap=13), 256),
     ]:
         w = LsbWriter()
         write_prefix_code(w, lengths, alphabet)
         dec = read_prefix_code(LsbReader(w.flush()), alphabet)
         # every symbol decodes back through its own emitted bits
-        codes = canonical_codes(lengths) if len(lengths) > 1 else {
-            next(iter(lengths)): (0, 0)
-        }
-        for sym, (code, nbits) in codes.items():
+        for sym, (rev, nbits) in lsb_codes(lengths).items():
             w2 = LsbWriter()
-            w2.put_code(code, nbits)
-            w2.put(0, 8)  # padding so the reader never starves
+            w2.write(rev, nbits)
+            w2.write(0, 8)  # padding so the reader never starves
             assert dec.read(LsbReader(w2.flush())) == sym
 
 
@@ -169,8 +172,8 @@ def test_lz77_prefix_scheme_continuity():
         assert code >= prev_code or v <= 4
         prev_code = max(prev_code, code)
         w = LsbWriter()
-        w.put(extra, ebits)
-        w.put(0, 8)
+        w.write(extra, ebits)
+        w.write(0, 8)
         assert prefix_decode_value(code, LsbReader(w.flush())) == v
 
 
@@ -272,10 +275,10 @@ def test_clc_code_length_limited_to_three_bit_field():
     wtr = LsbWriter()
     write_prefix_code(wtr, lengths, 256)
     dec = read_prefix_code(LsbReader(wtr.flush()), 256)
-    for sym, (code, nbits) in canonical_codes(lengths).items():
+    for sym, (rev, nbits) in lsb_codes(lengths).items():
         w2 = LsbWriter()
-        w2.put_code(code, nbits)
-        w2.put(0, 8)
+        w2.write(rev, nbits)
+        w2.write(0, 8)
         assert dec.read(LsbReader(w2.flush())) == sym
 
 
@@ -403,15 +406,15 @@ def test_predictor_without_subtract_green_rejected():
     )
 
     w = LsbWriter()
-    w.put(7, 14)   # width 8
-    w.put(7, 14)   # height 8
-    w.put(0, 1)
-    w.put(0, 3)
-    w.put(1, 1)    # transform present
-    w.put(0, 2)    # predictor
-    w.put(1, 3)    # size_bits = 3
+    w.write(7, 14)   # width 8
+    w.write(7, 14)   # height 8
+    w.write(0, 1)
+    w.write(0, 3)
+    w.write(1, 1)    # transform present
+    w.write(0, 2)    # predictor
+    w.write(1, 3)    # size_bits = 3
     _write_mode_subimage(w, [[0]])
-    w.put(0, 1)    # end of transforms
+    w.write(0, 1)    # end of transforms
     payload = bytes([SIGNATURE]) + w.flush()
     chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
     if len(payload) % 2:
@@ -430,24 +433,24 @@ def test_mode_subimage_validation():
     )
 
     w = LsbWriter()
-    w.put(0, 1)  # no color cache
+    w.write(0, 1)  # no color cache
     write_prefix_code(w, {15: 1}, 280)   # green: constant symbol 15 (>13)
     write_prefix_code(w, {0: 1}, 256)
     write_prefix_code(w, {0: 1}, 256)
     write_prefix_code(w, {255: 1}, 256)
     write_prefix_code(w, {0: 1}, 40)
-    w.put(0, 8)
+    w.write(0, 8)
     with pytest.raises(ValueError, match="invalid predictor mode 15"):
         _read_mode_subimage(LsbReader(w.flush()), 1, 1)
 
     w = LsbWriter()
-    w.put(0, 1)
+    w.write(0, 1)
     write_prefix_code(w, {260: 1}, 280)  # green: a length code
     write_prefix_code(w, {0: 1}, 256)
     write_prefix_code(w, {0: 1}, 256)
     write_prefix_code(w, {255: 1}, 256)
     write_prefix_code(w, {0: 1}, 40)
-    w.put(0, 8)
+    w.write(0, 8)
     with pytest.raises(ValueError, match="backreferences in the mode"):
         _read_mode_subimage(LsbReader(w.flush()), 1, 1)
 
@@ -526,17 +529,17 @@ def test_palette_validation_battery():
 
     # stream-level: palette + subtract-green must be rejected by name
     w = LsbWriter()
-    w.put(7, 14)
-    w.put(0, 14)  # 8x1 image
-    w.put(0, 1)
-    w.put(0, 3)
-    w.put(1, 1)
-    w.put(2, 2)   # subtract-green
-    w.put(1, 1)
-    w.put(3, 2)   # color indexing
-    w.put(1, 8)   # two colors
+    w.write(7, 14)
+    w.write(0, 14)  # 8x1 image
+    w.write(0, 1)
+    w.write(0, 3)
+    w.write(1, 1)
+    w.write(2, 2)   # subtract-green
+    w.write(1, 1)
+    w.write(3, 2)   # color indexing
+    w.write(1, 8)   # two colors
     _write_argb_subimage(w, [(255, 0, 0, 0), (0, 9, 9, 9)])
-    w.put(0, 1)
+    w.write(0, 1)
     payload = bytes([SIGNATURE]) + w.flush()
     chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
     if len(payload) % 2:
@@ -557,15 +560,15 @@ def test_palette_entries_validated():
 
     def stream_with_palette(diffs):
         w = LsbWriter()
-        w.put(7, 14)
-        w.put(0, 14)
-        w.put(0, 1)
-        w.put(0, 3)
-        w.put(1, 1)
-        w.put(3, 2)
-        w.put(len(diffs) - 1, 8)
+        w.write(7, 14)
+        w.write(0, 14)
+        w.write(0, 1)
+        w.write(0, 3)
+        w.write(1, 1)
+        w.write(3, 2)
+        w.write(len(diffs) - 1, 8)
         _write_argb_subimage(w, diffs)
-        w.put(0, 1)
+        w.write(0, 1)
         payload = bytes([SIGNATURE]) + w.flush()
         chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
         if len(payload) % 2:
@@ -846,20 +849,20 @@ def test_color_transform_combination_rules_rejected():
     def crafted(first_sg: bool) -> bytes:
         w_, h_ = 16, 8
         w = LsbWriter()
-        w.put(w_ - 1, 14)
-        w.put(h_ - 1, 14)
-        w.put(0, 1)
-        w.put(0, 3)
+        w.write(w_ - 1, 14)
+        w.write(h_ - 1, 14)
+        w.write(0, 1)
+        w.write(0, 3)
         if first_sg:
-            w.put(1, 1)
-            w.put(2, 2)  # subtract-green
+            w.write(1, 1)
+            w.write(2, 2)  # subtract-green
         grid = [[(32, 32, 0)] * 2]  # 16x8 at 8x8 blocks -> 2x1 grid
         for _ in range(1 if first_sg else 2):
-            w.put(1, 1)
-            w.put(1, 2)  # color transform
-            w.put(COLOR_BLOCK_BITS - 2, 3)
+            w.write(1, 1)
+            w.write(1, 2)  # color transform
+            w.write(COLOR_BLOCK_BITS - 2, 3)
             _write_color_subimage(w, grid)
-        w.put(0, 1)  # end of transforms
+        w.write(0, 1)  # end of transforms
         return _riff_container(bytes([SIGNATURE]) + w.flush())
 
     with pytest.raises(ValueError, match="combined with subtract-green"):

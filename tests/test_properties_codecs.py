@@ -9,14 +9,25 @@ bit/byte bugs actually live.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from oe_batch_processing_spark.operators.bitio import (
+    LsbReader,
+    LsbWriter,
+    MsbReader,
+    MsbWriter,
+)
 from oe_batch_processing_spark.operators.multimodal_h264 import (
     add_emulation,
     decode_h264_ipcm,
     mux_annexb,
     strip_emulation,
+)
+from oe_batch_processing_spark.operators.multimodal_jpeg import (
+    stuff_scan,
+    unstuff_scan,
 )
 from oe_batch_processing_spark.operators.multimodal_tiff import (
     COMP_NONE,
@@ -27,8 +38,6 @@ from oe_batch_processing_spark.operators.multimodal_tiff import (
     parse_tiff,
 )
 from oe_batch_processing_spark.operators.multimodal_webp import (
-    LsbReader,
-    LsbWriter,
     encode_webp_vp8l,
     lz77_parse,
     parse_webp_vp8l,
@@ -44,6 +53,66 @@ _runs = st.lists(
 ).map(lambda ps: b"".join(bytes([v]) * n for v, n in ps))
 _noise = st.binary(max_size=300)
 _bytestream = st.one_of(_runs, _noise)
+
+
+# one bitio field: fixed width 0..32, Exp-Golomb ue/se (prefix <= 31
+# zeros) or a unary run
+_bit_field = st.one_of(
+    st.integers(0, 32).flatmap(
+        lambda n: st.tuples(
+            st.just("bits"), st.integers(0, (1 << n) - 1), st.just(n)
+        )
+    ),
+    st.tuples(st.just("ue"), st.integers(0, 2**32 - 2), st.none()),
+    st.tuples(st.just("se"), st.integers(-(2**31) + 1, 2**31 - 1), st.none()),
+    st.tuples(st.just("unary"), st.integers(0, 80), st.none()),
+)
+
+
+@pytest.mark.parametrize(
+    "writer, reader", [(MsbWriter, MsbReader), (LsbWriter, LsbReader)],
+    ids=["msb", "lsb"],
+)
+@given(fields=st.lists(_bit_field, max_size=40))
+@settings(max_examples=150, deadline=None)
+def test_bitio_roundtrips_any_fields(writer, reader, fields):
+    w = writer()
+    for kind, v, n in fields:
+        if kind == "bits":
+            w.write(v, n)
+        else:
+            getattr(w, kind)(v)
+    nbits = w.bits_written()
+    data = w.flush()
+    assert len(data) == (nbits + 7) // 8
+    r = reader(data)
+    for kind, v, n in fields:
+        assert (r.read(n) if kind == "bits" else getattr(r, kind)()) == v
+    assert r.read(8 * len(data) - nbits) == 0  # the zero padding
+    assert r.remaining() == 0
+    with pytest.raises(ValueError, match="bitstream exhausted"):
+        r.read(1)
+
+
+# restart-interval payloads dense in 0xFF and marker-like bytes
+_jpeg_interval = st.one_of(
+    st.lists(st.sampled_from([0x00, 0xFF, 0xD0, 0xD9, 0xC4, 0x7F]),
+             max_size=40),
+    st.lists(st.integers(0, 255), max_size=40),
+).map(bytes)
+
+
+@given(st.lists(_jpeg_interval, min_size=1, max_size=12), st.integers(0, 3))
+@settings(max_examples=200, deadline=None)
+def test_jpeg_stuffing_roundtrips_any_intervals(intervals, fill):
+    scan = stuff_scan(intervals)
+    # a stuffed segment holds no 0xFF except before 0x00 or an RSTn
+    for i in range(len(scan) - 1):
+        if scan[i] == 0xFF:
+            assert scan[i + 1] == 0 or 0xD0 <= scan[i + 1] <= 0xD7
+    # fill 0xFF bytes may precede the EOI
+    tail = b"\xff" * fill + b"\xff\xd9"
+    assert unstuff_scan(b"\xda" + scan + tail, 1, len(intervals)) == intervals
 
 
 @given(_bytestream)
@@ -103,8 +172,8 @@ def test_vp8l_prefix_scheme_total_bijection(v):
     code, extra, ebits = prefix_encode_value(v)
     assert 0 <= extra < (1 << ebits) if ebits else extra == 0
     w = LsbWriter()
-    w.put(extra, ebits)
-    w.put(0, 8)
+    w.write(extra, ebits)
+    w.write(0, 8)
     assert prefix_decode_value(code, LsbReader(w.flush())) == v
 
 
