@@ -61,16 +61,16 @@ HEADLINE = [
     # LLM-data ops:
     "dedup_exact_documents",
     "dedup_minhash_lsh",
-    "dedup_minhash_lsh_clusters",  # r11: cluster-summary emit mode
-    "dedup_simhash_clusters",      # r11: clusters mode, simhash relation
+    "dedup_minhash_lsh_clusters",
+    "dedup_simhash_clusters",
     "dedup_jaccard_shingles",
     "text_quality_scores",
     "text_fingerprint_dedup",
     "similarity_topk_cosine",
     "similarity_topk_lsh",
     "dedup_embedding_cosine",
-    "dedup_embedding_cosine_clusters",    # r12: clusters mode, cosine
-    "dedup_shingle_containment_clusters", # r12: clusters mode, containment
+    "dedup_embedding_cosine_clusters",
+    "dedup_shingle_containment_clusters",
     "dedup_simhash",
     # TPC-H shapes (fact-fact heavy):
     "q6_forecast_revenue",
@@ -85,29 +85,23 @@ HEADLINE = [
     "user_value_trend_native",
     "stream_tumbling_counts",
     "fw_parse_roundtrip",
-    # round-5 additions (time-series, iterative SQL, repetition, codec):
+    # time series, sketches, graph, codecs and data-pipeline operators:
     "events_ewma_user",
     "events_gap_fill_locf",
     "win_rolling_distinct_users",
     "recursive_cte_custkey_tree",
     "text_repetition_ratios",
     "multimodal_rle_roundtrip",
-    # extended-session additions (native sessionization, interval islands,
-    # CMS sketch, containment dedup, linear interp):
     "events_session_window_native",
     "intervals_coalesce_shipping",
     "sketch_countmin_user_counts",
     "dedup_shingle_containment",
     "events_resample_interp_linear",
-    # late-round-5 additions (BLAS-path ANN, substring dedup, CUSUM,
-    # RAKE, Holt recurrence):
     "similarity_topk_matmul",
     "docs_duplicate_ngram_spans",
     "events_changepoint_cusum",
     "text_rake_keywords",
     "orders_forecast_holt",
-    # round-6 additions (real-format decodes, stateful JVM folds,
-    # drift tests, budget planning):
     "multimodal_ppm_decode",
     "multimodal_wav_riff_features",
     "events_sessionize_capped",
@@ -120,14 +114,11 @@ HEADLINE = [
     "events_burst_detection",
     "udtf_table_arg_streaks",
     "text_bigram_lm_kneser_ney",
-    # late round-6 additions (container/codec grammars, bloom prefilter,
-    # deterministic bootstrap, LPA):
     "multimodal_zip_member_index",
     "multimodal_gzip_decode",
     "dedup_incremental_bloom_prefilter",
     "stats_bootstrap_ci_weekly_orders",
     "graph_label_propagation",
-    # round-7 additions:
     "multimodal_png_decode",
     "dedup_minhash_error_profile",
     "ingest_gzip_codec_scan",
@@ -136,8 +127,6 @@ HEADLINE = [
     "pipeline_data_card",
     "multimodal_bmp_decode",
     "events_session_window_dynamic_gap",
-    # continuation-session additions (lossy codec, forensic screen,
-    # intermittent-demand forecast, ACF):
     "multimodal_jpeg_decode",
     "multimodal_jpeg420_decode",
     "dq_benford_screen",
@@ -153,8 +142,6 @@ HEADLINE = [
     "stream_forecast_croston",
     "sample_neyman_allocation",
     "multimodal_audio_adpcm_roundtrip",
-    # round-7 final wave (committed after the r7 protocol bench — added so
-    # every registered headline-worthy operator has a committed bench row):
     "multimodal_audio_aiff_roundtrip",
     "multimodal_audio_flac_lite_roundtrip",
     "multimodal_video_mjpeg_avi_decode",
@@ -169,23 +156,19 @@ HEADLINE = [
     "pipeline_bpe_train_apply",
     "pipeline_split_leakage_report",
     "dq_k_anonymity_report",
-    # round-9 additions:
-    "stream_tws_type_stats",  # transformWithState via pbshim protobuf walk
-    "multimodal_h264_ipcm_decode",  # Annex-B I-PCM decode
-    "stream_split_leakage_gate",  # incremental leakage audit twin
-    "multimodal_tiff_decode",  # IFD walk + PackBits
-    "multimodal_resize_box_integer",  # exact box-filter resize
-    "multimodal_webp_lossless_decode",  # VP8L: SG + 14-mode predictor
-    "multimodal_webp_palette_decode",   # VP8L: color-indexing + bundling
-    "multimodal_webp_color_decode",     # r11: cross-color transform, RGB
-    # round-14 continuation addition:
-    "pipeline_dsir_importance",  # hashed-ngram importance selection
-    # round-15 addition:
-    "pipeline_contamination_screen",  # benchmark decontamination screen
-    # round-16 additions:
-    "text_bm25_shingle_retrieval",    # exact-integer BM25 over 3-gram terms
-    "pipeline_quality_classifier",    # fastText-shaped linear scoring pass
-    "pipeline_perplexity_buckets",    # exact fixed-point log2 cross-entropy
+    "stream_tws_type_stats",
+    "multimodal_h264_ipcm_decode",
+    "stream_split_leakage_gate",
+    "multimodal_tiff_decode",
+    "multimodal_resize_box_integer",
+    "multimodal_webp_lossless_decode",
+    "multimodal_webp_palette_decode",
+    "multimodal_webp_color_decode",
+    "pipeline_dsir_importance",
+    "pipeline_contamination_screen",
+    "text_bm25_shingle_retrieval",
+    "pipeline_quality_classifier",
+    "pipeline_perplexity_buckets",
 ]
 
 # Rows with a documented multi-round contention-sensitive spread (r14-r15:

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oe_batch_processing_spark.operators.rowmap import map_rows
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.session import scratch_dir
 from oe_batch_processing_spark.sources.fixed_width import fw_columns
@@ -740,30 +741,19 @@ def ingest_parquet_footer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         [f"file://{sf_dir}/{t}.parquet" for t in _FOOTER_TABLES]
     ).select("path", "content")
 
-    def run(batches):
+    def row(path, content):
         import os
 
-        import pandas as pd
+        meta = parse_parquet_footer(content)
+        yield {
+            "table_name": os.path.basename(path)[: -len(".parquet")],
+            "footer_num_rows": meta["num_rows"],
+            "n_columns": len(meta["top_columns"]),
+            "schema_cols": ",".join(sorted(meta["top_columns"])),
+        }
 
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                meta = parse_parquet_footer(bytes(content))
-                name = os.path.basename(path)
-                rows.append({
-                    "table_name": name[:-len(".parquet")],
-                    "footer_num_rows": meta["num_rows"],
-                    "n_columns": len(meta["top_columns"]),
-                    "schema_cols": ",".join(sorted(meta["top_columns"])),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["table_name", "footer_num_rows", "n_columns",
-                         "schema_cols"],
-            )
-
-    return files.mapInPandas(
-        run,
-        schema="table_name string, footer_num_rows long, "
-               "n_columns int, schema_cols string",
+    return map_rows(
+        files,
+        row,
+        "table_name string, footer_num_rows long, n_columns int, schema_cols string",
     )

@@ -1,6 +1,6 @@
 """Multimodal column support (north-star scope): image/audio/video as opaque
 ``binary`` columns with typed metadata, plus decode / feature-extract plumbing
-as Arrow-batched Pandas UDFs.
+as Arrow-batched per-row Python functions (``rowmap.map_rows``).
 
 The container has no image/audio codec libraries; every format whose
 grammar is implementable from spec without one is decoded for real — since
@@ -19,14 +19,15 @@ baseline JPEG (multimodal_jpeg.py — full marker/Huffman/DCT pipeline),
 and GIF89a (multimodal_gif.py — hand-written LZW + interlacing).
 
 Scale notes: binary payloads ride in parquet/Arrow untouched until the UDF
-stage; ``mapInPandas`` streams Arrow batches so executor memory is bounded by
-batch size (``spark.sql.execution.arrow.maxRecordsPerBatch``), not partition
-size. Feature extraction is embarrassingly parallel — zero shuffles.
+stage; every per-row decoder runs through ``rowmap.map_rows``, which streams
+Arrow batches so executor memory is bounded by batch size
+(``spark.sql.execution.arrow.maxRecordsPerBatch``), not partition size.
+Feature extraction is embarrassingly parallel — zero shuffles. The shared
+pixel helpers (:func:`gray`, :func:`flat_blocks`, :func:`raster_stats`) hold
+the luminance/gradient statistics every raster decode here reports.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,6 +41,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from oe_batch_processing_spark.operators.rowmap import map_rows
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.tables import load_table
 
@@ -122,37 +124,27 @@ def media_frame(docs: DataFrame) -> DataFrame:
     )
 
 
-def extract_features(media: DataFrame, batch_size_hint: int = 1024) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Deterministic byte-level feature extraction over Arrow batches —
-    the stand-in for decode→resize→embed. Shows the real mapInPandas shape:
+    the stand-in for decode→resize→embed, one :func:`map_rows` pass:
     binary in, fixed-width feature vector out."""
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def row(media_id, mtype, payload, n_bytes, _checksum):
+        b = payload or b""
+        hist = [0] * 16
+        total = 0
+        for byte in b:
+            hist[byte >> 4] += 1
+            total += byte
+        yield {
+            "media_id": media_id,
+            "media_type": mtype,
+            "n_bytes": n_bytes,
+            "byte_histogram": hist,
+            "mean_byte": (total // len(b)) if b else 0,
+        }
 
-        for pdf in batches:
-            out_rows = []
-            for media_id, mtype, payload, n_bytes in zip(
-                pdf["media_id"], pdf["media_type"], pdf["payload"], pdf["n_bytes"]
-            ):
-                b = bytes(payload or b"")
-                hist = [0] * 16
-                total = 0
-                for byte in b:
-                    hist[byte >> 4] += 1
-                    total += byte
-                out_rows.append(
-                    {
-                        "media_id": media_id,
-                        "media_type": mtype,
-                        "n_bytes": n_bytes,
-                        "byte_histogram": hist,
-                        "mean_byte": (total // len(b)) if b else 0,
-                    }
-                )
-            yield pd.DataFrame(out_rows)
-
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return map_rows(media, row, FEATURE_SCHEMA)
 
 
 @query(
@@ -208,7 +200,8 @@ _BYTE_FEATURES_ORACLE = (
 @query("multimodal_byte_features", oracle=_BYTE_FEATURES_ORACLE)
 def multimodal_byte_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-extraction plumbing end-to-end: binary payload → Arrow batch →
-    Pandas UDF → fixed-width feature vector (16-bin byte histogram).
+    per-row Python (:func:`map_rows`) → fixed-width feature vector (16-bin
+    byte histogram).
 
     The histogram is emitted as 16 flat ``bin_00``..``bin_15`` columns —
     downstream comparators (and the driver's value-hasher) only ever see
@@ -325,9 +318,9 @@ def multimodal_resize_box_integer(spark: SparkSession, sf_dir: str) -> DataFrame
     round-trips through the real P5 netpbm encode -> :func:`resize_image`
     path, so the encoded-format resize is exercised on every row.
 
-    Scale: embarrassingly parallel O(pixels) mapInPandas work after the
-    standard bounded round-robin fan-out; the factor/geometry contract is
-    the only per-row state.
+    Scale: embarrassingly parallel O(pixels) :func:`map_rows` work after
+    the standard bounded round-robin fan-out; the factor/geometry contract
+    is the only per-row state.
     """
     docs = load_table(spark, sf_dir, "documents")
     frames = docs.select("doc_id").repartition(
@@ -335,70 +328,30 @@ def multimodal_resize_box_integer(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     W = _RESIZE_W
 
-    def run(batches: Iterator) -> Iterator:
+    def row(doc_id):
         import hashlib
 
-        import pandas as pd
+        f = 2 + doc_id % 2
+        n_blocks = (W * W + 15) // 16
+        raster = b"".join(
+            hashlib.md5(f"{doc_id}:r:{k}".encode()).digest() for k in range(n_blocks)
+        )[: W * W]
+        out, ow, oh = resize_box(raster, W, W, f)
+        # encoded-format path must agree with the raster path
+        p5 = b"P5 %d %d 255\n" % (W, W) + raster
+        if resize_image(p5, f) != b"P5 %d %d 255\n" % (ow, oh) + out:
+            raise ValueError("P5 resize path disagrees with raster path")
+        yield {
+            "doc_id": doc_id,
+            "f": f,
+            "out_w": ow,
+            "sum_out": sum(out),
+            "pos_checksum": sum((i + 1) * out[i] for i in range(len(out))),
+        }
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                f = 2 + doc_id % 2
-                n_blocks = (W * W + 15) // 16
-                raster = b"".join(
-                    hashlib.md5(f"{doc_id}:r:{k}".encode()).digest()
-                    for k in range(n_blocks)
-                )[: W * W]
-                out, ow, oh = resize_box(raster, W, W, f)
-                # encoded-format path must agree with the raster path
-                p5 = b"P5 %d %d 255\n" % (W, W) + raster
-                if resize_image(p5, f) != b"P5 %d %d 255\n" % (ow, oh) + out:
-                    raise ValueError("P5 resize path disagrees with raster path")
-                rows.append({
-                    "doc_id": doc_id,
-                    "f": f,
-                    "out_w": ow,
-                    "sum_out": sum(out),
-                    "pos_checksum": sum((i + 1) * out[i] for i in range(len(out))),
-                })
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "f", "out_w", "sum_out", "pos_checksum"]
-            )
-
-    return frames.mapInPandas(
-        run,
-        schema="doc_id long, f int, out_w int, sum_out long, pos_checksum long",
+    return map_rows(
+        frames, row, "doc_id long, f int, out_w int, sum_out long, pos_checksum long"
     )
-
-
-def thumbnail_frame(media: DataFrame, n_bytes_out: int = 64) -> DataFrame:
-    """Deterministic stand-in for decode→resize→re-encode: stride-sample the
-    payload down to ``n_bytes_out`` bytes. Same mapInPandas shape a real
-    resize has: binary in, (smaller) binary out, one row per row."""
-    schema = StructType(
-        [
-            StructField("media_id", LongType(), False),
-            StructField("thumb", BinaryType(), True),
-            StructField("thumb_len", IntegerType(), False),
-        ]
-    )
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload or b"")
-                stride = max(1, len(b) // n_bytes_out)
-                thumb = b[::stride][:n_bytes_out]
-                rows.append(
-                    {"media_id": media_id, "thumb": thumb, "thumb_len": len(thumb)}
-                )
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, schema=schema)
 
 
 _FRAME_ORACLE = f"""
@@ -423,7 +376,7 @@ _FRAME_ORACLE = f"""
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video-style frame sampling: treat the opaque payload as a sequence of
     fixed-size frames, keep every FRAME_STRIDE-th, emit one row per sampled
-    frame — the one-binary-in, many-rows-out mapInPandas shape (the same
+    frame — the one-binary-in, many-rows-out :func:`map_rows` shape (the same
     plumbing a real ffmpeg-backed sampler needs; only the slicing lambda
     changes).
 
@@ -436,33 +389,24 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor memory, and output size is input/STRIDE.
     """
 
-    def run(batches: Iterator) -> Iterator:
+    step = 2 * FRAME_BYTES
+
+    def row(media_id, payload):
         import hashlib
 
-        import pandas as pd
-
-        step = 2 * FRAME_BYTES
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                hx = bytes(payload or b"").hex().upper()
-                n_frames = (len(hx) + step - 1) // step
-                for i in range(0, n_frames, FRAME_STRIDE):
-                    fh = hx[i * step : (i + 1) * step]
-                    rows.append(
-                        {
-                            "media_id": media_id,
-                            "frame_idx": i,
-                            "frame_len": len(fh) // 2,
-                            "frame_md5": hashlib.md5(fh.encode()).hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame(rows)
+        hx = (payload or b"").hex().upper()
+        n_frames = (len(hx) + step - 1) // step
+        for i in range(0, n_frames, FRAME_STRIDE):
+            fh = hx[i * step : (i + 1) * step]
+            yield {
+                "media_id": media_id,
+                "frame_idx": i,
+                "frame_len": len(fh) // 2,
+                "frame_md5": hashlib.md5(fh.encode()).hexdigest(),
+            }
 
     docs = load_table(spark, sf_dir, "documents")
-    return media_frame(docs).select("media_id", "payload").mapInPandas(
-        run, schema=FRAME_SCHEMA
-    )
+    return map_rows(media_frame(docs).select("media_id", "payload"), row, FRAME_SCHEMA)
 
 
 # --- real codec-free decode: raw PCM audio -----------------------------------
@@ -521,8 +465,8 @@ def multimodal_audio_pcm_features(spark: SparkSession, sf_dir: str) -> DataFrame
     (compressed formats genuinely need external codecs), this path is a
     full decode→feature pipeline running end to end in this container.
 
-    Implementation is a VECTORIZED pandas/numpy mapInPandas —
-    ``np.frombuffer`` reinterprets each Arrow binary zero-copy, the feature
+    Implementation is VECTORIZED numpy per row under :func:`map_rows` —
+    ``np.frombuffer`` reinterprets each binary payload zero-copy, the feature
     math is numpy reductions (no per-sample Python) — and the whole
     relation is still hash-checked: DuckDB rebuilds every int16 sample from
     hex nibbles and computes the same integer features. Zero shuffles;
@@ -531,32 +475,62 @@ def multimodal_audio_pcm_features(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = load_table(spark, sf_dir, "documents")
     audio = media_frame(docs).filter(F.col("media_type") == "audio")
 
-    def run(batches: Iterator) -> Iterator:
+    def row(media_id, payload):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload or b"")
-                n = len(b) // 2
-                smp = np.frombuffer(b[: 2 * n], dtype="<i2").astype(np.int64)
-                neg = smp < 0
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "n_samples": n,
-                        "energy": int((smp * smp).sum()),
-                        "peak_abs": int(np.abs(smp).max()) if n else 0,
-                        "zero_crossings": int((neg[1:] != neg[:-1]).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
+        b = payload or b""
+        n = len(b) // 2
+        smp = np.frombuffer(b[: 2 * n], dtype="<i2").astype(np.int64)
+        neg = smp < 0
+        yield {
+            "media_id": media_id,
+            "n_samples": n,
+            "energy": int((smp * smp).sum()),
+            "peak_abs": int(np.abs(smp).max()) if n else 0,
+            "zero_crossings": int((neg[1:] != neg[:-1]).sum()),
+        }
 
-    return audio.select("media_id", "payload").mapInPandas(run, schema=PCM_SCHEMA)
+    return map_rows(audio.select("media_id", "payload"), row, PCM_SCHEMA)
 
 
 # --- real codec-free decode: raw grayscale raster ----------------------------
+
+
+def gray(pixels, w: int, h: int, ch: int):
+    """The (h, w) int64 luminance plane of an 8-bit raster (a byte string or
+    a uint8 array): the samples themselves for ch=1, (r + g + b) // 3 for
+    ch=3."""
+    import numpy as np
+
+    a = pixels if isinstance(pixels, np.ndarray) else np.frombuffer(pixels, dtype=np.uint8)
+    a = a.astype(np.int64)
+    return a.reshape(h, w) if ch == 1 else a.reshape(h, w, 3).sum(axis=2) // 3
+
+
+def flat_blocks(blocks: bytes, wb: int, hb: int):
+    """The (8*hb, 8*wb) uint8 raster of flat 8x8 blocks whose levels are the
+    ``wb * hb`` bytes of ``blocks``, row-major: the exact-codec subspace the
+    JPEG and MJPEG-AVI oracles recompute."""
+    import numpy as np
+
+    grid = np.frombuffer(blocks, dtype=np.uint8).reshape(hb, wb)
+    return np.kron(grid, np.ones((8, 8), dtype=np.uint8))
+
+
+def raster_stats(a) -> tuple[int, int, int]:
+    """(mean_lum, hgrad, vgrad) of a 2-D luminance plane: the floor mean
+    (0 when empty) and the summed absolute differences between horizontal
+    and between vertical neighbours — exact integers every oracle here
+    recomputes."""
+    import numpy as np
+
+    a = np.asarray(a, dtype=np.int64)
+    return (
+        int(a.sum() // a.size) if a.size else 0,
+        int(np.abs(np.diff(a, axis=1)).sum()),
+        int(np.abs(np.diff(a, axis=0)).sum()),
+    )
+
 
 RASTER_W = 32  # raw 8-bit grayscale row width
 
@@ -610,45 +584,30 @@ def multimodal_raster_gradients(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard blur/quality heuristics for image-corpus filtering).
 
     numpy path: zero-copy ``np.frombuffer`` → reshape(rows, {RASTER_W}) →
-    vectorized `np.abs(np.diff(...))` along each axis. Fully hash-checked —
-    DuckDB rebuilds every pixel from hex nibbles and computes identical
-    integer sums. PNG, baseline JPEG and H.264 I-PCM all decode for real
-    (multimodal_png_decode / multimodal_jpeg_decode /
-    multimodal_h264_ipcm_decode); this shows the identical pipeline on the
-    format class that needs no codec at all.
+    :func:`raster_stats` (vectorized absolute differences along each
+    axis). Fully hash-checked — DuckDB rebuilds every pixel from hex
+    nibbles and computes identical integer sums. PNG, baseline JPEG and
+    H.264 I-PCM all decode for real (multimodal_png_decode /
+    multimodal_jpeg_decode / multimodal_h264_ipcm_decode); this shows the
+    identical pipeline on the format class that needs no codec at all.
     """
     docs = load_table(spark, sf_dir, "documents")
     imgs = media_frame(docs).filter(F.col("media_type") == "image")
 
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def row(media_id, payload):
+        b = payload or b""
+        n_rows = len(b) // RASTER_W
+        a = gray(b[: n_rows * RASTER_W], RASTER_W, n_rows, 1)
+        mean_lum, hgrad, vgrad = raster_stats(a)
+        yield {
+            "media_id": media_id,
+            "n_rows": n_rows,
+            "mean_lum": mean_lum,
+            "hgrad": hgrad,
+            "vgrad": vgrad,
+        }
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload or b"")
-                n_rows = len(b) // RASTER_W
-                npx = n_rows * RASTER_W
-                a = (
-                    np.frombuffer(b[:npx], dtype=np.uint8)
-                    .astype(np.int64)
-                    .reshape(n_rows, RASTER_W)
-                    if npx
-                    else np.zeros((0, RASTER_W), dtype=np.int64)
-                )
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "n_rows": n_rows,
-                        "mean_lum": int(a.sum() // npx) if npx else 0,
-                        "hgrad": int(np.abs(np.diff(a, axis=1)).sum()),
-                        "vgrad": int(np.abs(np.diff(a, axis=0)).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return imgs.select("media_id", "payload").mapInPandas(run, schema=RASTER_SCHEMA)
+    return map_rows(imgs.select("media_id", "payload"), row, RASTER_SCHEMA)
 
 
 # --- real codec-free compression: RLE encode -> decode round trip -----------
@@ -738,33 +697,26 @@ def multimodal_rle_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     media = media_frame(docs)
 
-    def run(batches: Iterator) -> Iterator:
+    def row(media_id, payload):
         import hashlib
 
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload or b"")
-                counts, vals = rle_encode(b)
-                decoded = rle_decode(counts, vals)
-                assert decoded == b  # codec invariant, cheap on test data
-                arr = np.frombuffer(decoded, dtype=np.uint8)
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "n_raw": len(b),
-                        "n_runs": int(counts.size),
-                        "n_compressed": int(2 * counts.size),
-                        "mean_byte": int(arr.sum() // arr.size) if arr.size else 0,
-                        "decoded_md5": hashlib.md5(decoded).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(rows)
+        b = payload or b""
+        counts, vals = rle_encode(b)
+        decoded = rle_decode(counts, vals)
+        assert decoded == b  # codec invariant, cheap on test data
+        arr = np.frombuffer(decoded, dtype=np.uint8)
+        yield {
+            "media_id": media_id,
+            "n_raw": len(b),
+            "n_runs": int(counts.size),
+            "n_compressed": int(2 * counts.size),
+            "mean_byte": int(arr.sum() // arr.size) if arr.size else 0,
+            "decoded_md5": hashlib.md5(decoded).hexdigest(),
+        }
 
-    return media.select("media_id", "payload").mapInPandas(run, schema=RLE_SCHEMA)
+    return map_rows(media.select("media_id", "payload"), row, RLE_SCHEMA)
 
 
 # --- perceptual average-hash (aHash) over raw rasters -----------------------
@@ -847,55 +799,41 @@ def multimodal_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     short to fill a row-band leave those bits 0 by definition (bcnt = 0),
     deterministically on both engines.
 
-    Scale: embarrassingly parallel mapInPandas over Arrow batches (the
+    Scale: embarrassingly parallel :func:`map_rows` over Arrow batches (the
     ``multimodal_raster_gradients`` shape); per-image work is one numpy
     pass + a 64-bin scatter-add.
     """
     docs = load_table(spark, sf_dir, "documents")
     imgs = media_frame(docs).filter(F.col("media_type") == "image")
 
-    def run(batches: Iterator) -> Iterator:
+    def row(media_id, payload):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload or b"")
-                n_rows = len(b) // RASTER_W
-                npx = n_rows * RASTER_W
-                if npx == 0:
-                    continue
-                a = (
-                    np.frombuffer(b[:npx], dtype=np.uint8)
-                    .astype(np.int64)
-                    .reshape(n_rows, RASTER_W)
-                )
-                r_idx = (8 * np.arange(n_rows)) // n_rows
-                c_idx = np.arange(RASTER_W) // 4
-                blk = (r_idx[:, None] * 8 + c_idx[None, :]).ravel()
-                px = a.ravel()
-                bsum = np.zeros(64, dtype=np.int64)
-                bcnt = np.zeros(64, dtype=np.int64)
-                np.add.at(bsum, blk, px)
-                np.add.at(bcnt, blk, 1)
-                gsum = int(px.sum())
-                bit = ((bcnt > 0) & (bsum * npx > gsum * bcnt)).astype(
-                    np.int64
-                )
-                hi = int((bit[:32] << np.arange(32)).sum())
-                lo = int((bit[32:] << np.arange(32)).sum())
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "n_rows": n_rows,
-                        "mean_lum": gsum // npx,
-                        "ahash_hex": f"{hi:08x}{lo:08x}",
-                    }
-                )
-            yield pd.DataFrame(rows)
+        b = payload or b""
+        n_rows = len(b) // RASTER_W
+        npx = n_rows * RASTER_W
+        if npx == 0:
+            return
+        px = np.frombuffer(b[:npx], dtype=np.uint8).astype(np.int64)
+        r_idx = (8 * np.arange(n_rows)) // n_rows
+        c_idx = np.arange(RASTER_W) // 4
+        blk = (r_idx[:, None] * 8 + c_idx[None, :]).ravel()
+        bsum = np.zeros(64, dtype=np.int64)
+        bcnt = np.zeros(64, dtype=np.int64)
+        np.add.at(bsum, blk, px)
+        np.add.at(bcnt, blk, 1)
+        gsum = int(px.sum())
+        bit = ((bcnt > 0) & (bsum * npx > gsum * bcnt)).astype(np.int64)
+        hi = int((bit[:32] << np.arange(32)).sum())
+        lo = int((bit[32:] << np.arange(32)).sum())
+        yield {
+            "media_id": media_id,
+            "n_rows": n_rows,
+            "mean_lum": gsum // npx,
+            "ahash_hex": f"{hi:08x}{lo:08x}",
+        }
 
-    return imgs.select("media_id", "payload").mapInPandas(run, schema=AHASH_SCHEMA)
+    return map_rows(imgs.select("media_id", "payload"), row, AHASH_SCHEMA)
 
 
 # --- energy-threshold VAD segmentation over raw PCM -------------------------
@@ -979,55 +917,38 @@ def multimodal_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame
     samples from hex nibbles and reproduces frames, flags, and segment
     runs exactly.
 
-    Scale: embarrassingly parallel mapInPandas; per-clip work is one
+    Scale: embarrassingly parallel :func:`map_rows`; per-clip work is one
     vectorized reshape + reduceat, memory bounded by the Arrow batch.
     """
     docs = load_table(spark, sf_dir, "documents")
     clips = media_frame(docs).filter(F.col("media_type") == "audio")
 
-    def run(batches: Iterator) -> Iterator:
+    def row(media_id, payload):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload or b"")
-                n_samples = len(b) // 2
-                smp = np.frombuffer(
-                    b[: n_samples * 2], dtype="<i2"
-                ).astype(np.int64)
-                n_frames = n_samples // VAD_FRAME
-                if n_frames == 0:
-                    continue
-                fe = (
-                    (smp[: n_frames * VAD_FRAME] ** 2)
-                    .reshape(n_frames, VAD_FRAME)
-                    .sum(axis=1)
-                )
-                total = int(fe.sum())
-                a = (fe * n_frames > total).astype(np.int64)
-                # run starts: a[f]==1 and (f==0 or a[f-1]==0)
-                prev = np.concatenate(([0], a[:-1]))
-                starts = int(((a == 1) & (prev == 0)).sum())
-                active_idx = np.nonzero(a)[0]
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "n_frames": n_frames,
-                        "n_active": int(a.sum()),
-                        "n_segments": starts,
-                        "first_active": int(active_idx[0])
-                        if active_idx.size
-                        else None,
-                        "last_active": int(active_idx[-1])
-                        if active_idx.size
-                        else None,
-                    }
-                )
-            yield pd.DataFrame(rows)
+        b = payload or b""
+        n_samples = len(b) // 2
+        smp = np.frombuffer(b[: n_samples * 2], dtype="<i2").astype(np.int64)
+        n_frames = n_samples // VAD_FRAME
+        if n_frames == 0:
+            return
+        fe = (smp[: n_frames * VAD_FRAME] ** 2).reshape(n_frames, VAD_FRAME).sum(axis=1)
+        total = int(fe.sum())
+        a = (fe * n_frames > total).astype(np.int64)
+        # run starts: a[f]==1 and (f==0 or a[f-1]==0)
+        prev = np.concatenate(([0], a[:-1]))
+        starts = int(((a == 1) & (prev == 0)).sum())
+        active_idx = np.nonzero(a)[0]
+        yield {
+            "media_id": media_id,
+            "n_frames": n_frames,
+            "n_active": int(a.sum()),
+            "n_segments": starts,
+            "first_active": int(active_idx[0]) if active_idx.size else None,
+            "last_active": int(active_idx[-1]) if active_idx.size else None,
+        }
 
-    return clips.select("media_id", "payload").mapInPandas(run, schema=VAD_SCHEMA)
+    return map_rows(clips.select("media_id", "payload"), row, VAD_SCHEMA)
 
 
 # --- video shot-boundary detection (frame-difference method) -----------------
@@ -1070,7 +991,7 @@ def multimodal_video_shot_boundaries(spark: SparkSession, sf_dir: str) -> DataFr
     boundary is declared where the distance exceeds a threshold. This is
     the standard histogram/pixel-difference shot detector reduced to its
     Spark shape: one binary in, a frame-pair relation out, vectorized
-    numpy in the middle (``frombuffer`` → ``reshape`` → ``np.diff`` along
+    numpy in the middle (``frombuffer`` → ``reshape`` → differences along
     the frame axis — the same kernel a real YUV-plane detector runs).
 
     Fully hash-oracled (rare for a video op): distances are exact integer
@@ -1082,40 +1003,33 @@ def multimodal_video_shot_boundaries(spark: SparkSession, sf_dir: str) -> DataFr
     segment logic (interval islands over boundary indices) are unchanged.
     """
 
-    def run(batches: Iterator) -> Iterator:
+    def row(media_id, payload):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload or b"")
-                nf = len(raw) // FRAME_BYTES
-                if nf >= 2:
-                    arr = (
-                        np.frombuffer(raw[: nf * FRAME_BYTES], dtype=np.uint8)
-                        .reshape(nf, FRAME_BYTES)
-                        .astype(np.int16)
-                    )
-                    diffs = np.abs(np.diff(arr, axis=0)).sum(axis=1, dtype=np.int64)
-                    for k in np.nonzero(diffs > SHOT_DIFF_H)[0]:
-                        rows.append(
-                            {
-                                "media_id": media_id,
-                                "frame_idx": int(k),
-                                "frame_diff": int(diffs[k]),
-                                "n_frames": nf,
-                            }
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "frame_diff", "n_frames"],
-            )
+        raw = payload or b""
+        nf = len(raw) // FRAME_BYTES
+        if nf < 2:
+            return
+        arr = (
+            np.frombuffer(raw[: nf * FRAME_BYTES], dtype=np.uint8)
+            .reshape(nf, FRAME_BYTES)
+            .astype(np.int16)
+        )
+        diffs = np.abs(arr[1:] - arr[:-1]).sum(axis=1, dtype=np.int64)
+        for k in np.nonzero(diffs > SHOT_DIFF_H)[0]:
+            yield {
+                "media_id": media_id,
+                "frame_idx": int(k),
+                "frame_diff": int(diffs[k]),
+                "n_frames": nf,
+            }
 
     docs = load_table(spark, sf_dir, "documents")
     videos = media_frame(docs).filter(F.col("media_type") == "video")
-    return videos.select("media_id", "payload").mapInPandas(
-        run, schema="media_id long, frame_idx int, frame_diff long, n_frames int"
+    return map_rows(
+        videos.select("media_id", "payload"),
+        row,
+        "media_id long, frame_idx int, frame_diff long, n_frames int",
     )
 
 
@@ -1244,6 +1158,26 @@ _PPM_ORACLE = """
 """
 
 
+_PPM_SCHEMA = (
+    "media_id long, fmt string, w int, h int, mean_lum int, hgrad long, vgrad long"
+)
+
+
+def _ppm_row(media_id, payload):
+    """The decoded statistics of one netpbm file, one :data:`_PPM_ORACLE` row."""
+    fmt, w, h, _maxval, raster = parse_netpbm(payload)
+    mean_lum, hgrad, vgrad = raster_stats(gray(raster, w, h, 1 if fmt == "P5" else 3))
+    yield {
+        "media_id": media_id,
+        "fmt": fmt,
+        "w": w,
+        "h": h,
+        "mean_lum": mean_lum,
+        "hgrad": hgrad,
+        "vgrad": vgrad,
+    }
+
+
 @query("multimodal_ppm_decode", oracle=_PPM_ORACLE)
 def multimodal_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image-format decode: assemble genuine binary netpbm files (PGM
@@ -1260,47 +1194,13 @@ def multimodal_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     drives the hgrad row-boundary term — any header mis-parse shifts those
     sums and fails the hash compare.
 
-    Scale: embarrassingly parallel mapInPandas over Arrow batches, zero
+    Scale: embarrassingly parallel :func:`map_rows` over Arrow batches, zero
     shuffles; per-file work is O(pixels). A production corpus of .pgm/.ppm
     files on object storage reads via ``spark.read.format("binaryFile")``
     into exactly this (path, content) shape.
     """
     files = netpbm_files(load_table(spark, sf_dir, "documents"))
-
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                fmt, w_, h_, _maxval, raster = parse_netpbm(bytes(payload))
-                a = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
-                if fmt == "P6":
-                    a = a.reshape(h_, w_, 3).sum(axis=2) // 3
-                else:
-                    a = a.reshape(h_, w_)
-                npx = w_ * h_
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "fmt": fmt,
-                        "w": w_,
-                        "h": h_,
-                        "mean_lum": int(a.sum() // npx),
-                        "hgrad": int(np.abs(np.diff(a, axis=1)).sum()),
-                        "vgrad": int(np.abs(np.diff(a, axis=0)).sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "fmt", "w", "h", "mean_lum", "hgrad", "vgrad"],
-            )
-
-    return files.mapInPandas(
-        run, schema="media_id long, fmt string, w int, h int, "
-                    "mean_lum int, hgrad long, vgrad long"
-    )
+    return map_rows(files, _ppm_row, _PPM_SCHEMA)
 
 
 # --- real container-format decode #2: RIFF/WAVE (canonical PCM .wav) --------
@@ -1405,7 +1305,7 @@ def multimodal_wav_riff_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     raster offset — shifts every sample and fails the hash compare. A
     production corpus of .wav blobs on object storage arrives via
     ``spark.read.format("binaryFile")`` into exactly this shape; scale is
-    embarrassingly parallel mapInPandas, zero shuffles.
+    embarrassingly parallel :func:`map_rows`, zero shuffles.
     """
     docs = load_table(spark, sf_dir, "documents")
     audio = media_frame(docs).filter(F.col("media_type") == "audio")
@@ -1437,39 +1337,29 @@ def multimodal_wav_riff_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("media_id", F.expr(wav).alias("payload"))
     )
 
-    def run(batches: Iterator) -> Iterator:
+    def row(media_id, payload):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                channels, rate, data_b = parse_wav(bytes(payload))
-                smp = np.frombuffer(data_b, dtype="<i2").astype(np.int64)
-                n = len(smp)
-                neg = smp < 0
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "channels": channels,
-                        "sample_rate": rate,
-                        "n_samples": n,
-                        "duration_us": n * 1_000_000 // rate,
-                        "energy": int((smp * smp).sum()),
-                        "peak_abs": int(np.abs(smp).max()) if n else 0,
-                        "zero_crossings": int((neg[1:] != neg[:-1]).sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "channels", "sample_rate", "n_samples",
-                         "duration_us", "energy", "peak_abs", "zero_crossings"],
-            )
+        channels, rate, data_b = parse_wav(payload)
+        smp = np.frombuffer(data_b, dtype="<i2").astype(np.int64)
+        n = len(smp)
+        neg = smp < 0
+        yield {
+            "media_id": media_id,
+            "channels": channels,
+            "sample_rate": rate,
+            "n_samples": n,
+            "duration_us": n * 1_000_000 // rate,
+            "energy": int((smp * smp).sum()),
+            "peak_abs": int(np.abs(smp).max()) if n else 0,
+            "zero_crossings": int((neg[1:] != neg[:-1]).sum()),
+        }
 
-    return files.mapInPandas(
-        run,
-        schema="media_id long, channels int, sample_rate int, n_samples int, "
-               "duration_us long, energy long, peak_abs int, zero_crossings int",
+    return map_rows(
+        files,
+        row,
+        "media_id long, channels int, sample_rate int, n_samples int, "
+        "duration_us long, energy long, peak_abs int, zero_crossings int",
     )
 
 
@@ -1575,34 +1465,23 @@ def multimodal_tar_member_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         build, schema="archive_id long, payload binary"
     )
 
-    def index(batches: Iterator) -> Iterator:
+    def index(archive_id, payload):
         import hashlib
 
-        import pandas as pd
+        for name, size, data, ok in parse_tar_members(payload):
+            yield {
+                "archive_id": archive_id,
+                "member_name": name,
+                "size": size,
+                "content_md5": hashlib.md5(data).hexdigest(),
+                "chksum_ok": ok,
+            }
 
-        for pdf in batches:
-            rows = []
-            for archive_id, payload in zip(pdf["archive_id"], pdf["payload"]):
-                for name, size, data, ok in parse_tar_members(bytes(payload)):
-                    rows.append(
-                        {
-                            "archive_id": archive_id,
-                            "member_name": name,
-                            "size": size,
-                            "content_md5": hashlib.md5(data).hexdigest(),
-                            "chksum_ok": ok,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["archive_id", "member_name", "size",
-                         "content_md5", "chksum_ok"],
-            )
-
-    return archives.mapInPandas(
+    return map_rows(
+        archives,
         index,
-        schema="archive_id long, member_name string, size long, "
-               "content_md5 string, chksum_ok boolean",
+        "archive_id long, member_name string, size long, "
+        "content_md5 string, chksum_ok boolean",
     )
 
 
@@ -1615,8 +1494,8 @@ def ingest_binaryfile_netpbm(spark: SparkSession, sf_dir: str) -> DataFrame:
     written distributed — each task writes its partition's files, the way
     a prep job lands blobs on object storage), then ingested with
     ``spark.read.format("binaryFile")`` — Spark's whole-file connector
-    (path, modificationTime, length, content) — and decoded through the
-    same :func:`parse_netpbm` grammar. Shares the ppm-decode oracle: the
+    (path, modificationTime, length, content) — and decoded by the same
+    row function as ``multimodal_ppm_decode``. Shares its oracle: the
     write→scan→decode loop must reproduce exactly the statistics computed
     from the in-memory payloads, proving no byte is lost or reordered on
     the storage round trip.
@@ -1649,54 +1528,18 @@ def ingest_binaryfile_netpbm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     files = netpbm_files(load_table(spark, sf_dir, "documents"))
 
-    def write_files(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                ext = "pgm" if media_id % 2 == 0 else "ppm"
-                fname = os.path.join(out_dir, f"img_{int(media_id):08d}.{ext}")
-                with open(fname, "wb") as f:
-                    f.write(bytes(payload))
-            yield pd.DataFrame({"n": [len(pdf)]})
+    def write_file(media_id, payload):
+        ext = "pgm" if media_id % 2 == 0 else "ppm"
+        with open(os.path.join(out_dir, f"img_{media_id:08d}.{ext}"), "wb") as f:
+            f.write(payload)
+        yield {"n": 1}
 
     # distributed write: each task lands its partition's files
-    files.mapInPandas(write_files, schema="n long").agg(F.sum("n")).collect()
+    map_rows(files, write_file, "n long").agg(F.sum("n")).collect()
 
     blobs = spark.read.format("binaryFile").load(out_dir)
-
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                media_id = int(os.path.basename(path).split("_")[1].split(".")[0])
-                fmt, w_, h_, _maxval, raster = parse_netpbm(bytes(content))
-                a = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
-                a = a.reshape(h_, w_, 3).sum(axis=2) // 3 if fmt == "P6" else a.reshape(h_, w_)
-                npx = w_ * h_
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "fmt": fmt,
-                        "w": w_,
-                        "h": h_,
-                        "mean_lum": int(a.sum() // npx),
-                        "hgrad": int(np.abs(np.diff(a, axis=1)).sum()),
-                        "vgrad": int(np.abs(np.diff(a, axis=0)).sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "fmt", "w", "h", "mean_lum", "hgrad", "vgrad"],
-            )
-
-    return blobs.select("path", "content").mapInPandas(
-        run, schema="media_id long, fmt string, w int, h int, "
-                    "mean_lum int, hgrad long, vgrad long"
-    )
+    media_id = F.regexp_extract("path", r"img_(\d+)\.p[gp]m$", 1).cast("long").alias("media_id")
+    return map_rows(blobs.select(media_id, "content"), _ppm_row, _PPM_SCHEMA)
 
 
 # --- real COMPRESSED-format decode: gzip (RFC 1952 container + DEFLATE) -----
@@ -1768,7 +1611,7 @@ def multimodal_gzip_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     compressed-format gap with the one compression codec the standard
     library ships (the same inflate the PNG decoder builds on).
 
-    Scale: both stages are embarrassingly parallel mapInPandas over Arrow
+    Scale: both stages are embarrassingly parallel :func:`map_rows` over Arrow
     batches; compression state is per-file, memory is bounded by batch
     size. A corpus of existing .gz blobs enters at stage 2 via
     ``binaryFile`` (see ingest_binaryfile_netpbm); multi-member archives
@@ -1776,60 +1619,38 @@ def multimodal_gzip_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
 
-    def compress(batches: Iterator) -> Iterator:
+    def compress(doc_id, text):
         import struct
         import zlib
 
-        import pandas as pd
+        data = text.encode("utf-8")
+        flg = 8 if doc_id % 3 == 0 else 0
+        hdr = b"\x1f\x8b\x08" + bytes([flg]) + b"\x00\x00\x00\x00\x00\xff"
+        if flg & 8:
+            hdr += f"doc_{doc_id:08d}.txt".encode("latin-1") + b"\x00"
+        co = zlib.compressobj(6, zlib.DEFLATED, -15)
+        body = co.compress(data) + co.flush()
+        trailer = struct.pack("<II", zlib.crc32(data) & 0xFFFFFFFF, len(data) & 0xFFFFFFFF)
+        yield {"media_id": doc_id, "payload": hdr + body + trailer}
 
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = str(text).encode("utf-8")
-                flg = 8 if doc_id % 3 == 0 else 0
-                hdr = b"\x1f\x8b\x08" + bytes([flg]) + b"\x00\x00\x00\x00\x00\xff"
-                if flg & 8:
-                    hdr += f"doc_{int(doc_id):08d}.txt".encode("latin-1") + b"\x00"
-                co = zlib.compressobj(6, zlib.DEFLATED, -15)
-                body = co.compress(data) + co.flush()
-                trailer = struct.pack(
-                    "<II", zlib.crc32(data) & 0xFFFFFFFF, len(data) & 0xFFFFFFFF
-                )
-                ids.append(int(doc_id))
-                payloads.append(hdr + body + trailer)
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    gz = map_rows(docs.select("doc_id", "text"), compress, "media_id long, payload binary")
 
-    gz = docs.select("doc_id", "text").mapInPandas(
-        compress, schema="media_id long, payload binary"
-    )
-
-    def decode(batches: Iterator) -> Iterator:
+    def decode(media_id, payload):
         import hashlib
 
-        import pandas as pd
+        fname, decoded, crc_ok = parse_gzip(payload)
+        yield {
+            "media_id": media_id,
+            "fname": fname,
+            "n_raw": len(decoded),
+            "decoded_md5": hashlib.md5(decoded).hexdigest(),
+            "crc_ok": crc_ok,
+        }
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                fname, decoded, crc_ok = parse_gzip(bytes(payload))
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "fname": fname,
-                        "n_raw": len(decoded),
-                        "decoded_md5": hashlib.md5(decoded).hexdigest(),
-                        "crc_ok": crc_ok,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "fname", "n_raw", "decoded_md5", "crc_ok"],
-            )
-
-    return gz.mapInPandas(
+    return map_rows(
+        gz,
         decode,
-        schema="media_id long, fname string, n_raw long, "
-               "decoded_md5 string, crc_ok boolean",
+        "media_id long, fname string, n_raw long, decoded_md5 string, crc_ok boolean",
     )
 
 
@@ -1944,50 +1765,33 @@ def multimodal_zip_member_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         build, schema="archive_id long, payload binary"
     )
 
-    def index(batches: Iterator) -> Iterator:
+    def index(archive_id, payload):
         import zlib
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for archive_id, payload in zip(pdf["archive_id"], pdf["payload"]):
-                b = bytes(payload)
-                for name, csize, usize, crc, off_ok, data_start in (
-                    parse_zip_central_directory(b)
-                ):
-                    # extract the STORED payload at the offset the central
-                    # directory's local-header back-reference resolves to —
-                    # never by signature scan (a payload containing
-                    # "PK\\x03\\x04" would derail that; round-6 advice)
-                    data = (
-                        b[data_start : data_start + csize]
-                        if data_start is not None
-                        else None
-                    )
-                    crc_ok = (
-                        data is not None
-                        and (zlib.crc32(data) & 0xFFFFFFFF) == crc
-                        and len(data) == usize
-                    )
-                    rows.append(
-                        {
-                            "archive_id": archive_id,
-                            "member_name": name,
-                            "size": usize,
-                            "crc_ok": crc_ok,
-                            "offset_ok": off_ok,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["archive_id", "member_name", "size", "crc_ok", "offset_ok"],
+        for name, csize, usize, crc, off_ok, start in parse_zip_central_directory(payload):
+            # extract the STORED payload at the offset the central
+            # directory's local-header back-reference resolves to —
+            # never by signature scan (a payload containing
+            # "PK\\x03\\x04" would derail that; round-6 advice)
+            data = None if start is None else payload[start : start + csize]
+            crc_ok = (
+                data is not None
+                and (zlib.crc32(data) & 0xFFFFFFFF) == crc
+                and len(data) == usize
             )
+            yield {
+                "archive_id": archive_id,
+                "member_name": name,
+                "size": usize,
+                "crc_ok": crc_ok,
+                "offset_ok": off_ok,
+            }
 
-    return archives.mapInPandas(
+    return map_rows(
+        archives,
         index,
-        schema="archive_id long, member_name string, size long, "
-               "crc_ok boolean, offset_ok boolean",
+        "archive_id long, member_name string, size long, "
+        "crc_ok boolean, offset_ok boolean",
     )
 
 
@@ -2216,7 +2020,7 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode rule), so the oracle proves every predictor ran on every file
     at least 5 rows tall.
 
-    Scale: two chained mapInPandas stages, embarrassingly parallel, no
+    Scale: two chained :func:`map_rows` stages, embarrassingly parallel, no
     shuffle; per-file work is O(pixels) + one deflate/inflate. On a real
     corpus the first stage is replaced by a binaryFile scan of .png blobs
     and the decode stage is unchanged.
@@ -2227,56 +2031,31 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     files = netpbm_files(load_table(spark, sf_dir, "documents"))
 
-    def transcode(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def transcode(media_id, payload):
+        fmt, w, h, _maxval, raster = parse_netpbm(payload)
+        yield {"media_id": media_id, "png": encode_png(raster, w, h, 1 if fmt == "P5" else 3)}
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                fmt, w_, h_, _maxval, raster = parse_netpbm(bytes(payload))
-                ch = 1 if fmt == "P5" else 3
-                rows.append(
-                    {"media_id": media_id, "png": encode_png(raster, w_, h_, ch)}
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "png"])
+    pngs = map_rows(files, transcode, "media_id long, png binary")
 
-    pngs = files.mapInPandas(transcode, schema="media_id long, png binary")
+    def decode(media_id, payload):
+        w, h, color, raster, mask = parse_png(payload)
+        mean_lum, hgrad, vgrad = raster_stats(gray(raster, w, h, 1 if color == 0 else 3))
+        yield {
+            "media_id": media_id,
+            "color": "gray" if color == 0 else "rgb",
+            "w": w,
+            "h": h,
+            "mean_lum": mean_lum,
+            "hgrad": hgrad,
+            "vgrad": vgrad,
+            "filters_mask": mask,
+        }
 
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["png"]):
-                w_, h_, color, raster, mask = parse_png(bytes(payload))
-                a = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
-                if color == 2:
-                    a = a.reshape(h_, w_, 3).sum(axis=2) // 3
-                else:
-                    a = a.reshape(h_, w_)
-                npx = w_ * h_
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "color": "gray" if color == 0 else "rgb",
-                        "w": w_,
-                        "h": h_,
-                        "mean_lum": int(a.sum() // npx),
-                        "hgrad": int(np.abs(np.diff(a, axis=1)).sum()),
-                        "vgrad": int(np.abs(np.diff(a, axis=0)).sum()),
-                        "filters_mask": mask,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "color", "w", "h", "mean_lum",
-                         "hgrad", "vgrad", "filters_mask"],
-            )
-
-    return pngs.mapInPandas(
-        run, schema="media_id long, color string, w int, h int, "
-                    "mean_lum int, hgrad long, vgrad long, filters_mask int"
+    return map_rows(
+        pngs,
+        decode,
+        "media_id long, color string, w int, h int, "
+        "mean_lum int, hgrad long, vgrad long, filters_mask int",
     )
 
 
@@ -2419,62 +2198,37 @@ def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``data_offset`` additionally proves the header arithmetic (54 for
     24-bpp, 54+1024 past the palette for 8-bpp).
 
-    Scale: identical profile to the PNG op — two chained mapInPandas
+    Scale: identical profile to the PNG op — two chained :func:`map_rows`
     stages, zero shuffles, O(pixels) per file; a real corpus of .bmp blobs
     enters at stage 2 from a binaryFile scan.
     """
     files = netpbm_files(load_table(spark, sf_dir, "documents"))
 
-    def transcode(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def transcode(media_id, payload):
+        fmt, w, h, _maxval, raster = parse_netpbm(payload)
+        yield {"media_id": media_id, "bmp": encode_bmp(raster, w, h, 1 if fmt == "P5" else 3)}
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                fmt, w_, h_, _maxval, raster = parse_netpbm(bytes(payload))
-                ch = 1 if fmt == "P5" else 3
-                rows.append(
-                    {"media_id": media_id, "bmp": encode_bmp(raster, w_, h_, ch)}
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "bmp"])
+    bmps = map_rows(files, transcode, "media_id long, bmp binary")
 
-    bmps = files.mapInPandas(transcode, schema="media_id long, bmp binary")
+    def decode(media_id, payload):
+        w, h, ch, raster, data_off = parse_bmp(payload)
+        mean_lum, hgrad, vgrad = raster_stats(gray(raster, w, h, ch))
+        yield {
+            "media_id": media_id,
+            "fmt": "pal8" if ch == 1 else "bgr24",
+            "w": w,
+            "h": h,
+            "mean_lum": mean_lum,
+            "hgrad": hgrad,
+            "vgrad": vgrad,
+            "data_offset": data_off,
+        }
 
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["bmp"]):
-                w_, h_, ch, raster, data_off = parse_bmp(bytes(payload))
-                a = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
-                if ch == 3:
-                    a = a.reshape(h_, w_, 3).sum(axis=2) // 3
-                else:
-                    a = a.reshape(h_, w_)
-                npx = w_ * h_
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "fmt": "pal8" if ch == 1 else "bgr24",
-                        "w": w_,
-                        "h": h_,
-                        "mean_lum": int(a.sum() // npx),
-                        "hgrad": int(np.abs(np.diff(a, axis=1)).sum()),
-                        "vgrad": int(np.abs(np.diff(a, axis=0)).sum()),
-                        "data_offset": data_off,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "fmt", "w", "h", "mean_lum",
-                         "hgrad", "vgrad", "data_offset"],
-            )
-
-    return bmps.mapInPandas(
-        run, schema="media_id long, fmt string, w int, h int, "
-                    "mean_lum int, hgrad long, vgrad long, data_offset int"
+    return map_rows(
+        bmps,
+        decode,
+        "media_id long, fmt string, w int, h int, "
+        "mean_lum int, hgrad long, vgrad long, data_offset int",
     )
 
 
@@ -2591,7 +2345,7 @@ def multimodal_audio_mulaw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     all break the hash. Known-vector and idempotence tests in
     tests/test_ingestion.py.
 
-    Scale: one mapInPandas over the fan-out (same plan contract as the
+    Scale: one :func:`map_rows` over the fan-out (same plan contract as the
     codec pipelines); vectorized numpy, O(samples) per file, 2:1
     compression on the wire like the real codec.
     """
@@ -2607,37 +2361,28 @@ def multimodal_audio_mulaw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def run(batches: Iterator) -> Iterator:
+    def row(media_id, payload):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload)
-                n = len(b) // 2
-                smp = np.frombuffer(b[: 2 * n], dtype="<i2").astype(np.int64)
-                stream = mulaw_encode(smp).tobytes()  # the real wire bytes
-                codes = np.frombuffer(stream, dtype=np.uint8)
-                dec = mulaw_decode(codes)
-                rows.append({
-                    "media_id": media_id,
-                    "n_samples": n,
-                    "sum_code": int(codes.astype(np.int64).sum()),
-                    "sum_abs_decoded": int(np.abs(dec).sum()),
-                    "max_abs_err": int(np.abs(dec - smp).max()),
-                    "n_clipped": int((np.abs(smp) > 32635).sum()),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_samples", "sum_code",
-                         "sum_abs_decoded", "max_abs_err", "n_clipped"],
-            )
+        n = len(payload) // 2
+        smp = np.frombuffer(payload[: 2 * n], dtype="<i2").astype(np.int64)
+        stream = mulaw_encode(smp).tobytes()  # the real wire bytes
+        codes = np.frombuffer(stream, dtype=np.uint8)
+        dec = mulaw_decode(codes)
+        yield {
+            "media_id": media_id,
+            "n_samples": n,
+            "sum_code": int(codes.astype(np.int64).sum()),
+            "sum_abs_decoded": int(np.abs(dec).sum()),
+            "max_abs_err": int(np.abs(dec - smp).max()),
+            "n_clipped": int((np.abs(smp) > 32635).sum()),
+        }
 
-    return corpus.select("media_id", "payload").mapInPandas(
-        run,
-        schema="media_id long, n_samples int, sum_code long, "
-               "sum_abs_decoded long, max_abs_err int, n_clipped int",
+    return map_rows(
+        corpus.select("media_id", "payload"),
+        row,
+        "media_id long, n_samples int, sum_code long, "
+        "sum_abs_decoded long, max_abs_err int, n_clipped int",
     )
 
 
@@ -2793,7 +2538,7 @@ def multimodal_audio_adpcm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     step-table entry, clamp bound, index update — derails the predictor
     for the rest of the file and breaks the hash.
 
-    Scale: one mapInPandas over the fan-out; the recurrence is O(samples)
+    Scale: one :func:`map_rows` over the fan-out; the recurrence is O(samples)
     per file and inherently sequential per file (codec state), parallel
     across files — the same contract as every codec here.
     """
@@ -2809,46 +2554,36 @@ def multimodal_audio_adpcm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def run(batches: Iterator) -> Iterator:
+    def row(media_id, payload):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload)
-                n = len(b) // 2
-                smp = np.frombuffer(b[: 2 * n], dtype="<i2").astype(np.int64)
-                stream = adpcm_encode(smp)  # real 4-bit wire bytes
-                dec = adpcm_decode(stream, n)
-                # recompute the final index for the state column (decode
-                # tracks it internally; re-derive via a 1-sample replay)
-                pred, idx = 0, 0
-                for i in range(n):
-                    byte = stream[i // 2]
-                    nib = (byte >> 4) if i % 2 else (byte & 0x0F)
-                    st = IMA_STEP_TABLE[idx]
-                    vp = (st // 8 + ((nib >> 2) & 1) * st
-                          + ((nib >> 1) & 1) * (st // 2)
-                          + (nib & 1) * (st // 4))
-                    pred = pred - vp if nib >> 3 else pred + vp
-                    pred = max(-32768, min(32767, pred))
-                    idx = max(0, min(88, idx + IMA_INDEX_TABLE[nib]))
-                rows.append({
-                    "media_id": media_id,
-                    "n_samples": n,
-                    "sum_decoded": int(sum(dec)),
-                    "final_pred": pred,
-                    "final_idx": idx,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_samples", "sum_decoded",
-                         "final_pred", "final_idx"],
-            )
+        n = len(payload) // 2
+        smp = np.frombuffer(payload[: 2 * n], dtype="<i2").astype(np.int64)
+        stream = adpcm_encode(smp)  # real 4-bit wire bytes
+        dec = adpcm_decode(stream, n)
+        # recompute the final index for the state column (decode
+        # tracks it internally; re-derive via a 1-sample replay)
+        pred, idx = 0, 0
+        for i in range(n):
+            byte = stream[i // 2]
+            nib = (byte >> 4) if i % 2 else (byte & 0x0F)
+            st = IMA_STEP_TABLE[idx]
+            vp = (st // 8 + ((nib >> 2) & 1) * st
+                  + ((nib >> 1) & 1) * (st // 2)
+                  + (nib & 1) * (st // 4))
+            pred = pred - vp if nib >> 3 else pred + vp
+            pred = max(-32768, min(32767, pred))
+            idx = max(0, min(88, idx + IMA_INDEX_TABLE[nib]))
+        yield {
+            "media_id": media_id,
+            "n_samples": n,
+            "sum_decoded": int(sum(dec)),
+            "final_pred": pred,
+            "final_idx": idx,
+        }
 
-    return corpus.select("media_id", "payload").mapInPandas(
-        run,
-        schema="media_id long, n_samples int, sum_decoded long, "
-               "final_pred int, final_idx int",
+    return map_rows(
+        corpus.select("media_id", "payload"),
+        row,
+        "media_id long, n_samples int, sum_decoded long, final_pred int, final_idx int",
     )

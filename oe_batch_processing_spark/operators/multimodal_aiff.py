@@ -20,7 +20,7 @@ and reads the big-endian samples back.
 Reference scope note: the reference engine (SURVEY.md §2.1) has no
 media path; this extends the §2.2 multimodal family.
 
-Scale: one mapInPandas over the bounded round-robin fan-out —
+Scale: one ``map_rows`` over the bounded round-robin fan-out —
 embarrassingly parallel per-file O(samples) work, the standard codec
 plan contract here.
 """
@@ -28,11 +28,11 @@ plan contract here.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oe_batch_processing_spark.operators.rowmap import map_rows
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.tables import load_table
 
@@ -183,7 +183,7 @@ def multimodal_audio_aiff_roundtrip(
     sum/max statistics come from the re-read samples, proving the
     big-endian roundtrip.
 
-    Scale: one mapInPandas over the bounded fan-out, O(samples) per
+    Scale: one :func:`map_rows` over the bounded fan-out, O(samples) per
     file, parallel across files — the standard codec plan contract.
     """
     docs = load_table(spark, sf_dir, "documents")
@@ -198,39 +198,27 @@ def multimodal_audio_aiff_roundtrip(
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def run(batches: Iterator) -> Iterator:
+    def row(media_id, payload):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload)
-                n = len(b) // 2
-                smp = np.frombuffer(b[: 2 * n], dtype=">i2").astype(np.int64)
-                rate = _AIFF_RATES[int(media_id) % len(_AIFF_RATES)]
-                aiff = mux_aiff(smp, rate)  # real big-endian container
-                nch, nframes, bits, drate, dec = demux_aiff(aiff)
-                if [int(v) for v in smp] != dec:
-                    raise ValueError(
-                        f"AIFF roundtrip mismatch for {media_id}"
-                    )
-                dec_a = np.asarray(dec, dtype=np.int64)
-                rows.append({
-                    "media_id": media_id,
-                    "n_frames": nframes,
-                    "sample_rate": drate,
-                    "sum_samples": int(dec_a.sum()) if n else 0,
-                    "max_abs": int(np.abs(dec_a).max()) if n else 0,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_frames", "sample_rate",
-                         "sum_samples", "max_abs"],
-            )
+        n = len(payload) // 2
+        smp = np.frombuffer(payload[: 2 * n], dtype=">i2").astype(np.int64)
+        rate = _AIFF_RATES[media_id % len(_AIFF_RATES)]
+        aiff = mux_aiff(smp, rate)  # real big-endian container
+        nch, nframes, bits, drate, dec = demux_aiff(aiff)
+        if [int(v) for v in smp] != dec:
+            raise ValueError(f"AIFF roundtrip mismatch for {media_id}")
+        dec_a = np.asarray(dec, dtype=np.int64)
+        yield {
+            "media_id": media_id,
+            "n_frames": nframes,
+            "sample_rate": drate,
+            "sum_samples": int(dec_a.sum()) if n else 0,
+            "max_abs": int(np.abs(dec_a).max()) if n else 0,
+        }
 
-    return corpus.select("media_id", "payload").mapInPandas(
-        run,
-        schema="media_id long, n_frames int, sample_rate long, "
-               "sum_samples long, max_abs long",
+    return map_rows(
+        corpus.select("media_id", "payload"),
+        row,
+        "media_id long, n_frames int, sample_rate long, sum_samples long, max_abs long",
     )

@@ -33,7 +33,7 @@ Scale: one groupBy shuffle assembles frames into videos (videos are the
 natural processing unit; the shuffle key is the video id, so skew equals
 the longest video, bounded by the 8-frame grouping rule here and by
 shard-time chunking in production), then a bounded round-robin fan-out
-and one mapInPandas doing O(pixels) work per video. On a real corpus
+and one ``map_rows`` doing O(pixels) work per video. On a real corpus
 the assembled-video stage is replaced by a binaryFile scan of .avi
 blobs and ONLY the demux/decode stage runs.
 """
@@ -41,15 +41,16 @@ blobs and ONLY the demux/decode stage runs.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oe_batch_processing_spark.operators.multimodal import flat_blocks, raster_stats
 from oe_batch_processing_spark.operators.multimodal_jpeg import (
     encode_jpeg,
     parse_jpeg,
 )
+from oe_batch_processing_spark.operators.rowmap import map_rows
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.tables import load_table
 
@@ -303,61 +304,41 @@ def multimodal_video_mjpeg_avi_decode(
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def row(video_id, wb, hb, frame_rows):
+        w_px, h_px = 8 * wb, 8 * hb
+        jpgs = [
+            encode_jpeg(flat_blocks(fr["blocks"], wb, hb).tobytes(), w_px, h_px, 1)
+            for fr in frame_rows
+        ]
+        avi = mux_avi(jpgs, w_px, h_px)  # the real container bytes
 
-        for pdf in batches:
-            rows = []
-            for video_id, wb_, hb_, frame_rows in zip(
-                pdf["video_id"], pdf["wb"], pdf["hb"], pdf["frames"]
-            ):
-                wb_, hb_ = int(wb_), int(hb_)
-                w_px, h_px = 8 * wb_, 8 * hb_
-                jpgs = []
-                for fr in frame_rows:
-                    bv = np.frombuffer(bytes(fr["blocks"]), dtype=np.uint8)
-                    grid = bv.reshape(hb_, wb_)
-                    raster = np.kron(grid, np.ones((8, 8), dtype=np.uint8))
-                    jpgs.append(
-                        encode_jpeg(raster.tobytes(), w_px, h_px, 1)
-                    )
-                avi = mux_avi(jpgs, w_px, h_px)  # the real container bytes
+        dw, dh, n, payloads = demux_avi(avi)
+        sum_mean = hg = vg = order_ck = 0
+        for fno, payload in enumerate(payloads):
+            fw, fh, ns, planes, _rc = parse_jpeg(payload)
+            if (fw, fh) != (dw, dh) or ns != 1:
+                raise ValueError(
+                    f"frame {fno} geometry {fw}x{fh}x{ns} != container {dw}x{dh}"
+                )
+            m, fhg, fvg = raster_stats(planes[0])
+            sum_mean += m
+            hg += fhg
+            vg += fvg
+            order_ck += (fno + 1) * m
+        yield {
+            "video_id": video_id,
+            "n_frames": n,
+            "w": dw,
+            "h": dh,
+            "sum_mean_lum": sum_mean,
+            "hgrad_total": hg,
+            "vgrad_total": vg,
+            "order_checksum": order_ck,
+        }
 
-                dw, dh, n, payloads = demux_avi(avi)
-                sum_mean = hg = vg = order_ck = 0
-                for fno, payload in enumerate(payloads):
-                    fw, fh, ns, planes, _rc = parse_jpeg(payload)
-                    if (fw, fh) != (dw, dh) or ns != 1:
-                        raise ValueError(
-                            f"frame {fno} geometry {fw}x{fh}x{ns} != "
-                            f"container {dw}x{dh}"
-                        )
-                    a = planes[0].astype(np.int64)
-                    m = int(a.sum() // (fw * fh))
-                    sum_mean += m
-                    hg += int(np.abs(np.diff(a, axis=1)).sum())
-                    vg += int(np.abs(np.diff(a, axis=0)).sum())
-                    order_ck += (fno + 1) * m
-                rows.append({
-                    "video_id": int(video_id),
-                    "n_frames": n,
-                    "w": dw,
-                    "h": dh,
-                    "sum_mean_lum": sum_mean,
-                    "hgrad_total": hg,
-                    "vgrad_total": vg,
-                    "order_checksum": order_ck,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["video_id", "n_frames", "w", "h", "sum_mean_lum",
-                         "hgrad_total", "vgrad_total", "order_checksum"],
-            )
-
-    return videos.mapInPandas(
-        run,
-        schema="video_id long, n_frames int, w int, h int, "
-               "sum_mean_lum long, hgrad_total long, vgrad_total long, "
-               "order_checksum long",
+    return map_rows(
+        videos,
+        row,
+        "video_id long, n_frames int, w int, h int, sum_mean_lum long, "
+        "hgrad_total long, vgrad_total long, order_checksum long",
     )

@@ -27,7 +27,7 @@ the §2.2 multimodal family. Companion codecs: mu-law (memoryless),
 ADPCM (stateful lossy), this one (stateful lossless with entropy
 coding) — the three classes of audio codec.
 
-Scale: one mapInPandas over the bounded round-robin fan-out (same plan
+Scale: one ``map_rows`` over the bounded round-robin fan-out (same plan
 contract as every codec pipeline): per-file O(samples) vectorized
 residual/cost math + O(compressed bits) coding through the shared
 MSB-first bit writer/reader (``bitio``),
@@ -38,12 +38,12 @@ audio blobs whose file splits already parallelize.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oe_batch_processing_spark.operators.bitio import MsbReader, MsbWriter
+from oe_batch_processing_spark.operators.rowmap import map_rows
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.tables import load_table
 
@@ -264,7 +264,7 @@ def multimodal_audio_flac_lite_roundtrip(
     wire format. ``sum_decoded`` is computed from the DECODED samples,
     so the hash proves the roundtrip, not just the plan.
 
-    Scale: one mapInPandas over the bounded fan-out; O(samples)
+    Scale: one :func:`map_rows` over the bounded fan-out; O(samples)
     vectorized planning + O(bits) entropy coding per file, parallel
     across files. Compression on this corpus is ~1.5-2.5:1 depending on
     text-byte structure, reported via total_bits vs 16*samples.
@@ -281,40 +281,29 @@ def multimodal_audio_flac_lite_roundtrip(
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def run(batches: Iterator) -> Iterator:
+    def row(media_id, payload):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload)
-                n = len(b) // 2
-                smp = np.frombuffer(b[: 2 * n], dtype="<i2").astype(np.int64)
-                n_frames = n // FRAME
-                smp = smp[: n_frames * FRAME]
-                stream, total_bits, plans = flac_lite_encode(smp)
-                dec = flac_lite_decode(stream, n_frames)
-                if list(dec) != [int(v) for v in smp]:
-                    raise ValueError(
-                        f"flac-lite roundtrip NOT lossless for {media_id}"
-                    )
-                rows.append({
-                    "media_id": media_id,
-                    "n_frames": n_frames,
-                    "total_bits": total_bits,
-                    "orders_packed": sum(100 ** o for (o, _, _) in plans),
-                    "sum_k": sum(k for (_, k, _) in plans),
-                    "sum_decoded": int(sum(dec)),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_frames", "total_bits",
-                         "orders_packed", "sum_k", "sum_decoded"],
-            )
+        n = len(payload) // 2
+        smp = np.frombuffer(payload[: 2 * n], dtype="<i2").astype(np.int64)
+        n_frames = n // FRAME
+        smp = smp[: n_frames * FRAME]
+        stream, total_bits, plans = flac_lite_encode(smp)
+        dec = flac_lite_decode(stream, n_frames)
+        if list(dec) != [int(v) for v in smp]:
+            raise ValueError(f"flac-lite roundtrip NOT lossless for {media_id}")
+        yield {
+            "media_id": media_id,
+            "n_frames": n_frames,
+            "total_bits": total_bits,
+            "orders_packed": sum(100 ** o for (o, _, _) in plans),
+            "sum_k": sum(k for (_, k, _) in plans),
+            "sum_decoded": int(sum(dec)),
+        }
 
-    return corpus.select("media_id", "payload").mapInPandas(
-        run,
-        schema="media_id long, n_frames int, total_bits long, "
-               "orders_packed long, sum_k long, sum_decoded long",
+    return map_rows(
+        corpus.select("media_id", "payload"),
+        row,
+        "media_id long, n_frames int, total_bits long, "
+        "orders_packed long, sum_k long, sum_decoded long",
     )

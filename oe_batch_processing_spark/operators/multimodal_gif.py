@@ -28,19 +28,20 @@ Reference scope note: the reference engine (SURVEY.md §2.1) has no media
 path; this extends the §2.2 multimodal family.
 
 Scale: identical shape to the PNG/BMP/JPEG transcodes — two chained
-mapInPandas stages over a bounded fan-out of raw rows; per-file work is
+``map_rows`` stages over a bounded fan-out of raw rows; per-file work is
 O(pixels) dict operations. A real corpus enters at the decode stage from
 a binaryFile scan of .gif blobs.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oe_batch_processing_spark.operators.bitio import LsbReader, LsbWriter
+from oe_batch_processing_spark.operators.multimodal import gray, raster_stats
+from oe_batch_processing_spark.operators.rowmap import map_rows
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.tables import load_table
 
@@ -309,7 +310,7 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     subspace restriction is needed; the vertical gradient statistic is
     scrambled by any interlace-pass mistake.
 
-    Scale: two chained mapInPandas stages over one bounded round-robin
+    Scale: two chained :func:`map_rows` stages over one bounded round-robin
     fan-out (same plan contract as the JPEG pipelines, asserted in
     tests/test_plans.py); per-file work is O(pixels) LZW dict ops.
     """
@@ -332,53 +333,31 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def transcode(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def transcode(media_id, w, h, raster):
+        yield {
+            "media_id": media_id,
+            "gif": encode_gif(raster, w, h, interlace=(media_id % 3 == 0)),
+        }
 
-        for pdf in batches:
-            rows = []
-            for media_id, w_, h_, raster in zip(
-                pdf["media_id"], pdf["w"], pdf["h"], pdf["raster"]
-            ):
-                rows.append({
-                    "media_id": media_id,
-                    "gif": encode_gif(
-                        bytes(raster), int(w_), int(h_),
-                        interlace=(int(media_id) % 3 == 0),
-                    ),
-                })
-            yield pd.DataFrame(rows, columns=["media_id", "gif"])
+    gifs = map_rows(corpus, transcode, "media_id long, gif binary")
 
-    gifs = corpus.mapInPandas(transcode, schema="media_id long, gif binary")
+    def decode(media_id, payload):
+        w, h, pixels, interlaced, n_ext = parse_gif(payload)
+        mean_lum, hgrad, vgrad = raster_stats(gray(pixels, w, h, 1))
+        yield {
+            "media_id": media_id,
+            "w": w,
+            "h": h,
+            "interlaced": interlaced,
+            "n_extensions": n_ext,
+            "mean_lum": mean_lum,
+            "hgrad": hgrad,
+            "vgrad": vgrad,
+        }
 
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["gif"]):
-                w_, h_, gray, interlaced, n_ext = parse_gif(bytes(payload))
-                a = np.frombuffer(gray, dtype=np.uint8).astype(np.int64)
-                a = a.reshape(h_, w_)
-                rows.append({
-                    "media_id": media_id,
-                    "w": w_,
-                    "h": h_,
-                    "interlaced": interlaced,
-                    "n_extensions": n_ext,
-                    "mean_lum": int(a.sum() // (w_ * h_)),
-                    "hgrad": int(np.abs(np.diff(a, axis=1)).sum()),
-                    "vgrad": int(np.abs(np.diff(a, axis=0)).sum()),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "w", "h", "interlaced", "n_extensions",
-                         "mean_lum", "hgrad", "vgrad"],
-            )
-
-    return gifs.mapInPandas(
-        run,
-        schema="media_id long, w int, h int, interlaced boolean, "
-               "n_extensions int, mean_lum int, hgrad long, vgrad long",
+    return map_rows(
+        gifs,
+        decode,
+        "media_id long, w int, h int, interlaced boolean, "
+        "n_extensions int, mean_lum int, hgrad long, vgrad long",
     )

@@ -43,19 +43,19 @@ Scale: identical shape to the MJPEG/AVI pipeline — one groupBy shuffle on
 the stream id (the natural unit a video training corpus shards by), a
 bounded round-robin fan-out so the tiny test parquet's single scan split
 doesn't pin the Python codec stage to one core, then embarrassingly
-parallel O(bytes)-per-stream work in one mapInPandas. On a real corpus the
+parallel O(bytes)-per-stream work in one ``map_rows``. On a real corpus the
 encode half disappears: binaryFile scan of .h264/.264 blobs, demux+decode
 only.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oe_batch_processing_spark.operators.bitio import MsbReader, MsbWriter
+from oe_batch_processing_spark.operators.rowmap import map_rows
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.tables import load_table
 
@@ -438,7 +438,7 @@ def multimodal_h264_ipcm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsed RBSP and demands the exact original EBSP bytes back.
 
     Scale: groupBy stream (the corpus sharding unit) -> bounded
-    round-robin fan-out -> one mapInPandas of O(bytes) codec work per
+    round-robin fan-out -> one :func:`map_rows` of O(bytes) codec work per
     stream; on a real corpus the mux half is replaced by a binaryFile
     scan of raw .264 blobs.
     """
@@ -455,63 +455,47 @@ def multimodal_h264_ipcm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def row(stream_id, nmb, doc_ids):
+        frames = [
+            [_mb_samples(d, m, zero_head=(fno == 0 and m == 0)) for m in range(nmb)]
+            for fno, d in enumerate(doc_ids)
+        ]
+        stream = mux_annexb(nmb, 1, frames)  # the real Annex-B bytes
 
-        for pdf in batches:
-            rows = []
-            for stream_id, nmb, doc_ids in zip(
-                pdf["stream_id"], pdf["nmb"], pdf["doc_ids"]
-            ):
-                nmb = int(nmb)
-                frames = [
-                    [
-                        _mb_samples(int(d), m, zero_head=(fno == 0 and m == 0))
-                        for m in range(nmb)
-                    ]
-                    for fno, d in enumerate(doc_ids)
-                ]
-                stream = mux_annexb(nmb, 1, frames)  # the real Annex-B bytes
+        # escape-path cross-check: every NAL's parsed RBSP must
+        # re-escape to the exact EBSP bytes we found on the wire
+        for nal in split_annexb(stream):
+            if add_emulation(strip_emulation(nal[1:])) != nal[1:]:
+                raise ValueError("emulation roundtrip mismatch")
 
-                # escape-path cross-check: every NAL's parsed RBSP must
-                # re-escape to the exact EBSP bytes we found on the wire
-                for nal in split_annexb(stream):
-                    if add_emulation(strip_emulation(nal[1:])) != nal[1:]:
-                        raise ValueError("emulation roundtrip mismatch")
+        w_px, h_px, n_nals, dec = decode_h264_ipcm(stream)
+        sum_l = sum_cb = sum_cr = order_ck = mb_ck = 0
+        for fno, mbs in enumerate(dec):
+            fl = 0
+            for m, mb in enumerate(mbs):
+                fl += sum(mb[:256])
+                sum_cb += sum(mb[256:320])
+                sum_cr += sum(mb[320:384])
+                mb_ck += (fno + 1) * (m + 1) * mb[0]
+            sum_l += fl
+            order_ck += (fno + 1) * (fl // (256 * len(mbs)))
+        yield {
+            "stream_id": stream_id,
+            "n_frames": len(dec),
+            "n_nals": n_nals,
+            "w": w_px,
+            "h": h_px,
+            "sum_luma": sum_l,
+            "sum_cb": sum_cb,
+            "sum_cr": sum_cr,
+            "order_checksum": order_ck,
+            "mb_checksum": mb_ck,
+        }
 
-                w_px, h_px, n_nals, dec = decode_h264_ipcm(stream)
-                sum_l = sum_cb = sum_cr = order_ck = mb_ck = 0
-                for fno, mbs in enumerate(dec):
-                    fl = 0
-                    for m, mb in enumerate(mbs):
-                        fl += sum(mb[:256])
-                        sum_cb += sum(mb[256:320])
-                        sum_cr += sum(mb[320:384])
-                        mb_ck += (fno + 1) * (m + 1) * mb[0]
-                    sum_l += fl
-                    order_ck += (fno + 1) * (fl // (256 * len(mbs)))
-                rows.append({
-                    "stream_id": int(stream_id),
-                    "n_frames": len(dec),
-                    "n_nals": n_nals,
-                    "w": w_px,
-                    "h": h_px,
-                    "sum_luma": sum_l,
-                    "sum_cb": sum_cb,
-                    "sum_cr": sum_cr,
-                    "order_checksum": order_ck,
-                    "mb_checksum": mb_ck,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["stream_id", "n_frames", "n_nals", "w", "h",
-                         "sum_luma", "sum_cb", "sum_cr", "order_checksum",
-                         "mb_checksum"],
-            )
-
-    return streams.mapInPandas(
-        run,
-        schema="stream_id long, n_frames int, n_nals int, w int, h int, "
-               "sum_luma long, sum_cb long, sum_cr long, "
-               "order_checksum long, mb_checksum long",
+    return map_rows(
+        streams,
+        row,
+        "stream_id long, n_frames int, n_nals int, w int, h int, "
+        "sum_luma long, sum_cb long, sum_cr long, "
+        "order_checksum long, mb_checksum long",
     )

@@ -46,7 +46,7 @@ for fidelity.
 Reference scope note: the reference engine (SURVEY.md §2.1) has no media
 path; this extends the §2.2 multimodal family.
 
-Scale: two chained mapInPandas stages, embarrassingly parallel across
+Scale: two chained ``map_rows`` stages, embarrassingly parallel across
 files; per-file work is O(pixels) + O(blocks) Huffman bits. The only
 Exchange in either query is a bounded round-robin fan-out of the raw
 block rows, needed because the tiny test parquet yields one scan split —
@@ -57,7 +57,6 @@ is unchanged.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from itertools import chain, repeat
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,6 +67,8 @@ from oe_batch_processing_spark.operators.bitio import (
     MsbWriter,
     PrefixCode,
 )
+from oe_batch_processing_spark.operators.multimodal import flat_blocks, gray, raster_stats
+from oe_batch_processing_spark.operators.rowmap import map_rows
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.tables import load_table
 
@@ -663,6 +664,27 @@ _JPEG_ORACLE = """
 """
 
 
+_JPEG_STATS_SCHEMA = (
+    "media_id long, w int, h int, mean_lum int, hgrad long, vgrad long, restart_count int"
+)
+
+
+def _decoded_jpeg_row(media_id, payload):
+    """Decode one JPEG and report its luminance statistics (the sum // 3
+    gray of the decoded RGB for color files) and consumed restart count."""
+    w, h, ch, a, rc = decode_jpeg_rgb(payload)
+    mean_lum, hgrad, vgrad = raster_stats(gray(a, w, h, ch))
+    yield {
+        "media_id": media_id,
+        "w": w,
+        "h": h,
+        "mean_lum": mean_lum,
+        "hgrad": hgrad,
+        "vgrad": vgrad,
+        "restart_count": rc,
+    }
+
+
 @query("multimodal_jpeg_decode", oracle=_JPEG_ORACLE)
 def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL lossy-format codec roundtrip with a full hash oracle: build
@@ -677,7 +699,7 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring), so the oracle recomputes every column from the generation
     rule; the lossy general path is bounded by pytest.
 
-    Scale: two chained mapInPandas stages, no shuffle; O(pixels) per file.
+    Scale: two chained :func:`map_rows` stages, no shuffle; O(pixels) per file.
     """
     corpus = jpeg_block_corpus(load_table(spark, sf_dir, "documents"))
     # One bounded round-robin fan-out of the tiny (media_id, blocks) rows:
@@ -686,58 +708,12 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # binaryFile scan whose file splits already provide this parallelism.
     corpus = corpus.repartition(spark.sparkContext.defaultParallelism)
 
-    def transcode(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def transcode(media_id, wb, hb, blocks):
+        raster = flat_blocks(blocks, wb, hb)
+        yield {"media_id": media_id, "jpg": encode_jpeg(raster.tobytes(), wb * 8, hb * 8, 1)}
 
-        for pdf in batches:
-            rows = []
-            for media_id, wb, hb, blocks in zip(
-                pdf["media_id"], pdf["wb"], pdf["hb"], pdf["blocks"]
-            ):
-                bv = np.frombuffer(bytes(blocks), dtype=np.uint8)
-                grid = bv.reshape(int(hb), int(wb))
-                raster = np.kron(grid, np.ones((8, 8), dtype=np.uint8))
-                rows.append({
-                    "media_id": media_id,
-                    "jpg": encode_jpeg(
-                        raster.tobytes(), int(wb) * 8, int(hb) * 8, 1
-                    ),
-                })
-            yield pd.DataFrame(rows, columns=["media_id", "jpg"])
-
-    jpgs = corpus.mapInPandas(transcode, schema="media_id long, jpg binary")
-
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["jpg"]):
-                w_, h_, ch, a, rc = decode_jpeg_rgb(bytes(payload))
-                a = a.astype(np.int64)
-                npx = w_ * h_
-                rows.append({
-                    "media_id": media_id,
-                    "w": w_,
-                    "h": h_,
-                    "mean_lum": int(a.sum() // npx),
-                    "hgrad": int(np.abs(np.diff(a, axis=1)).sum()),
-                    "vgrad": int(np.abs(np.diff(a, axis=0)).sum()),
-                    "restart_count": rc,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "w", "h", "mean_lum", "hgrad",
-                         "vgrad", "restart_count"],
-            )
-
-    return jpgs.mapInPandas(
-        run,
-        schema="media_id long, w int, h int, mean_lum int, "
-               "hgrad long, vgrad long, restart_count int",
-    )
+    jpgs = map_rows(corpus, transcode, "media_id long, jpg binary")
+    return map_rows(jpgs, _decoded_jpeg_row, _JPEG_STATS_SCHEMA)
 
 
 _JPEG420_ORACLE = """
@@ -795,7 +771,7 @@ def multimodal_jpeg420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     The lossy general path (noisy chroma destroyed by pooling) is
     pytest-bounded on smooth images (tests/test_multimodal_jpeg.py).
 
-    Scale: identical to multimodal_jpeg_decode — two chained mapInPandas
+    Scale: identical to multimodal_jpeg_decode — two chained ``map_rows``
     stages plus the one bounded fan-out Exchange of raw block rows.
     """
     docs = load_table(spark, sf_dir, "documents")
@@ -820,57 +796,14 @@ def multimodal_jpeg420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def transcode(batches: Iterator) -> Iterator:
+    def transcode(media_id, wb, hb, blocks):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for media_id, wb_, hb_, blocks in zip(
-                pdf["media_id"], pdf["wb"], pdf["hb"], pdf["blocks"]
-            ):
-                bv = np.frombuffer(bytes(blocks), dtype=np.uint8)
-                grid = bv.reshape(int(hb_), int(wb_))
-                lum = np.kron(grid, np.ones((8, 8), dtype=np.uint8))
-                rgb = np.repeat(lum[:, :, None], 3, axis=2)
-                rows.append({
-                    "media_id": media_id,
-                    "jpg": encode_jpeg(
-                        rgb.tobytes(), int(wb_) * 8, int(hb_) * 8, 3,
-                        subsample=True,
-                    ),
-                })
-            yield pd.DataFrame(rows, columns=["media_id", "jpg"])
+        rgb = np.repeat(flat_blocks(blocks, wb, hb)[:, :, None], 3, axis=2)
+        yield {
+            "media_id": media_id,
+            "jpg": encode_jpeg(rgb.tobytes(), wb * 8, hb * 8, 3, subsample=True),
+        }
 
-    jpgs = corpus.mapInPandas(transcode, schema="media_id long, jpg binary")
-
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["jpg"]):
-                w_, h_, ch, a, rc = decode_jpeg_rgb(bytes(payload))
-                lum = a.astype(np.int64).sum(axis=2) // 3
-                npx = w_ * h_
-                rows.append({
-                    "media_id": media_id,
-                    "w": w_,
-                    "h": h_,
-                    "mean_lum": int(lum.sum() // npx),
-                    "hgrad": int(np.abs(np.diff(lum, axis=1)).sum()),
-                    "vgrad": int(np.abs(np.diff(lum, axis=0)).sum()),
-                    "restart_count": rc,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "w", "h", "mean_lum", "hgrad",
-                         "vgrad", "restart_count"],
-            )
-
-    return jpgs.mapInPandas(
-        run,
-        schema="media_id long, w int, h int, mean_lum int, "
-               "hgrad long, vgrad long, restart_count int",
-    )
+    jpgs = map_rows(corpus, transcode, "media_id long, jpg binary")
+    return map_rows(jpgs, _decoded_jpeg_row, _JPEG_STATS_SCHEMA)

@@ -27,7 +27,7 @@ this joins the §2.2 multimodal family (PNG, BMP, JPEG, GIF, netpbm, WAV,
 AIFF, FLAC-lite, μ-law, ADPCM, MJPEG/AVI, H.264 I-PCM — and WebP landed
 later the same round, multimodal_webp.py: no capability stubs remain).
 
-Scale: per-document codec work in one mapInPandas after the same bounded
+Scale: per-document codec work in one ``map_rows`` after the same bounded
 round-robin fan-out the other codec pipelines use (the tiny test parquet
 is one scan split); on a real corpus the writer half is replaced by a
 binaryFile scan of .tif blobs.
@@ -36,11 +36,11 @@ binaryFile scan of .tif blobs.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oe_batch_processing_spark.operators.rowmap import map_rows
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.tables import load_table
 
@@ -319,50 +319,36 @@ def multimodal_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def row(doc_id):
+        w = 8 + 4 * (doc_id % 3)
+        h = 6 + 3 * (doc_id % 2)
+        comp = COMP_NONE if doc_id % 2 == 0 else COMP_PACKBITS
+        raster = _tiff_pixels(doc_id, w, h)
+        tif = encode_tiff(raster, w, h, comp)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w = 8 + 4 * (doc_id % 3)
-                h = 6 + 3 * (doc_id % 2)
-                comp = COMP_NONE if doc_id % 2 == 0 else COMP_PACKBITS
-                raster = _tiff_pixels(doc_id, w, h)
-                tif = encode_tiff(raster, w, h, comp)
+        dw, dh, dcomp, strips = parse_tiff(tif)
+        if (dw, dh, dcomp) != (w, h, comp):
+            raise ValueError("decoded header mismatch")
+        if b"".join(strips) != raster:
+            raise ValueError("decoded raster mismatch")
+        if comp == COMP_PACKBITS:
+            if encode_tiff(b"".join(strips), dw, dh, dcomp) != tif:
+                raise ValueError("re-encode roundtrip mismatch")
+            if len(tif) >= len(encode_tiff(raster, w, h, COMP_NONE)):
+                raise ValueError("PackBits did not compress")
+        yield {
+            "doc_id": doc_id,
+            "w": dw,
+            "h": dh,
+            "compression": dcomp,
+            "n_strips": len(strips),
+            "sum_pix": sum(b"".join(strips)),
+            "strip_checksum": sum((s + 1) * sum(strip) for s, strip in enumerate(strips)),
+        }
 
-                dw, dh, dcomp, strips = parse_tiff(tif)
-                if (dw, dh, dcomp) != (w, h, comp):
-                    raise ValueError("decoded header mismatch")
-                if b"".join(strips) != raster:
-                    raise ValueError("decoded raster mismatch")
-                if comp == COMP_PACKBITS:
-                    if encode_tiff(b"".join(strips), dw, dh, dcomp) != tif:
-                        raise ValueError("re-encode roundtrip mismatch")
-                    if len(tif) >= len(encode_tiff(raster, w, h, COMP_NONE)):
-                        raise ValueError("PackBits did not compress")
-                sum_pix = sum(b"".join(strips))
-                strip_ck = sum(
-                    (s + 1) * sum(strip) for s, strip in enumerate(strips)
-                )
-                rows.append({
-                    "doc_id": doc_id,
-                    "w": dw,
-                    "h": dh,
-                    "compression": dcomp,
-                    "n_strips": len(strips),
-                    "sum_pix": sum_pix,
-                    "strip_checksum": strip_ck,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "w", "h", "compression", "n_strips",
-                         "sum_pix", "strip_checksum"],
-            )
-
-    return frames.mapInPandas(
-        run,
-        schema="doc_id long, w int, h int, compression int, n_strips int, "
-               "sum_pix long, strip_checksum long",
+    return map_rows(
+        frames,
+        row,
+        "doc_id long, w int, h int, compression int, n_strips int, "
+        "sum_pix long, strip_checksum long",
     )

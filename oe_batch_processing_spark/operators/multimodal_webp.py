@@ -72,7 +72,7 @@ recomputes every statistic from the generation rule, Spark recomputes
 them from the DECODED image, and an in-operator roundtrip assertion
 re-encodes the decoded raster and demands the exact original file bytes.
 
-Scale: per-document codec work in one mapInPandas after the standard
+Scale: per-document codec work in one ``map_rows`` after the standard
 bounded round-robin fan-out; a real corpus enters at the decode stage
 from a binaryFile scan of .webp blobs.
 """
@@ -80,7 +80,6 @@ from a binaryFile scan of .webp blobs.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -90,6 +89,7 @@ from oe_batch_processing_spark.operators.bitio import (
     LsbWriter,
     PrefixCode,
 )
+from oe_batch_processing_spark.operators.rowmap import map_rows
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.tables import load_table
 
@@ -1909,6 +1909,9 @@ _WEBP_ORACLE = """
 """
 
 
+_WEBP_PIX_SCHEMA = "doc_id long, w int, h int, sum_pix long, pos_checksum long"
+
+
 def _webp_pixels(doc_id: int, w: int, h: int) -> bytes:
     import hashlib
 
@@ -1943,43 +1946,31 @@ def multimodal_webp_lossless_decode(spark: SparkSession, sf_dir: str) -> DataFra
         spark.sparkContext.defaultParallelism
     )
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def row(doc_id):
+        w, h = 48 + 16 * (doc_id % 2), 32
+        raster = _webp_pixels(doc_id, w, h)
+        blob = encode_webp_vp8l(raster, w, h)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 48 + 16 * (doc_id % 2), 32
-                raster = _webp_pixels(doc_id, w, h)
-                blob = encode_webp_vp8l(raster, w, h)
+        dw, dh, dec = parse_webp_vp8l(blob)
+        if (dw, dh) != (w, h) or dec != raster:
+            raise ValueError("lossless roundtrip mismatch")
+        if encode_webp_vp8l(dec, dw, dh) != blob:
+            raise ValueError("re-encode roundtrip mismatch")
+        if not lz77_would_emit_backref(raster):
+            raise ValueError("LZ77 layer unused on a runs corpus")
+        # entropy layer does real work: container+codes overhead
+        # included, still far under raw 8 bits/pixel
+        if 8 * len(blob) >= 6 * w * h:
+            raise ValueError("VP8L entropy coding failed to compress")
+        yield {
+            "doc_id": doc_id,
+            "w": dw,
+            "h": dh,
+            "sum_pix": sum(dec),
+            "pos_checksum": sum((j + 1) * dec[j] for j in range(len(dec))),
+        }
 
-                dw, dh, dec = parse_webp_vp8l(blob)
-                if (dw, dh) != (w, h) or dec != raster:
-                    raise ValueError("lossless roundtrip mismatch")
-                if encode_webp_vp8l(dec, dw, dh) != blob:
-                    raise ValueError("re-encode roundtrip mismatch")
-                if not lz77_would_emit_backref(raster):
-                    raise ValueError("LZ77 layer unused on a runs corpus")
-                # entropy layer does real work: container+codes overhead
-                # included, still far under raw 8 bits/pixel
-                if 8 * len(blob) >= 6 * w * h:
-                    raise ValueError("VP8L entropy coding failed to compress")
-                rows.append({
-                    "doc_id": doc_id,
-                    "w": dw,
-                    "h": dh,
-                    "sum_pix": sum(dec),
-                    "pos_checksum": sum((j + 1) * dec[j] for j in range(len(dec))),
-                })
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "w", "h", "sum_pix", "pos_checksum"]
-            )
-
-    return frames.mapInPandas(
-        run,
-        schema="doc_id long, w int, h int, sum_pix long, pos_checksum long",
-    )
+    return map_rows(frames, row, _WEBP_PIX_SCHEMA)
 
 
 # --- color cache (RFC 9649 §4.5) -------------------------------------------------
@@ -2062,46 +2053,34 @@ def multimodal_webp_palette_decode(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale: identical shape to ``multimodal_webp_lossless_decode`` — one
     bounded round-robin fan-out, then embarrassingly parallel per-doc
-    codec work in a single mapInPandas stage.
+    codec work in a single :func:`map_rows` stage.
     """
     docs = load_table(spark, sf_dir, "documents")
     frames = docs.select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
     )
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def row(doc_id):
+        w, h = 48 + 16 * (doc_id % 2), 32
+        raster = _webp_palette_pixels(doc_id, w, h)
+        blob = encode_webp_vp8l(raster, w, h, use_palette=True)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 48 + 16 * (doc_id % 2), 32
-                raster = _webp_palette_pixels(doc_id, w, h)
-                blob = encode_webp_vp8l(raster, w, h, use_palette=True)
+        dw, dh, dec = parse_webp_vp8l(blob)
+        if (dw, dh) != (w, h) or dec != raster:
+            raise ValueError("palette roundtrip mismatch")
+        if encode_webp_vp8l(dec, dw, dh, use_palette=True) != blob:
+            raise ValueError("palette re-encode mismatch")
+        if 8 * len(blob) >= 3 * w * h:
+            raise ValueError("palette bundling failed to compress")
+        yield {
+            "doc_id": doc_id,
+            "w": dw,
+            "h": dh,
+            "sum_pix": sum(dec),
+            "pos_checksum": sum((j + 1) * dec[j] for j in range(len(dec))),
+        }
 
-                dw, dh, dec = parse_webp_vp8l(blob)
-                if (dw, dh) != (w, h) or dec != raster:
-                    raise ValueError("palette roundtrip mismatch")
-                if encode_webp_vp8l(dec, dw, dh, use_palette=True) != blob:
-                    raise ValueError("palette re-encode mismatch")
-                if 8 * len(blob) >= 3 * w * h:
-                    raise ValueError("palette bundling failed to compress")
-                rows.append({
-                    "doc_id": doc_id,
-                    "w": dw,
-                    "h": dh,
-                    "sum_pix": sum(dec),
-                    "pos_checksum": sum((j + 1) * dec[j] for j in range(len(dec))),
-                })
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "w", "h", "sum_pix", "pos_checksum"]
-            )
-
-    return frames.mapInPandas(
-        run,
-        schema="doc_id long, w int, h int, sum_pix long, pos_checksum long",
-    )
+    return map_rows(frames, row, _WEBP_PIX_SCHEMA)
 
 
 # --- the color-transform (RGB) oracled query -------------------------------------
@@ -2208,67 +2187,47 @@ def multimodal_webp_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical shape to ``multimodal_webp_lossless_decode`` — one
     bounded round-robin fan-out, then embarrassingly parallel per-doc
-    codec work in a single mapInPandas stage.
+    codec work in a single :func:`map_rows` stage.
     """
     docs = load_table(spark, sf_dir, "documents")
     frames = docs.select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
     )
 
-    def run(batches: Iterator) -> Iterator:
+    def row(doc_id):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 32 + 16 * (doc_id % 2), 24
-                rgb = _webp_color_pixels(doc_id, w, h)
-                blob = encode_webp_vp8l_rgb(rgb, w, h)
+        w, h = 32 + 16 * (doc_id % 2), 24
+        rgb = _webp_color_pixels(doc_id, w, h)
+        blob = encode_webp_vp8l_rgb(rgb, w, h)
 
-                dw, dh, dec = parse_webp_vp8l_rgb(blob)
-                if (dw, dh) != (w, h) or dec != rgb:
-                    raise ValueError("color roundtrip mismatch")
-                if encode_webp_vp8l_rgb(dec, dw, dh) != blob:
-                    raise ValueError("color re-encode roundtrip mismatch")
-                arr = np.frombuffer(rgb, np.uint8).reshape(h, w, 3)
-                grid, _, _ = choose_color_deltas(
-                    arr[:, :, 0], arr[:, :, 1], arr[:, :, 2], w, h
-                )
-                flat = [p for row in grid for p in row]
-                if not any(p[0] for p in flat) or not any(p[2] for p in flat):
-                    raise ValueError(
-                        "color transform chose no cross-channel deltas"
-                    )
-                if 8 * len(blob) >= 7 * w * h:
-                    raise ValueError("color path failed to compress")
-                a = np.frombuffer(dec, np.uint8).astype(np.int64)
-                rv, gv, bv = a[0::3], a[1::3], a[2::3]
-                jw = np.arange(1, w * h + 1, dtype=np.int64)
-                rows.append({
-                    "doc_id": doc_id,
-                    "w": dw,
-                    "h": dh,
-                    "sum_r": int(rv.sum()),
-                    "sum_g": int(gv.sum()),
-                    "sum_b": int(bv.sum()),
-                    "pos_checksum": int(
-                        (jw * (rv * 65536 + gv * 256 + bv)).sum()
-                    ),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "w", "h", "sum_r", "sum_g", "sum_b",
-                    "pos_checksum",
-                ],
-            )
+        dw, dh, dec = parse_webp_vp8l_rgb(blob)
+        if (dw, dh) != (w, h) or dec != rgb:
+            raise ValueError("color roundtrip mismatch")
+        if encode_webp_vp8l_rgb(dec, dw, dh) != blob:
+            raise ValueError("color re-encode roundtrip mismatch")
+        arr = np.frombuffer(rgb, np.uint8).reshape(h, w, 3)
+        grid, _, _ = choose_color_deltas(arr[:, :, 0], arr[:, :, 1], arr[:, :, 2], w, h)
+        flat = [p for line in grid for p in line]
+        if not any(p[0] for p in flat) or not any(p[2] for p in flat):
+            raise ValueError("color transform chose no cross-channel deltas")
+        if 8 * len(blob) >= 7 * w * h:
+            raise ValueError("color path failed to compress")
+        a = np.frombuffer(dec, np.uint8).astype(np.int64)
+        rv, gv, bv = a[0::3], a[1::3], a[2::3]
+        jw = np.arange(1, w * h + 1, dtype=np.int64)
+        yield {
+            "doc_id": doc_id,
+            "w": dw,
+            "h": dh,
+            "sum_r": int(rv.sum()),
+            "sum_g": int(gv.sum()),
+            "sum_b": int(bv.sum()),
+            "pos_checksum": int((jw * (rv * 65536 + gv * 256 + bv)).sum()),
+        }
 
-    return frames.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, w int, h int, sum_r long, sum_g long, "
-            "sum_b long, pos_checksum long"
-        ),
+    return map_rows(
+        frames,
+        row,
+        "doc_id long, w int, h int, sum_r long, sum_g long, sum_b long, pos_checksum long",
     )

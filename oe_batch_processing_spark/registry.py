@@ -29,129 +29,26 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
 # The driver's differential harness checks a registration-order PREFIX of
-# ~50 queries per round (observed rounds 1-5: exactly the first 50). Rounds
-# 1-5 accumulated driver-green rows for 135 of the 241 registered queries;
-# the remaining 106 are local-sweep-verified (CHECK_LOCAL_r05.md + the
-# judge's independent 22-query spot check) but have never had a driver row.
-# Round-6 window: the first 50 of those 106 never-driver-checked queries —
-# dedup family completions, graph ops, sketches, ivfpq/matmul similarity,
-# the text/docs analysis batch, multimodal, SCD2/MERGE/CDC, and the
-# late-round-5 timeseries/scripting batch. Everything else keeps its
-# existing green row plus the committed full local sweep.
-# Round-7 window: 50 of the 93 queries that had never had a driver row
-# after rounds 1-6 (cumulative driver-green: 185/278) — all 37 round-6
-# additions plus 13 of the older never-checked batch. Everything else is
-# local-sweep-verified at sf0.01 AND sf0.001 (CHECK_LOCAL_r06.md /
-# CHECK_LOCAL_SF0001_r06.md) plus the judge's independent samples.
-# Round-8 window (live below): 50 of the 81 names that had never had a
-# driver row after rounds 1-7 (cumulative driver-green: 235/316) — the 29
-# round-7-continuation operators with the newest code first (RANSAC,
-# Hilbert, Goertzel batch+stream, k-core, star-CC, the four audio codecs,
-# MJPEG/AVI, JPEG/JPEG-420/GIF, BPE train+apply, Croston batch+stream,
-# AR(2), rank-correlation, ANOVA, Benford, DP counts, ACF, MATTR, Neyman,
-# parquet-footer, split-leakage, k-anonymity), then 21 older stragglers in
-# prior-comment order.
-# Round-9 window (live below): the six round-9 additions first
-# (stream_tws_type_stats, multimodal_h264_ipcm_decode,
-# stream_split_leakage_gate, multimodal_tiff_decode,
-# multimodal_resize_box_integer, multimodal_webp_lossless_decode), then
-# ALL 31 names that had never had a driver row after r1-r8 (cumulative
-# driver coverage goes 285 -> every query ever registered), then 13
-# deliberate re-checks of this round's changed code (k-core threshold,
-# Lloyd-refined IVF/IVFPQ) and the most intricate codecs. Round-10
-# rotation guidance: with zero never-checked names left, fill the window
-# with (1) any round-10 additions, (2) re-checks of whatever code
-# changes, (3) the operators with the OLDEST driver rows (r1-r2 era:
-# the q* TPC-H batch, dedup_exact_documents, events_hourly_rollup, ...)
-# so rows stay fresh on a rolling basis.
-# (Historical round-9 planning note:) the 31 never-checked names were:
-# subquery_exists_projection, agg_ordered_set_percentiles,
-# alloc_largest_remainder, scalar_try_arith_battery,
-# events_pattern_sequence, join_range_pure_bucketized, stats_chi2_type_dow,
-# ab_test_conversion_lift, orders_open_backlog_daily,
-# subquery_not_in_null_trap, customer_rfm_scores,
-# lineitem_abc_classification, quality_control_pchart,
-# sql_udf_parameterized, scalar_collation_lcase,
-# events_funnel_staged_windows, join_salted_orders_segment,
-# events_gap_fill_locf, events_ewma_user, events_type_transitions,
-# events_resample_interp_linear, events_weekly_seasonality,
-# events_late_arrival_profile, events_anomaly_seasonal,
-# win_rolling_distinct_users, asof_nearest_click,
-# intervals_coalesce_shipping, arrow_user_value_stats,
-# udtf_python_word_stats, stream_ewma_user, agg_bitwise_mode — plus any
-# round-8 additions registered after this window was fixed.
-# (Historical round-8 note kept for provenance:) rotate in the remaining
-# 43 never-checked names
-# (plus pipeline_split_leakage_report, dq_k_anonymity_report,
-# multimodal_jpeg_decode, multimodal_jpeg420_decode, dq_benford_screen,
-# orders_forecast_croston, stats_anova_oneway, text_lexical_mattr,
-# multimodal_gif_decode, multimodal_audio_mulaw_roundtrip,
-# graph_connected_components_star, pipeline_bpe_train,
-# ingest_parquet_footer_index, stream_forecast_croston,
-# sample_neyman_allocation, multimodal_audio_adpcm_roundtrip,
-# events_acf_battery, multimodal_audio_flac_lite_roundtrip,
-# multimodal_video_mjpeg_avi_decode, pipeline_bpe_train_apply,
-# orders_forecast_ar2_yule_walker, stats_rank_correlation_battery,
-# graph_kcore_trade, dq_dp_geometric_counts,
-# multimodal_audio_aiff_roundtrip, orders_periodogram_goertzel,
-# stream_periodogram_goertzel, stats_ransac_line_fit,
-# layout_hilbert_events —
-# round-7 additions registered after the window filled — and
-# events_ewma_user, win_rolling_distinct_users, events_gap_fill_locf,
-# asof_nearest_click, intervals_coalesce_shipping,
-# arrow_user_value_stats, udtf_python_word_stats, stream_ewma_user, and
-# join_salted_orders_segment, which yielded their slots to the round-7
-# additions multimodal_png_decode, dedup_minhash_error_profile,
-# ingest_gzip_codec_scan):
-# pyds_stream_synthetic, multimodal_audio_vad_segments,
-# multimodal_video_shot_boundaries, users_churn_labels,
-# pipeline_mix_temperature_sqrt, scalar_variant_events,
-# lateral_recent_orders, set_union_by_name, scalar_interval_arith,
-# stats_corr_regression, join_full_outer_nation_presence,
-# stats_equidepth_bins, pareto_frontier_parts, mv_incremental_hourly,
-# win_percent_of_total, sql_pipe_revenue_by_flag,
-# agg_listagg_segment_nations, events_anomaly_mad, join_null_safe_halves,
-# agg_group_by_all, scalar_url_parse_battery, agg_bitwise_mode,
-# subquery_exists_projection, agg_ordered_set_percentiles,
-# alloc_largest_remainder, scalar_try_arith_battery,
-# events_pattern_sequence, join_range_pure_bucketized,
-# stats_chi2_type_dow, ab_test_conversion_lift, orders_open_backlog_daily,
-# subquery_not_in_null_trap, customer_rfm_scores,
-# lineitem_abc_classification, quality_control_pchart,
-# sql_udf_parameterized, scalar_collation_lcase,
-# events_funnel_staged_windows, events_type_transitions,
-# events_resample_interp_linear, events_weekly_seasonality,
-# events_late_arrival_profile, events_anomaly_seasonal
+# about 50 queries; DRIVER_CHECK_PRIORITY fills that window. It leads with
+# the queries whose code changed last, then takes the queries checked
+# longest ago, so every query is re-checked on a rolling basis.
 DRIVER_CHECK_PRIORITY: tuple[str, ...] = (
-    # --- Round-17 window (optimization round 2): (1) the 14 queries whose
-    # --- code the round changed — the size-gated BPE driver merge kernel
-    # --- (train + train_apply), the k-core early-exit peel, the LPA
-    # --- round-1 constant fold, the star-CC action fold, the carried
-    # --- shingle-count rewrite (jaccard + containment family, both
-    # --- leakage auditors, and their downstream consumers tiered /
-    # --- canonical), and the round-robin stream source splits (gate,
-    # --- upsert, classifier twin); then (2) the 11 r16-deferred r8-era
-    # --- tail rows, re-inserted (pinned by tests/test_sweep_guard.py);
-    # --- then (3) the 25 alphabetically-first of the 31 r9-era rows (the
-    # --- oldest driver rows after the r16 window covered the r8 era).
-    # --- The 6 r9-era tail names live in DRIVER_CHECK_DEFERRED below and
-    # --- lead the r18 window after its own re-checks.
-    # --- (1) round-17 changed-code re-checks
-    "pipeline_bpe_train",             # r17: size-gated driver merge kernel
-    "pipeline_bpe_train_apply",       # r17: size-gated driver merge kernel
-    "graph_kcore_trade",              # r17: early-exit peel
-    "graph_label_propagation",        # r17: round-1 constant fold
-    "graph_connected_components_star",  # r17: star action fold + jaccard
-    "dedup_jaccard_shingles",         # r17: carried shingle counts
-    "dedup_shingle_containment",      # r17: carried shingle counts
-    "dedup_shingle_containment_clusters",  # r17: carried shingle counts
-    "dedup_pipeline_tiered",          # r17: downstream of containment
-    "dedup_cluster_canonical",        # r17: downstream of jaccard/minhash
-    "pipeline_split_leakage_report",  # r17: carry + persisted flat index
-    "stream_split_leakage_gate",      # r17: carried counts + rr split
-    "stream_foreachbatch_upsert",     # r17: round-robin source split
-    "stream_quality_classifier",      # r17: round-robin source split
-    # --- (2) the 11 r16-deferred rows (r8-era tail), re-inserted
+    # (1) re-checks of the latest changed code
+    "pipeline_bpe_train",
+    "pipeline_bpe_train_apply",
+    "graph_kcore_trade",
+    "graph_label_propagation",
+    "graph_connected_components_star",
+    "dedup_jaccard_shingles",
+    "dedup_shingle_containment",
+    "dedup_shingle_containment_clusters",
+    "dedup_pipeline_tiered",
+    "dedup_cluster_canonical",
+    "pipeline_split_leakage_report",
+    "stream_split_leakage_gate",
+    "stream_foreachbatch_upsert",
+    "stream_quality_classifier",
+    # (2) the rows the previous window deferred, re-inserted
     "set_union_by_name",
     "sql_pipe_revenue_by_flag",
     "stats_anova_oneway",
@@ -163,7 +60,7 @@ DRIVER_CHECK_PRIORITY: tuple[str, ...] = (
     "text_lexical_mattr",
     "users_churn_labels",
     "win_percent_of_total",
-    # --- (3) the 25 alphabetically-first of the 31 r9-era rows
+    # (3) the queries checked longest ago, alphabetically
     "ab_test_conversion_lift",
     "agg_bitwise_mode",
     "agg_ordered_set_percentiles",
@@ -191,12 +88,11 @@ DRIVER_CHECK_PRIORITY: tuple[str, ...] = (
     "sql_udf_parameterized",
 )
 
-# Names owed to the NEXT round's window (rotated out of the 50 slots by
-# this round's re-checks) — machine-readable so the rotation cannot be
-# silently forgotten (r14 ADVICE): tests assert these are registered,
-# disjoint from the current window, and re-inserted next round.
+# Names owed to the next window (rotated out of the 50 slots by this
+# window's re-checks), kept machine-readable so the rotation cannot be
+# silently forgotten: tests assert these are registered, disjoint from the
+# current window, and re-inserted next time.
 DRIVER_CHECK_DEFERRED: tuple[str, ...] = (
-    # the 6 r9-era tail rows the r17 window's re-checks displaced
     "stats_chi2_type_dow",
     "stream_ewma_user",
     "subquery_exists_projection",
@@ -236,7 +132,9 @@ _PYFILES_SENT: set[str] = set()
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on executors even when the session was
     built elsewhere (no PYTHONPATH propagation): zip the package once and
-    addPyFile it. Required by every mapInPandas/applyInPandas operator."""
+    addPyFile it. Required by every Python-worker operator (``map_rows``,
+    ``applyInPandas``, ...)."""
+    import hashlib
     import os
     import zipfile
 
@@ -244,7 +142,10 @@ def _ship_package(spark: SparkSession) -> None:
     if app_id in _PYFILES_SENT:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join("/tmp", "oe_batch_processing_spark_pyfiles.zip")
+    # one zip per checkout: a shared name would let another checkout's newer
+    # zip stand in for this one's sources on the executors
+    digest = hashlib.md5(pkg_dir.encode()).hexdigest()[:12]
+    zip_path = os.path.join("/tmp", f"oe_batch_processing_spark_pyfiles-{digest}.zip")
     newest_src = max(
         os.path.getmtime(os.path.join(root, f))
         for root, _d, files in os.walk(pkg_dir)

@@ -41,7 +41,7 @@ def get_spark(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Executor Python workers must be able to import this package regardless
-    # of the driver process's cwd (mapInPandas closures pickle functions by
+    # of the launching process's cwd (Python-worker closures pickle functions by
     # module reference). Prepend the repo root to the workers' PYTHONPATH.
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     worker_pythonpath = repo_root + os.pathsep + os.environ.get("PYTHONPATH", "")

@@ -3,8 +3,11 @@
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def run_cli(*args):
@@ -12,7 +15,7 @@ def run_cli(*args):
         [sys.executable, "-m", "oe_batch_processing_spark.cli", *args],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=180,
     )
 

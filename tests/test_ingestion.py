@@ -560,23 +560,6 @@ def test_multimodal_resize_real_for_p5_stubbed_for_webp():
         resize_image(b"RIFF....WEBP", 2)
 
 
-def test_multimodal_thumbnail_plumbing(spark, sf_dir):
-    """The resize stand-in must preserve row count, bound output size, and
-    be deterministic (same stride-sampled bytes on every run)."""
-    from oe_batch_processing_spark.operators.multimodal import (
-        media_frame,
-        thumbnail_frame,
-    )
-    from oe_batch_processing_spark.tables import load_table
-
-    media = media_frame(load_table(spark, sf_dir, "documents"))
-    t1 = thumbnail_frame(media, n_bytes_out=64).orderBy("media_id").collect()
-    assert len(t1) == media.count()
-    assert all(r["thumb_len"] <= 64 and r["thumb_len"] == len(r["thumb"]) for r in t1)
-    t2 = thumbnail_frame(media, n_bytes_out=64).orderBy("media_id").collect()
-    assert [bytes(r["thumb"]) for r in t1] == [bytes(r["thumb"]) for r in t2]
-
-
 def test_multimodal_frame_sample_covers_payload(spark, sf_dir):
     """Sampled frame indices must be stride-aligned and frame lengths must
     tile the payload (last frame may be short)."""

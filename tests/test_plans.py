@@ -427,7 +427,7 @@ def test_dynamic_session_window_plan_single_exchange(spark, sf_dir):
 def test_media_transcode_plans_shuffle_free(spark, sf_dir):
     """The PNG and BMP transcode pipelines claim 'embarrassingly parallel,
     zero shuffles' — hold them to it: no Exchange anywhere in either
-    executed plan (two chained mapInPandas stages over the scan). The
+    executed plan (two chained map_rows stages over the scan). The
     JPEG/GIF pipelines claim exactly ONE Exchange — the documented bounded
     round-robin fan-out of raw block rows (the tiny test parquet yields
     one scan split; a real binaryFile corpus splits per file) — and it

@@ -24,7 +24,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import oe_batch_processing_spark.operators  # noqa: F401
 from oe_batch_processing_spark import registry

@@ -10,9 +10,11 @@ actual Catalyst output next to the claims in SCALE.md / tests/test_plans.py.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import oe_batch_processing_spark.operators  # noqa: F401
 from oe_batch_processing_spark import registry
@@ -94,7 +96,7 @@ def main() -> int:
             out.append("--- key details ---")
             out.extend(d.strip()[:160] for d in details[:12])
         out.append("```")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"wrote PLANS.md ({len(SELECTION)} plans)")
     return 0

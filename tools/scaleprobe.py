@@ -41,7 +41,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import oe_batch_processing_spark.operators  # noqa: F401
 import oe_batch_processing_spark.streaming  # noqa: F401
@@ -50,7 +51,7 @@ from oe_batch_processing_spark.session import get_spark
 from oe_batch_processing_spark.tables import TABLE_NAMES, load_table
 
 BASE_DIR = "/root/testdata/sf0.1"
-DATA_DIR = "/root/repo/scaleprobe_data"
+DATA_DIR = os.path.join(REPO, "scaleprobe_data")
 KEY_OFFSET = 1_000_000_000  # far above any sf0.1 key; BIGINT-safe at r<=99
 
 # Key columns shifted per replica. Shifting BOTH sides of every FK pair by
@@ -344,7 +345,7 @@ def main() -> int:
         import glob as globmod
         import re as remod
 
-        tens = globmod.glob("/root/repo/SCALEPROBE_r*.json")
+        tens = globmod.glob(os.path.join(REPO, "SCALEPROBE_r*.json"))
         if tens:
             newest = max(
                 tens, key=lambda p: int(remod.search(r"r(\d+)", p).group(1))
