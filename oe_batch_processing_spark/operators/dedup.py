@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oe_batch_processing_spark.registry import query
-from oe_batch_processing_spark.session import conf_overrides
 from oe_batch_processing_spark.tables import load_table, persist_once
 
 # --- shared shingling ------------------------------------------------------
@@ -470,9 +469,9 @@ def lsh_dedup(
     to verify against, ruinous as the thing a 100 TB dedup job WRITES. The
     cluster summary is linear in the corpus (one row per cluster, counts
     instead of pair enumerations) and is what downstream keep/drop logic
-    consumes anyway. Cost: one label-propagation pass over the pair graph
-    (O(diameter) rounds of join + groupBy on the pairs — tiny relative to
-    the corpus) after the same LSH candidate generation.
+    consumes anyway. Cost: one connected-components labeling of the pair
+    graph (``graph.components`` — tiny relative to the corpus) after the
+    same LSH candidate generation.
     """
     if emit == "pairs":
         return minhash_lsh_pairs(spark, sf_dir)
@@ -488,78 +487,24 @@ def lsh_dedup(
 def cluster_summaries(pairs: DataFrame) -> DataFrame:
     """One summary row per connected component of any (doc_a, doc_b) pair
     relation: (representative = min member, member_count, sample_members =
-    first {LSH_CLUSTER_SAMPLE_K} ids). The generic clusters half of the
-    emit='pairs'|'clusters' contract — shared by the MinHash-LSH and
-    SimHash cluster queries.
+    first {LSH_CLUSTER_SAMPLE_K} ids). The member-level reference that
+    :func:`rep_cluster_summaries` rewrites; labels come from
+    ``graph.components``."""
+    from oe_batch_processing_spark.operators.graph import components
 
-    CC kernel: LPA (cc_labels). The r15 bench decomposition also tried
-    the star kernel here: it wins on the 10x probe graphs (cosine
-    clusters scaled wall 11.5 -> 7.9 s) but LOSES at the committed SFs —
-    the lsh/simhash cluster graphs are near-cliques that LPA settles in
-    2-3 rounds while the star loop's preamble + fixpoint probes cost
-    ~+1.4 s per row; the committed rows stay LPA and the adjudication
-    lives in BENCH_NOTES (both kernels are checked against the same
-    transitive-closure oracle, so either labeling is hash-exact)."""
-    labels = cc_labels(pairs.select("doc_a", "doc_b"))
-    return labels.groupBy(F.col("lbl").alias("representative")).agg(
+    return _summarize_clusters(components(pairs.select("doc_a", "doc_b")))
+
+
+def _summarize_clusters(members: DataFrame) -> DataFrame:
+    """(representative, member_count, sample_members) per ``lbl`` of a
+    (lbl, doc) frame."""
+    return members.groupBy(F.col("lbl").alias("representative")).agg(
         F.count(F.lit(1)).alias("member_count"),
         F.expr(
             f"array_join(transform(slice(array_sort(collect_list(doc)), 1, "
             f"{LSH_CLUSTER_SAMPLE_K}), x -> CAST(x AS STRING)), ',')"
         ).alias("sample_members"),
     )
-
-
-_CC_DRIVER_EDGES = 100_000  # rep-level edge count below which the component
-# labeling solves driver-side: union-find over <= ~1.6 MB of id pairs in one
-# bounded collect (the limit() probe caps what can ever reach the driver),
-# replacing O(diameter) LPA rounds of real Spark jobs on a graph whose total
-# work is microseconds. Above the cap the distributed cc_labels loop runs
-# unchanged — the 100 TB path. Same size-adaptive pattern as cc_labels'
-# 1-partition/no-AQE small-graph mode, taken to its conclusion.
-
-
-def _cc_labels_adaptive(pairs: DataFrame) -> DataFrame:
-    """(doc, lbl = min id in component) over an undirected pair relation,
-    choosing the kernel by graph size: a driver union-find below
-    ``_CC_DRIVER_EDGES`` edges (one bounded collect, zero iterative jobs),
-    the distributed min-label-propagation loop (:func:`cc_labels`) above.
-    Both kernels produce the identical labeling (min member id per
-    component), checked by the same transitive-closure oracles."""
-    spark = pairs.sparkSession
-    # Materialize the pair relation with a fully-parallel count before
-    # deciding the kernel (a limit().collect() probe would evaluate the
-    # expensive upstream's final stage in sequential CollectLimit waves —
-    # the first wave is ONE task). The collect below reads the cache.
-    pairs = pairs.persist()
-    n_pairs = pairs.count()
-    if n_pairs > _CC_DRIVER_EDGES:
-        return cc_labels(pairs)  # cc_labels re-uses the cache and releases it
-    probe = pairs.collect()
-    pairs.unpersist()
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]  # path halving
-            x = parent[x]
-        return x
-
-    for r in probe:
-        a, b = r[0], r[1]
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # union-by-min: every tree root is the minimum id ever merged
-            # into it, so after the pass find(x) IS the component minimum.
-            if rb < ra:
-                ra, rb = rb, ra
-            parent[rb] = ra
-    rows = [(x, find(x)) for x in parent]
-    return spark.createDataFrame(rows, "doc long, lbl long")
 
 
 def rep_cluster_summaries(
@@ -594,10 +539,12 @@ def rep_cluster_summaries(
     cosine threshold) — their members pair pairwise even when the rep has
     no cross-group pair, so they must appear as components.
     """
+    from oe_batch_processing_spark.operators.graph import components
+
     edges = rep_pairs.select(
         F.col("rep_a").alias("doc_a"), F.col("rep_b").alias("doc_b")
     )
-    labels = _cc_labels_adaptive(edges)
+    labels = components(edges)
     iso = clique_reps.join(
         labels, clique_reps["rep_id"] == labels["doc"], "left_anti"
     ).select(F.col("rep_id").alias("doc"), F.col("rep_id").alias("lbl"))
@@ -605,13 +552,7 @@ def rep_cluster_summaries(
     members = groups.join(all_lbl, groups["rep_id"] == all_lbl["doc"]).select(
         "lbl", F.explode("members").alias("doc")
     )
-    return members.groupBy(F.col("lbl").alias("representative")).agg(
-        F.count(F.lit(1)).alias("member_count"),
-        F.expr(
-            f"array_join(transform(slice(array_sort(collect_list(doc)), 1, "
-            f"{LSH_CLUSTER_SAMPLE_K}), x -> CAST(x AS STRING)), ',')"
-        ).alias("sample_members"),
-    )
+    return _summarize_clusters(members)
 
 
 def trigram_clique_reps(groups: DataFrame) -> DataFrame:
@@ -817,7 +758,7 @@ def dedup_simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the second pair-emitting dedup operator to get the linear-output
     clusters mode (r10 verdict item 6): (representative, member_count,
     sample_members) per connected component of the hamming<=6 pair graph,
-    via the shared :func:`cc_labels` + :func:`cluster_summaries` halves.
+    via the shared :func:`rep_cluster_summaries`.
     The oracle is the recursive transitive-closure CTE wrapped around the
     FULL SimHash pair SQL by :func:`clusters_oracle` — a single wrong
     fingerprint BIT anywhere changes some pair, hence some component,
@@ -889,7 +830,7 @@ def dedup_minhash_lsh_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     shipped band configuration (see dedup_minhash_lsh), so the recursive
     transitive-closure CTE over the exact pairs, grouped per component,
     hash-checks this end to end — candidate generation, verification,
-    label propagation, and the summary aggregation."""
+    component labeling, and the summary aggregation."""
     return lsh_dedup(spark, sf_dir, emit="clusters")
 
 
@@ -899,139 +840,18 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair graph (J >= 0.8), labels = min doc_id per component — the step that
     turns pairwise dedup output into keep/drop decisions.
 
-    Implementation: iterative label propagation (driver loop, converges in
-    O(graph diameter) rounds — 2-3 for near-dup clusters). The oracle is a
-    recursive-SQL transitive closure, so this "iterative algorithm" entry is
-    still exactly differential-checked. Scale: each round is one join +
-    groupBy on the (tiny relative to corpus) pair graph; large-diameter
-    graphs would switch to the large-star/small-star algorithm — same
-    primitive ops.
+    Implementation: ``graph.components`` — a driver union-find on a
+    small pair graph, the large-star/small-star loop above its cap. The
+    oracle is a recursive-SQL transitive closure, so either kernel is
+    exactly differential-checked.
     """
+    from oe_batch_processing_spark.operators.graph import components
+
     pairs = dedup_jaccard_shingles(spark, sf_dir).select("doc_a", "doc_b")
-    labels = cc_labels(pairs)
+    labels = components(pairs)
     return labels.select(
         F.col("doc").alias("doc_id"), F.col("lbl").alias("cluster_id")
     )
-
-
-_CC_SMALL_EDGES = 100_000  # below this, the loop runs 1-partition/no-AQE
-SMALL_GRAPH_CONFS = {  # the small-graph mode of cc_labels and star_labels
-    "spark.sql.adaptive.enabled": "false",
-    "spark.sql.shuffle.partitions": "1",
-}
-_CC_PLAIN_PERSIST_ROUNDS = 6  # small-graph rounds that may keep plain
-# persists before falling back to lineage-truncating checkpoints
-# (4^6 ≈ 4k logical-plan nodes — far below the canonicalization cliff)
-
-
-def cc_labels(pairs: DataFrame) -> DataFrame:
-    """Min-label propagation over an undirected pair relation (doc_a,
-    doc_b) -> (doc, lbl) with lbl = min doc_id in the connected component.
-    Converges in O(graph diameter) driver-loop rounds; each round is one
-    join + groupBy on the pair graph only (tiny relative to the corpus).
-    Shared by dedup_connected_components and the LSH cluster summary.
-
-    Size-adaptive execution (the star-CC recipe, graph.py): a SMALL
-    materialized edge set pays more in per-round AQE re-planning and
-    32-way shuffles than in actual work, so below _CC_SMALL_EDGES the
-    loop drops to one partition with AQE off (``SMALL_GRAPH_CONFS``,
-    scoped by ``conf_overrides``). A large edge set — the 10x/30x probes' 0.25M/2.4M-pair
-    graphs and any real corpus — keeps AQE and the full shuffle width;
-    the plan shape is identical, only the knobs move.
-
-    Lineage discipline is size-adaptive too: LARGE graphs localCheckpoint
-    every round (plain persist leaves ~4^rounds LOGICAL-plan growth —
-    CacheManager substitutes caches only at physical planning — which
-    OOM'd plan canonicalization on the 364k-edge 10x cosine graph in
-    round 12), but each eager checkpoint is a real distributed job worth
-    ~0.1-0.2 s, so SMALL graphs keep plain per-round persists (their
-    near-clique components converge in 2-4 rounds, far from plan
-    explosion) and fall back to checkpointing only past
-    _CC_PLAIN_PERSIST_ROUNDS, where 4^rounds stops being hypothetical."""
-    spark = pairs.sparkSession
-    # Materialize the pair relation ONCE before the symmetric-closure
-    # union: the union's two branches are separate subtrees, so without
-    # the persist+count their tasks race to evaluate the full upstream
-    # pair pipeline TWICE (measured: the r13 containment rewrite made
-    # that pipeline ~3 s at sf0.1 and its clusters consumer paid ~6 s).
-    # The edge count is 2x the pair count — no second action needed.
-    pairs = persist_once(pairs)
-    pinned: list[DataFrame] = []  # plain persists to release before return
-
-    def _pin(df: DataFrame, rnd: int) -> DataFrame:
-        if small_graph and rnd <= _CC_PLAIN_PERSIST_ROUNDS:
-            df = df.persist()
-            pinned.append(df)
-            return df
-        # LAZY checkpoint (r15): the changed-count action each round
-        # materializes it in the same job and truncates lineage exactly
-        # as the eager form did — but the eager form was a SECOND driver
-        # action per round, and on a small chain graph (the cosine pair
-        # relation needs ~15 one-hop rounds) the loop is action-latency
-        # bound, so this halves its real cost.
-        return df.localCheckpoint(eager=False)
-
-    try:
-        n_edges = 2 * pairs.count()
-        edges = pairs.union(
-            pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-        )
-        small_graph = n_edges < _CC_SMALL_EDGES
-        # The eager edges checkpoint runs a real distributed job inside
-        # the overrides. Both checkpoint branches read the materialized
-        # pairs cache (each union branch a cache scan), never rebuild the
-        # upstream pipeline; the pairs cache is released right after, and
-        # again in the finally when anything here fails.
-        with conf_overrides(spark, SMALL_GRAPH_CONFS if small_graph else {}):
-            if small_graph:
-                edges = edges.coalesce(1)
-            # edges becomes a leaf for every round below
-            edges = edges.localCheckpoint(eager=True)
-            pairs.unpersist()
-            labels = _pin(
-                edges.select(F.col("doc_a").alias("doc"))
-                .distinct()
-                .withColumn("lbl", F.col("doc")),
-                0,
-            )
-            rnd = 0
-            while True:
-                rnd += 1
-                neigh_min = (
-                    edges.join(labels, edges["doc_b"] == labels["doc"])
-                    .groupBy(F.col("doc_a").alias("doc"))
-                    .agg(F.min("lbl").alias("nl"))
-                )
-                new_labels = _pin(
-                    labels.join(neigh_min, "doc", "left")
-                    .select(
-                        "doc",
-                        F.least(
-                            F.col("lbl"), F.coalesce(F.col("nl"), F.col("lbl"))
-                        ).alias("lbl"),
-                    ),
-                    rnd,
-                )
-                changed = (
-                    new_labels.alias("n")
-                    .join(labels.alias("o"), "doc")
-                    .filter(F.col("n.lbl") < F.col("o.lbl"))
-                    .count()
-                )
-                labels = new_labels
-                if changed == 0:
-                    break
-            # labels is pinned (checkpoint blocks or a materialized persist the
-            # changed-count above forced) — the caller's downstream plan reads
-            # it instead of replaying the loop; blocks are freed on GC. The
-            # FINAL round's persist must survive the return, so only the
-            # superseded rounds release here.
-            for df in pinned:
-                if df is not labels:
-                    df.unpersist()
-            return labels
-    finally:
-        pairs.unpersist()
 
 
 # --- embedding-cosine near-dedup -------------------------------------------

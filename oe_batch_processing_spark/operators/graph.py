@@ -9,9 +9,9 @@ hash oracle (the usual float PageRank would diverge in final ULPs across
 engines; fixed-point is also exactly how you make the production job
 bit-reproducible across cluster sizes and retry storms).
 
-Companion to ``dedup_connected_components`` (label propagation): together
-they cover the convergence-loop family the DataFrame API is said to be bad
-at — both run as a handful of self-joins and key shuffles per iteration.
+Connected components live here too: ``star_labels`` (large-star/small-star)
+is the distributed loop, and ``components`` picks between it and a driver
+union-find by graph size for every connected-components consumer.
 """
 
 from __future__ import annotations
@@ -19,10 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from oe_batch_processing_spark.operators.dedup import CC_TRANSITIVE_ORACLE, SMALL_GRAPH_CONFS
+from oe_batch_processing_spark.operators.dedup import CC_TRANSITIVE_ORACLE
 from oe_batch_processing_spark.registry import query
 from oe_batch_processing_spark.session import conf_overrides
-from oe_batch_processing_spark.tables import load_table, table_row_count
+from oe_batch_processing_spark.tables import cached, load_table, table_row_count
 
 PR_ITERS = 3
 PR_TOP = 20
@@ -663,12 +663,17 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _STAR_SMALL_EDGES = 100_000  # below this, the loop runs 1-partition/no-AQE
+SMALL_GRAPH_CONFS = {  # the small-graph mode of star_labels
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "1",
+}
+_STAR_MAX_ROUNDS = 20  # log^2 bound; the committed graphs settle in ~3
+_CC_DRIVER_PAIRS = 100_000  # below this, components() labels on the driver
 
 
-@query(
-    "graph_connected_components_star",
-    oracle=None,  # assigned below: shared with dedup_connected_components
-)
+# the oracle is shared with dedup_connected_components: the star algorithm
+# must reproduce the transitive closure
+@query("graph_connected_components_star", oracle=CC_TRANSITIVE_ORACLE)
 def graph_connected_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components via the LARGE-STAR / SMALL-STAR algorithm
     (Kiveris et al., "Connected Components in MapReduce and Beyond") on
@@ -677,12 +682,12 @@ def graph_connected_components_star(spark: SparkSession, sf_dir: str) -> DataFra
     implementations cross-validate: identical (doc_id, cluster_id)
     labeling or the hash fails.
 
-    Why it exists next to the label-propagation version: LPA converges
-    in O(diameter) rounds, which is fine for near-dup clusters (2-3) but
-    fatal for long-chain graphs at 100 TB; large-star/small-star
-    converges in O(log^2 n) rounds REGARDLESS of diameter, each round a
-    pair of ordinary groupBy-min + join stages. This is the production
-    CC kernel; LPA is the low-round-count special case.
+    Why it calls ``star_labels`` directly: ``dedup_connected_components``
+    goes through ``components``, which labels graphs this small on the
+    driver, so this query is the one that runs the distributed loop at
+    every SF. Large-star/small-star converges in O(log^2 n) rounds
+    REGARDLESS of diameter (label propagation needs O(diameter)), each
+    round a pair of ordinary groupBy-min + join stages.
 
     Mechanics per round: large-star connects every neighbor v > u to
     m = min(N(u) ∪ {u}); small-star re-points every neighbor v <= u
@@ -704,30 +709,16 @@ def star_labels(pairs: DataFrame) -> DataFrame:
     """LARGE-STAR / SMALL-STAR connected components over any (doc_a,
     doc_b) pair relation -> (doc, lbl) with lbl = min doc_id in the
     component, one row per node appearing in the relation (roots label
-    themselves). The production CC kernel (O(log^2 n) rounds regardless
-    of diameter) extracted from graph_connected_components_star so the
-    cluster-summary emit mode can share it — the r15 bench decomposition
-    found the cosine pair graph is a diameter-~15 chain graph at bench
-    scale, where the LPA loop pays one checkpointed round PER HOP
-    (~15 rounds of real jobs on a 919-edge graph) while the star loop
-    settles in ~3. dedup_connected_components deliberately keeps the LPA
-    implementation: the two kernels cross-validate against the same
-    transitive-closure oracle."""
+    themselves). The distributed CC kernel: O(log^2 n) rounds regardless
+    of diameter, where label propagation pays one round per hop (the
+    cosine pair graph is a diameter-~15 chain at bench scale; this loop
+    settles it in ~3). Raises ``ValueError`` if the edge set has not
+    settled after ``_STAR_MAX_ROUNDS`` rounds."""
     spark = pairs.sparkSession
     # Materialize the pair relation ONCE before the symmetric unions:
     # without this the union branches race to evaluate the (expensive)
-    # upstream pair pipeline repeatedly (the cc_labels recipe). The
-    # count is the materializing action; released before return.
-    from oe_batch_processing_spark.tables import persist_once
-
-    # Ownership check (r16 ADVICE): persist_once returns an ALREADY-cached
-    # frame untouched when another operator persisted the same plan — in
-    # that case the unpersist below would evict a cache entry the caller
-    # still relies on mid-sweep (recomputation cost, not wrongness). Only
-    # release the cache this call actually created.
-    lvl = pairs.storageLevel
-    owns_cache = not (lvl.useMemory or lvl.useDisk)
-    pairs = persist_once(pairs)
+    # upstream pair pipeline repeatedly. The count is the materializing
+    # action; released before return.
     # localCheckpoint: TRUNCATE lineage, not just cache it. Every round
     # references the previous round's frame ~4 times, so with plain
     # persist the LOGICAL plan (which CacheManager substitutes only at
@@ -781,7 +772,7 @@ def star_labels(pairs: DataFrame) -> DataFrame:
 
     # the pairs cache is released on every exit path, the eager edges
     # checkpoint included
-    try:
+    with cached(pairs) as pairs:
         # Size-adaptive execution, decided BEFORE the edges checkpoint (r17):
         # ``edges`` is a row-preserving projection of ``pairs``, so
         # |edges| == |pairs| and the cache-fill count doubles as the
@@ -819,27 +810,61 @@ def star_labels(pairs: DataFrame) -> DataFrame:
 
             cur = edges
             prev_sum = None
-            for _round in range(20):  # log^2 bound; settles in ~3
+            for _round in range(_STAR_MAX_ROUNDS):
                 cur = _one_round(cur)
                 new_sum = _checksum(cur)
                 if new_sum == prev_sum:
                     break
                 prev_sum = new_sum
+            else:
+                raise ValueError(
+                    f"star connected components did not converge in "
+                    f"{_STAR_MAX_ROUNDS} rounds; raise _STAR_MAX_ROUNDS"
+                )
             # final star: every edge points node -> component root (= component
             # min); roots label themselves; isolated-in-star nodes keep identity
             labels = cur.select(F.col("u").alias("doc"), F.col("v").alias("lbl"))
-    finally:
-        if owns_cache:
-            pairs.unpersist()
     return all_nodes.join(labels, "doc", "left").select(
         "doc", F.coalesce(F.col("lbl"), F.col("doc")).alias("lbl")
     )
 
 
-# shared oracle: the star algorithm must reproduce the transitive closure
-from oe_batch_processing_spark import registry as _registry  # noqa: E402
+def components(pairs: DataFrame) -> DataFrame:
+    """(doc, lbl = min id in component) over an undirected (doc_a, doc_b)
+    pair relation, one row per node in the relation. The kernel is picked
+    by size: below ``_CC_DRIVER_PAIRS`` pairs, a union-find over one
+    bounded collect (no iterative Spark jobs on a graph whose total work
+    is microseconds); above it, the distributed :func:`star_labels` loop.
+    Both label each node with its component minimum, so the choice never
+    changes the output.
 
-_registry.ORACLE["graph_connected_components_star"] = CC_TRANSITIVE_ORACLE
+    ``pairs`` is persisted only when it is not already cached, and only
+    that cache is released: a frame the caller cached stays cached."""
+    # a fully parallel count fills the cache; a limit().collect() probe
+    # would run the upstream's last stage in sequential CollectLimit waves
+    with cached(pairs) as pairs:
+        if pairs.count() >= _CC_DRIVER_PAIRS:
+            return star_labels(pairs)
+        probe = pairs.collect()
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for a, b in probe:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # union-by-min: every root is the minimum id merged into it,
+            # so after the pass find(x) IS the component minimum
+            parent[max(ra, rb)] = min(ra, rb)
+    return pairs.sparkSession.createDataFrame(
+        [(x, find(x)) for x in parent], "doc long, lbl long"
+    )
 
 
 # --- k-core decomposition by synchronous peeling ----------------------------

@@ -675,7 +675,7 @@ def _bpe_train_vocab(
     the caller owns; the driver path returns an unpersisted local relation
     (the caller's unpersist is a no-op there).
 
-    Size-adaptive execution (r17, the ``_cc_labels_adaptive`` recipe): the
+    Size-adaptive execution (r17, the ``graph.components`` recipe): the
     loop's input is the VOCABULARY table — Zipf-bounded, orders of
     magnitude smaller than the corpus — and each distributed round costs a
     fixed explode + aggregate + 1-row collect regardless of how few rows

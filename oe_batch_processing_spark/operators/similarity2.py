@@ -1282,9 +1282,9 @@ def semdedup_clusters(
     # can still precede one of the smaller-rep class) plus the self edge
     # when the class's self-cosine — computed with the SAME pair
     # expression, not assumed to be 1.0 — clears the threshold.
-    # Materialized ONCE before the union (the cc_labels lesson: the two
-    # union branches are separate subtrees and would race to evaluate the
-    # rep pair pipeline twice).
+    # Materialized ONCE before the union: the two union branches are
+    # separate subtrees and would race to evaluate the rep pair pipeline
+    # twice.
     sym = persist_once(qualifying.select("cell_id", "id_a", "id_b"))
     sym.count()  # fill the cache before the branches fork (collapse-only
     # path — never reached at committed SFs, so no extra committed job)

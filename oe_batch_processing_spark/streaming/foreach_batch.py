@@ -163,7 +163,8 @@ from oe_batch_processing_spark import registry as _registry  # noqa: E402
     "stream_split_leakage_gate",
     # SHARES the batch audit's oracle verbatim: the incremental gate must
     # produce the identical report (same cross-validating-pair pattern as
-    # star-CC/LPA sharing one transitive-closure oracle).
+    # the two connected-components queries sharing one transitive-closure
+    # oracle).
     oracle=_registry.ORACLE["pipeline_split_leakage_report"],
 )
 def stream_split_leakage_gate(spark: SparkSession, sf_dir: str) -> DataFrame:

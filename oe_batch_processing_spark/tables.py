@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import functools
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -122,3 +124,20 @@ def persist_once(df: DataFrame) -> DataFrame:
     if lvl.useMemory or lvl.useDisk:
         return df
     return df.persist()
+
+
+@contextmanager
+def cached(df: DataFrame) -> Iterator[DataFrame]:
+    """Keep ``df`` cached for the ``with`` body; on exit release the cache
+    only if this call created it. When another operator (or the caller)
+    already cached the same plan, that cache is left in place: evicting it
+    would make its owner recompute the plan."""
+    lvl = df.storageLevel
+    owned = not (lvl.useMemory or lvl.useDisk)
+    if owned:
+        df = df.persist()
+    try:
+        yield df
+    finally:
+        if owned:
+            df.unpersist()

@@ -1,21 +1,27 @@
-"""Equivalence tests for the r16 rep-level cluster-summary rewrite.
+"""Equivalence tests for the connected-components kernel and the rep-level
+cluster-summary rewrite.
 
-``rep_cluster_summaries`` claims: CC over the rep pair graph + one
-membership expansion is frame-identical to ``cluster_summaries`` over the
-fully expanded member-level pair relation, and the size-adaptive driver
-union-find kernel labels exactly like the distributed LPA loop. Both are
-exercised on crafted graphs covering the corners the proof leans on:
-isolated within-only cliques, cross-linked groups, gate-failing groups,
-singleton groups, and chains that merge under transitivity.
+``graph.components`` labels small graphs with a driver union-find and
+large ones with the distributed large-star/small-star loop; both paths
+must give every node its component minimum. ``rep_cluster_summaries``
+claims: CC over the rep pair graph + one membership expansion is
+frame-identical to ``cluster_summaries`` over the fully expanded
+member-level pair relation. Both are exercised on crafted graphs covering
+the corners the proofs lean on: isolated within-only cliques,
+cross-linked groups, gate-failing groups, singleton groups, chains that
+merge under transitivity, a long chain with shuffled ids and an empty
+relation.
 """
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
+from oe_batch_processing_spark.operators import graph
 from oe_batch_processing_spark.operators.dedup import (
-    _cc_labels_adaptive,
-    cc_labels,
     cluster_summaries,
     content_rep_groups,
     expand_rep_pairs,
@@ -28,23 +34,60 @@ def _sorted_rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_driver_union_find_matches_lpa(spark):
+def _min_labels(edges):
+    """Reference labeling: each node's component minimum, by DFS."""
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    labels = {}
+    for start in adj:
+        if start in labels:
+            continue
+        comp, stack = {start}, [start]
+        while stack:
+            for nb in adj[stack.pop()] - comp:
+                comp.add(nb)
+                stack.append(nb)
+        labels.update((x, min(comp)) for x in comp)
+    return sorted(labels.items())
+
+
+def test_components_driver_and_star_paths_agree(spark, monkeypatch):
     # chain 1-2-3-4, clique 10-11-12, isolated edge 20-21, plus a merge
     # of two components through a late edge (7-1, 7-4)
-    pairs = spark.createDataFrame(
-        [
-            (1, 2), (2, 3), (3, 4),
-            (10, 11), (11, 12), (10, 12),
-            (20, 21),
-            (7, 4), (7, 1),
-        ],
-        "doc_a long, doc_b long",
-    )
-    got = _sorted_rows(_cc_labels_adaptive(pairs))
-    want = _sorted_rows(cc_labels(pairs))
-    assert got == want
-    # min-label contract: every label is the component minimum
-    assert (1, 1) in got and (7, 1) in got and (12, 10) in got
+    crafted = [
+        (1, 2), (2, 3), (3, 4),
+        (10, 11), (11, 12), (10, 12),
+        (20, 21),
+        (7, 4), (7, 1),
+    ]
+    # a 200-node chain with shuffled ids: one round per hop for label
+    # propagation, a handful for the star loop
+    ids = list(range(1, 201))
+    random.Random(16).shuffle(ids)
+    chain = list(zip(ids, ids[1:]))
+    for edges in (crafted, chain, []):
+        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        driver = _sorted_rows(graph.components(pairs))
+        with monkeypatch.context() as m:
+            m.setattr(graph, "_CC_DRIVER_PAIRS", 0)
+            star = _sorted_rows(graph.components(pairs))
+        assert driver == star == _min_labels(edges)
+
+
+@pytest.mark.parametrize("cap", [100_000, 0], ids=["driver", "star"])
+def test_components_releases_only_its_own_cache(spark, monkeypatch, cap):
+    monkeypatch.setattr(graph, "_CC_DRIVER_PAIRS", cap)
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long")
+    graph.components(pairs).collect()
+    assert not pairs.storageLevel.useMemory  # its own cache is released
+    pairs.persist()
+    try:
+        graph.components(pairs).collect()
+        assert pairs.storageLevel.useMemory  # the caller's cache survives
+    finally:
+        pairs.unpersist()
 
 
 def test_rep_cluster_summaries_matches_expanded(spark):

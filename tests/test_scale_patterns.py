@@ -407,16 +407,14 @@ def test_ann_fixed_qps_hook_engages_and_restores(spark, sf_dir):
     assert again == base  # restored: identical plan again
 
 
-@pytest.mark.parametrize("kernel", ["star_labels", "cc_labels"])
+@pytest.mark.parametrize("kernel", ["star_labels"])
 def test_star_labels_restores_session_when_edges_checkpoint_fails(spark, monkeypatch, kernel):
-    """Both connected-components kernels turn AQE off and narrow the shuffle
-    before their eager edges checkpoint; a failure there must leave both
-    confs and the pairs cache as they were."""
-    from oe_batch_processing_spark.operators import dedup, graph
+    """The star loop turns AQE off and narrows the shuffle before its eager
+    edges checkpoint; a failure there must leave both confs and the pairs
+    cache as they were."""
+    from oe_batch_processing_spark.operators import graph
 
-    labels = {"star_labels": graph.star_labels, "cc_labels": dedup.cc_labels}[kernel]
-    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-    before = {k: spark.conf.get(k) for k in keys}
+    before = {k: spark.conf.get(k) for k in graph.SMALL_GRAPH_CONFS}
     pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long")
 
     def failing_checkpoint(self, eager=True, storageLevel=None):
@@ -424,8 +422,24 @@ def test_star_labels_restores_session_when_edges_checkpoint_fails(spark, monkeyp
 
     monkeypatch.setattr(type(pairs), "localCheckpoint", failing_checkpoint)
     with pytest.raises(RuntimeError, match="injected checkpoint failure"):
-        labels(pairs)
-    assert {k: spark.conf.get(k) for k in keys} == before
+        getattr(graph, kernel)(pairs)
+    assert {k: spark.conf.get(k) for k in graph.SMALL_GRAPH_CONFS} == before
+    assert not pairs.storageLevel.useMemory
+
+
+def test_star_labels_raises_when_rounds_run_out(spark, monkeypatch):
+    """A star loop that ends without its edge-set checksum repeating must
+    raise, not return a partial labeling, and still restore the session."""
+    from oe_batch_processing_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_STAR_MAX_ROUNDS", 1)
+    before = {k: spark.conf.get(k) for k in graph.SMALL_GRAPH_CONFS}
+    pairs = spark.createDataFrame(
+        [(4, 3), (3, 2), (2, 1), (1, 5)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(ValueError, match="did not converge in 1 rounds"):
+        graph.star_labels(pairs)
+    assert {k: spark.conf.get(k) for k in graph.SMALL_GRAPH_CONFS} == before
     assert not pairs.storageLevel.useMemory
 
 
